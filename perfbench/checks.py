@@ -45,11 +45,10 @@ def sequential_detector():
 
 
 def check_rollup(
-    spark, input_dir: str, out_dir: str, seed: int, hot: int, perturb: str | None = None
+    spark, input_dir: str, out_dir: str, seed: int, perturb: str | None = None
 ) -> tuple[list[str], int]:
     """Returns (problems, raw points). Checks one job's committed outputs:
-    change points of a seeded sample of series (every hot conversation
-    included) against the sequential detector, every Gorilla blob against the
+    change points of a seeded sample of series against the sequential detector, every Gorilla blob against the
     series points, and point conservation series -> segments -> 1m -> 1h -> 1d
     with the retention horizons."""
     from pysatl_cpd_spark.operators.gorilla import decode_batch
@@ -87,11 +86,10 @@ def check_rollup(
     if bad_blobs:
         problems.append(f"{bad_blobs} of {len(segs)} blobs differ from the series")
 
-    # change points of a seeded sample, hot conversations included
+    # change points of a seeded sample
     ids = sorted(by_series)
     rng = np.random.default_rng([seed, 11])
     sample = set(rng.choice(ids, size=min(SAMPLE_SERIES, len(ids)), replace=False).tolist())
-    sample |= {f"conv{i:08d}" for i in range(hot)} & set(ids)
     starts = segs.groupby("series_id")["t_min"].apply(lambda s: sorted(s.tolist())[1:])
     det = sequential_detector()
     for sid in sorted(sample):

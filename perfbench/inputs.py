@@ -3,13 +3,18 @@
 Rollup workloads read a plain (not day-partitioned) parquet transcripts
 table made by ``sources.transcripts.synthesize_transcripts``. The query mix
 reads a small star schema plus events, documents and embeddings, generated
-here with numpy in the shape and value domains of the engine's test tables,
-so every query has non-empty work and its DuckDB twin can read the same
-files.
+here with numpy. Every distribution parameter below was measured on the
+engine's seed-42 test tables at sf0.001, sf0.01 and sf0.1 (perfbench/README.md
+lists the measurements). Every query has non-empty work, and its DuckDB twin
+reads the same files.
+
+The cache key holds a hash of the generator code, so a change to this file or
+to ``sources/transcripts.py`` makes new inputs rather than reusing old ones.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import time
@@ -22,22 +27,10 @@ import pyarrow.parquet as pq
 # tests; it is never used for reported numbers.
 SIZES = {
     "rollup_uniform": {"n_conversations": 750, "avg_turns": 400},
-    "rollup_skewed": {
-        "n_conversations": 5000,
-        "avg_turns": 40,
-        "hot_conversations": 4,
-        "hot_turns": 25_000,
-    },
     "query_mix": {"scale": 0.01},
 }
 SMOKE_SIZES = {
     "rollup_uniform": {"n_conversations": 40, "avg_turns": 400},
-    "rollup_skewed": {
-        "n_conversations": 200,
-        "avg_turns": 40,
-        "hot_conversations": 2,
-        "hot_turns": 2_000,
-    },
     "query_mix": {"scale": 0.002},
 }
 
@@ -48,9 +41,24 @@ def sizes_for(workload: str, smoke: bool) -> dict:
     return dict((SMOKE_SIZES if smoke else SIZES)[workload])
 
 
+HERE = os.path.dirname(os.path.abspath(__file__))
+GENERATOR_SOURCES = (
+    os.path.join(HERE, "inputs.py"),
+    os.path.join(os.path.dirname(HERE), "pysatl_cpd_spark", "sources", "transcripts.py"),
+)
+
+
+def generator_hash() -> str:
+    h = hashlib.sha256()
+    for path in GENERATOR_SOURCES:
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:12]
+
+
 def _key(workload: str, seed: int, sizes: dict) -> str:
     tag = "-".join(f"{k}{v}" for k, v in sorted(sizes.items()))
-    return f"{workload}-seed{seed}-{tag}"
+    return f"{workload}-seed{seed}-{tag}-{generator_hash()}"
 
 
 def prepare(spark, cache_root: str, workload: str, seed: int, sizes: dict) -> tuple[str, float]:
@@ -90,10 +98,11 @@ _SEGMENTS = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHI
 _PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
 _EVENT_TYPES = np.array(["click", "error", "purchase", "signup", "view"])
 _LANGS = np.array(["en", "de", "es", "fr", "zh"])
+# the 30 words of the test documents; a near-duplicate appends "dup"
 _WORDS = np.array(
-    "a agg batch big column customer data dup fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream table "
-    "the value vector window".split()
+    "a agg batch big column customer data fast filter group hash join key line "
+    "merge order part query row scan slow small sort spark stream table the "
+    "value vector window".split()
 )
 
 
@@ -103,16 +112,15 @@ def _days(rng, lo: str, hi: str, n: int) -> np.ndarray:
 
 
 def _documents(rng, n: int) -> dict:
-    texts: list[str] = []
-    for i in range(n):
-        if i > 10 and rng.random() < 0.1:
-            # near-duplicate of an earlier document: a few words replaced
-            words = texts[int(rng.integers(0, i))].split()
-            for j in rng.integers(0, len(words), max(1, len(words) // 12)):
-                words[j] = str(_WORDS[rng.integers(0, len(_WORDS))])
-        else:
-            words = list(_WORDS[rng.integers(0, len(_WORDS), int(rng.integers(10, 101)))])
-        texts.append(" ".join(words))
+    """Uniform words, 10-99 a document. One document in 20 is replaced by a
+    copy of a random other document with " dup" appended. That is the test
+    tables' only near-duplicate kind: 243 of their 256 sf0.1 pairs with
+    shingle Jaccard >= 0.6, the rest being two copies of one document or a
+    copy of a copy."""
+    texts = [" ".join(_WORDS[rng.integers(0, len(_WORDS), int(k))]) for k in rng.integers(10, 100, n)]
+    for i in rng.choice(n, n // 20, replace=False):
+        j = (int(i) + int(rng.integers(1, n))) % n
+        texts[i] = texts[j] + " dup"
     lang = np.where(rng.random(n) < 0.4, "en", _LANGS[rng.integers(1, 5, n)])
     return {
         "doc_id": np.arange(n, dtype=np.int64),
@@ -123,21 +131,26 @@ def _documents(rng, n: int) -> dict:
     }
 
 
-def _embeddings(rng, n: int, dim: int = 64, clusters: int = 10) -> pa.Table:
-    centers = rng.normal(size=(clusters, dim))
-    label = rng.integers(0, clusters, n).astype(np.int32)
-    vecs = centers[label] + rng.normal(scale=1.2, size=(n, dim))
+def _embeddings(rng, n: int, dim: int = 64, labels: int = 10) -> pa.Table:
+    """Isotropic unit vectors with labels drawn independently of them: in the
+    test tables a vector's nearest neighbour shares its label 1 time in 10."""
+    vecs = rng.normal(size=(n, dim))
     vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)).astype(np.float32)
     emb = pa.ListArray.from_arrays(
         pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32)), pa.array(vecs.ravel())
     )
     return pa.table(
-        {"vec_id": np.arange(n, dtype=np.int64), "embedding": emb, "label": label}
+        {
+            "vec_id": np.arange(n, dtype=np.int64),
+            "embedding": emb,
+            "label": rng.integers(0, labels, n).astype(np.int32),
+        }
     )
 
 
 def query_tables(seed: int, scale: float) -> dict[str, pa.Table]:
-    """Seeded tables; `scale` 0.1 matches the engine's sf0.1 test-table sizes."""
+    """Seeded tables with the row counts and key ranges of the engine's
+    test tables at the same scale factor."""
     rng = np.random.default_rng([seed, 7])
     n_cust, n_ord = int(150_000 * scale), int(1_500_000 * scale)
     n_li, n_ev = int(6_000_000 * scale), int(1_000_000 * scale)
@@ -160,8 +173,8 @@ def query_tables(seed: int, scale: float) -> dict[str, pa.Table]:
     }
     lineitem = {
         "l_orderkey": rng.integers(0, n_ord, n_li).astype(np.int64),
-        "l_partkey": rng.integers(0, 20_000, n_li).astype(np.int64),
-        "l_suppkey": rng.integers(0, 1_000, n_li).astype(np.int64),
+        "l_partkey": rng.integers(0, max(int(200_000 * scale), 1), n_li).astype(np.int64),
+        "l_suppkey": rng.integers(0, max(int(10_000 * scale), 1), n_li).astype(np.int64),
         "l_linenumber": rng.integers(1, 8, n_li).astype(np.int32),
         "l_quantity": rng.integers(1, 51, n_li).astype(np.float64),
         "l_extendedprice": money(900.0, 105_000.0, n_li),
@@ -185,8 +198,8 @@ def query_tables(seed: int, scale: float) -> dict[str, pa.Table]:
         "orders": pa.table(orders),
         "lineitem": pa.table(lineitem),
         "events": pa.table(events),
-        "documents": pa.table(_documents(rng, max(int(50_000 * scale), 50))),
-        "embeddings": _embeddings(rng, max(int(20_000 * scale), 40)),
+        "documents": pa.table(_documents(rng, max(int(50_000 * scale), 500))),
+        "embeddings": _embeddings(rng, max(int(20_000 * scale), 500)),
     }
 
 

@@ -89,18 +89,12 @@ class Materializer:
         return counts
 
 
-def _timed(actions: list[float], fn):
-    t0 = time.perf_counter()
-    out = fn()
-    actions.append(time.perf_counter() - t0)
-    return out
-
-
 def rollup_job(spark, input_dir: str, out_dir: str, tracer) -> tuple[list[float], dict[str, int]]:
     """Read -> project -> repartition -> turn-rate series -> lockstep BOCPD ->
     Gorilla segments -> write segments -> 1m/1h/1d rollup (1m base table) ->
-    retention -> write the 1h and 1d tiers. Returns each Spark action's wall
-    seconds, and the row count of each layer output counted while tracing."""
+    retention -> write the 1h and 1d tiers. Returns the wall seconds of the
+    two tier writes, which are the job's queries over its stored 1m table,
+    and the row count of each layer output counted while tracing."""
     from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.rollup import (
         DEFAULT_TIERS,
@@ -126,15 +120,12 @@ def rollup_job(spark, input_dir: str, out_dir: str, tracer) -> tuple[list[float]
         with span("encode"):
             segments = keep("encode", encode_segments_colocated(series, cps))
         with span("sink.segments"):
-            _timed(actions, lambda: segments.write.parquet(os.path.join(out_dir, "segments")))
+            segments.write.parquet(os.path.join(out_dir, "segments"))
         with span("rollup.1m"):
-            tiers = _timed(
-                actions,
-                lambda: rollup_all_tiers(
-                    tr.select("conv_id", "ts", F.lit(1.0).alias("value")),
-                    ["conv_id"],
-                    base_table_path=os.path.join(out_dir, "tier_1m"),
-                ),
+            tiers = rollup_all_tiers(
+                tr.select("conv_id", "ts", F.lit(1.0).alias("value")),
+                ["conv_id"],
+                base_table_path=os.path.join(out_dir, "tier_1m"),
             )
         by_name = {t.name: t for t in DEFAULT_TIERS}
         kept = {}
@@ -149,7 +140,9 @@ def rollup_job(spark, input_dir: str, out_dir: str, tracer) -> tuple[list[float]
         with span("sink.tiers"):
             for name in ("1h", "1d"):
                 path = os.path.join(out_dir, f"tier_{name}")
-                _timed(actions, lambda: kept[name].write.parquet(path))
+                t0 = time.perf_counter()
+                kept[name].write.parquet(path)
+                actions.append(time.perf_counter() - t0)
     return actions, keep.release()
 
 
