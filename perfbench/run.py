@@ -25,7 +25,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 WORKLOADS = ("rollup_uniform", "query_mix")
-WARM_SETUPS = 3
+WARM_SETUPS = 2
 sys.path.insert(0, HERE)
 
 
