@@ -48,9 +48,10 @@ def check_rollup(
     spark, input_dir: str, out_dir: str, seed: int, perturb: str | None = None
 ) -> tuple[list[str], int]:
     """Returns (problems, raw points). Checks one job's committed outputs:
-    change points of a seeded sample of series against the sequential detector, every Gorilla blob against the
-    series points, and point conservation series -> segments -> 1m -> 1h -> 1d
-    with the retention horizons."""
+    change points of a seeded sample of series against the sequential
+    detector, every Gorilla blob against the series points, and point
+    conservation series -> segments -> 1m -> 1h -> 1d with the retention
+    horizons."""
     from pysatl_cpd_spark.operators.gorilla import decode_batch
     from pysatl_cpd_spark.operators.series import turn_rate_series
 

@@ -1,6 +1,6 @@
-"""Seeded benchmark inputs, generated once per (workload, seed) and cached.
+"""Seeded benchmark inputs, generated once per (workload, seed, sizes) and cached.
 
-Rollup workloads read a plain (not day-partitioned) parquet transcripts
+The rollup workload reads a plain (not day-partitioned) parquet transcripts
 table made by ``sources.transcripts.synthesize_transcripts``. The query mix
 reads a small star schema plus events, documents and embeddings, generated
 here with numpy. Every distribution parameter below was measured on the

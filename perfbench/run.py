@@ -165,7 +165,7 @@ def main(argv=None) -> int:
     heap = heap_mb()
     isolate(run_dir, heap)
     sizes = inputs.sizes_for(args.workload, args.smoke)
-    rollup = args.workload.startswith("rollup")
+    rollup = args.workload == "rollup_uniform"
 
     # The cold set-up launches the JVM; setup_s is the median of the warm
     # set-ups after it, each a fresh session in the running JVM.
@@ -268,8 +268,8 @@ def main(argv=None) -> int:
         "numpy": numpy.__version__, "cores": cores, "driver_heap_mb": heap,
         "loop": "closed, 1 client", "sizes": sizes, "points": points,
         "datagen_s": datagen_s, "cold_setup_s": cold_setup_s, "setup_samples_s": setup_times,
-        "warmup_op_s": warm_s,
-        "op_samples_s": op_times, "action_samples_s": action_times, "problems": problems,
+        "warmup_op_s": warm_s, "op_samples_s": op_times, "action_samples_s": action_times,
+        "problems": problems,
     }
     stop_jvm(spark)
     shutil.rmtree(run_dir, ignore_errors=True)
