@@ -10,12 +10,15 @@ lifetime (the shared session fixture is local[]).
 """
 
 import json
+import os
 import subprocess
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# run with cwd=ROOT, so "-c" puts this checkout first on the child's sys.path
 CHILD = """
 import json, sys
-sys.path.insert(0, "/root/repo")
 from pysatl_cpd_spark.session import get_spark
 from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
 from pysatl_cpd_spark.operators.cpd import detect_online_lockstep
@@ -45,7 +48,7 @@ def _run(master: str) -> list:
         capture_output=True,
         text=True,
         check=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=420,
     )
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT:")][-1]
