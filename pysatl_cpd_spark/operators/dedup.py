@@ -468,20 +468,16 @@ def minhash_signatures(
 ) -> DataFrame:
     """MinHash signature per doc: h_i(x) = (a_i * x + b_i) mod p over the
     portable 60-bit shingle hash; signature = array of per-function minima.
-    One shuffle (groupBy doc)."""
+    One shuffle (groupBy doc). The array of minima is parsed from one SQL
+    string: built as Column objects it costs thousands of Python-to-JVM calls
+    per query (about 1 s) before any job runs."""
     import random
 
     rnd = random.Random(seed)
     coeffs = [(rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE)) for _ in range(num_hashes)]
     hashed = shingled.select("doc_id", (token_hash64(F.col("shingle")) % _MERSENNE).alias("h"))
-    mins = [
-        F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_MERSENNE)).alias(f"m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    sig = hashed.groupBy("doc_id").agg(*mins)
-    return sig.select(
-        "doc_id", F.array(*[f"m{i}" for i in range(num_hashes)]).alias("signature")
-    )
+    mins = ", ".join(f"min((h * {a} + {b}) % {_MERSENNE})" for a, b in coeffs)
+    return hashed.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("signature"))
 
 
 def minhash_lsh_candidates(
@@ -540,12 +536,15 @@ def minhash_lsh_candidates(
     # emit each pair from its lowest agreeing band only (both signatures are
     # in-row, so band agreement is a cheap array compare) — kills the
     # distinct shuffle over up-to-`bands`-fold duplicated candidates
-    min_band = F.lit(bands)
-    for i in reversed(range(bands)):
-        band_eq = F.slice(F.col("a.signature"), i * rows_per_band + 1, rows_per_band) == F.slice(
-            F.col("b.signature"), i * rows_per_band + 1, rows_per_band
+    min_band = F.expr(
+        "CASE "
+        + " ".join(
+            f"WHEN slice(a.signature, {i * rows_per_band + 1}, {rows_per_band})"
+            f" = slice(b.signature, {i * rows_per_band + 1}, {rows_per_band}) THEN {i}"
+            for i in range(bands)
         )
-        min_band = F.when(band_eq, F.lit(i)).otherwise(min_band)
+        + f" ELSE {bands} END"
+    )
     pairs = (
         a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket")))
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))

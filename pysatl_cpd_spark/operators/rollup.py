@@ -17,6 +17,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from pysatl_cpd_spark.sources.io import read_parquet
+
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
 
 
@@ -86,7 +88,7 @@ def rollup_all_tiers(
     minute = rollup_tier(df, "1m", key_cols, ts_col, value_col)
     if base_table_path is not None:
         minute.write.mode("overwrite").parquet(base_table_path)
-        minute = df.sparkSession.read.parquet(base_table_path)
+        minute = read_parquet(df.sparkSession, base_table_path, schema=minute.schema)
     elif persist_base:
         minute = minute.cache()
     out["1m"] = minute

@@ -26,6 +26,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pysatl_cpd_spark.sources.io import read_parquet
+
 
 def _fingerprint(obj) -> str:
     import hashlib
@@ -65,10 +67,10 @@ class CheckpointedJob:
         over the same files — Spark recovers bucket ids from the file names,
         so the downstream groupBy stays shuffle-free across restarts."""
         if not bucketing:
-            return self.spark.read.parquet(data_path)
+            return read_parquet(self.spark, data_path)
         table = self.table_name(name)
         if not self.spark.catalog.tableExists(table):
-            schema = self.spark.read.parquet(data_path).schema
+            schema = read_parquet(self.spark, data_path).schema
             cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
             sort = ", ".join(f"`{c}`" for c in bucketing["sort_cols"])
             self.spark.sql(
@@ -131,7 +133,7 @@ class CheckpointedJob:
             )
         else:
             df.write.mode("overwrite").parquet(data_path)
-            out = self.spark.read.parquet(data_path)
+            out = read_parquet(self.spark, data_path, schema=df.schema)
         seconds = time.perf_counter() - t0
 
         n_rows = out.count()

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pysatl_cpd_spark.sources.io import read_parquet
+
 # The documented cluster configuration for the Iceberg branch (public Iceberg
 # runtime artifact + a Hadoop-warehouse catalog; any Iceberg catalog works).
 ICEBERG_SUBMIT_CONF = [
@@ -77,6 +79,8 @@ def load_table(spark: SparkSession, ref: str) -> DataFrame:
         return spark.read.option("header", "true").option(
             "inferSchema", "true"
         ).csv(target)
+    if kind == "parquet":
+        return read_parquet(spark, target)
     return spark.read.format(kind).load(target)
 
 
@@ -159,7 +163,7 @@ def write_bucketed_series_coded(
         dim_path = path + "_dim"
     if dim_path is not None:
         dim.write.mode(mode).parquet(dim_path)
-        dim_out = spark.read.parquet(dim_path)
+        dim_out = read_parquet(spark, dim_path, schema=dim.schema)
     else:
         spark.sql(f"DROP TABLE IF EXISTS {table_name}_dim")
         dim.write.mode(mode).saveAsTable(f"{table_name}_dim")

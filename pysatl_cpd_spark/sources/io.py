@@ -1,7 +1,8 @@
-"""Labeled-dataset IO (parity: reference labeled_data.py:78-104 and
-generator/saver.py:42-81).
+"""Parquet opens and labeled-dataset IO (parity: reference
+labeled_data.py:78-104 and generator/saver.py:42-81).
 
-The reference persists generated datasets as per-name directories holding
+``read_parquet`` is the package's one way to open a parquet table. The
+reference persists generated datasets as per-name directories holding
 ``sample.csv`` (values; univariate = one column, multivariate = comma-joined
 vector per line) + ``changepoints.csv`` (one index per line). This module
 reads/writes the same layout through Spark (schema declared, no inference
@@ -11,8 +12,112 @@ games) and offers the engine-native parquet form as the default sink.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+# session settings that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
+class _SchemaLRU:
+    """Bounded map from (local path, file stamp, inference settings) to the
+    schema Spark inferred for it; least recently used entry goes first."""
+
+    def __init__(self, size: int) -> None:
+        self.size = size
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[tuple, StructType] = OrderedDict()
+
+    def get(self, key: tuple) -> StructType | None:
+        with self._lock:
+            schema = self._entries.get(key)
+            if schema is not None:
+                self._entries.move_to_end(key)
+            return schema
+
+    def put(self, key: tuple, schema: StructType) -> None:
+        with self._lock:
+            self._entries[key] = schema
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.size:
+                self._entries.popitem(last=False)
+
+
+_SCHEMAS = _SchemaLRU(64)
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """Absolute local path Spark resolves ``path`` to, or None when the path
+    names another filesystem (a URI scheme, or a non-local default FS)."""
+    parts = urlsplit(path)
+    if parts.scheme == "file":
+        return os.path.abspath(parts.path)
+    if parts.scheme:
+        return None
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    if default_fs and urlsplit(default_fs).scheme != "file":
+        return None
+    return os.path.abspath(path)
+
+
+def _file_stamp(local: str) -> tuple:
+    """(size, mtime_ns, inode) of a file, or of every file under a directory;
+    raises OSError when the path does not exist."""
+    st = os.stat(local)
+    if not os.path.isdir(local):
+        return (st.st_size, st.st_mtime_ns, st.st_ino)
+    stamp = []
+    for root, dirs, files in os.walk(local, followlinks=True):
+        dirs.sort()
+        for name in sorted(files):
+            file = os.path.join(root, name)
+            st = os.stat(file)
+            stamp.append((os.path.relpath(file, local), st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(stamp)
+
+
+def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
+    """Open a parquet file or directory table without a schema-inference job
+    where the schema is already known.
+
+    ``spark.read.parquet(path)`` runs one Spark job per open to read a
+    footer: 0.11-0.15 s on a 4-vCPU VM, against 0.017 s for an open that is
+    given its schema, and most queries open the same unchanged tables again.
+    So: with ``schema`` (a table the caller just wrote), open with it; else,
+    for a local path, reuse the schema Spark inferred at an earlier open of
+    the same files, keyed on the absolute path, each file's (size, mtime_ns,
+    inode) and the settings that steer inference. A miss, a missing path or
+    a non-local URI opens with plain inference. Spark marks every column of
+    a schema-given read nullable, as it does on inference, so the result
+    has the same schema either way."""
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    local = _local_path(spark, path)
+    if local is None:
+        return spark.read.parquet(path)
+    try:
+        stamp = _file_stamp(local)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (local, stamp, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    cached = _SCHEMAS.get(key)
+    if cached is not None:
+        return spark.read.schema(cached).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS.put(key, df.schema)
+    return df
 
 
 def dataset_asciidoc(

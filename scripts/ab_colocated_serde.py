@@ -17,10 +17,12 @@ Usage: python scripts/ab_colocated_serde.py [cores] [reps]
 
 import importlib.util
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 

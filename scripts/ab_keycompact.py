@@ -15,10 +15,12 @@ Usage: python scripts/ab_keycompact.py [cores] [reps]
 """
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD  # noqa: E402
 from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated  # noqa: E402

@@ -20,10 +20,12 @@ Usage: python scripts/kernel_probe.py [reps]
 import ctypes
 import json
 import multiprocessing as mp
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 try:
     libc = ctypes.CDLL("libc.so.6", use_errno=True)

@@ -16,9 +16,11 @@ Drive the sweep with scripts/memprobe_sweep.sh; results in BENCH.md.
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HOT_TURNS = 1_000_000
 NEIGHBOR_TURNS = 50_000

@@ -21,9 +21,11 @@ Prints one JSON line; results table in BENCH.md round-9 section.
 """
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 HOT_TURNS = 1_000_000
 NEIGHBOR_TURNS = 50_000

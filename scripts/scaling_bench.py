@@ -29,10 +29,11 @@ import time
 
 SERIES_PATH = "/tmp/scaling_series.parquet"
 RAW_PATH = "/tmp/scaling_raw.parquet"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 PREP = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from pysatl_cpd_spark.session import get_spark
 from pysatl_cpd_spark.sources.transcripts import transcripts_table
 from pysatl_cpd_spark.operators.series import turn_rate_series
@@ -47,7 +48,7 @@ turn_rate_series(tr).write.mode("overwrite").parquet({SERIES_PATH!r})
 
 CHILD = f"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from pysatl_cpd_spark.session import get_spark
 from pyspark.sql import functions as F
 from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
@@ -164,7 +165,7 @@ def main() -> None:
     subprocess.run(
         [sys.executable, "-c", PREP, str(n_convs), str(avg_turns)],
         check=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         capture_output=True,
     )
     # interleaved min-of-N on the critical 8/32 pair (this VM has ±40% noise
@@ -179,7 +180,7 @@ def main() -> None:
             capture_output=True,
             text=True,
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         return json.loads(
             [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
@@ -335,7 +336,7 @@ def main() -> None:
         f"| {i + 1} | " + " | ".join(str(v) for v in row.values()) + " |\n"
         for i, row in enumerate(iso_rep_rows)
     )
-    with open("/root/repo/BENCH.md", "a") as fh:
+    with open(os.path.join(ROOT, "BENCH.md"), "a") as fh:
         fh.write(
             f"\n## Scaling proxy run {result['measured_at']}\n\n"
             f"| metric | value |\n|---|---|\n"

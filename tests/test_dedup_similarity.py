@@ -95,6 +95,75 @@ def test_minhash_lsh_finds_dups(docs):
     assert (1, 4) in cands  # near-dup shares most shingles
 
 
+@pytest.fixture()
+def documents_dir(tmp_path):
+    """Seeded documents table on disk: 30-word vocabulary, random lengths,
+    whitespace/case noise, exact copies and near-duplicates (a copy with one
+    word appended), plus docs too short for a trigram."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    vocab = [f"w{i}" for i in range(30)]
+    texts = []
+    for _ in range(40):
+        texts.append(" ".join(rng.choice(vocab, int(rng.integers(3, 16)))))
+    for i in range(0, 40, 4):
+        texts.append(texts[i] + " dup")
+    texts += [texts[1], "  " + texts[2].upper() + "  ", "w1 w2", "w3"]
+    pd.DataFrame({"doc_id": np.arange(len(texts), dtype=np.int64), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet", index=False
+    )
+    return str(tmp_path)
+
+
+def test_minhash_lsh_pairs_match_duckdb(spark, documents_dir):
+    """Value parity of the LSH candidate query with its DuckDB twin: same
+    pairs, same estimated Jaccard, in any row order."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    got = sorted(tuple(r) for r in entry.minhash_lsh_pairs(spark, documents_dir).collect())
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{documents_dir}/documents.parquet')"
+    )
+    want = sorted(con.execute(entry._minhash_lsh_sql()).fetchall())
+    assert len(want) >= 12
+    assert got == want
+
+
+def test_minhash_signatures_match_numpy(spark, documents_dir):
+    """Each signature entry is min((h * a_i + b_i) mod p) over the doc's
+    trigram hashes, recomputed here in numpy from the same coefficients."""
+    import hashlib
+    import random
+
+    import pandas as pd
+
+    from pysatl_cpd_spark.operators.dedup import _MERSENNE, minhash_signatures
+
+    p = _MERSENNE
+    rnd = random.Random(42)
+    coeffs = np.array([(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(64)])
+    docs = spark.read.parquet(f"{documents_dir}/documents.parquet")
+    got = {
+        r.doc_id: list(r.signature)
+        for r in minhash_signatures(shingles(docs, 3, distinct=False)).collect()
+    }
+
+    want = {}
+    for doc_id, text in pd.read_parquet(f"{documents_dir}/documents.parquet").itertuples(index=False):
+        toks = " ".join(text.lower().split()).split(" ")
+        grams = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        if not grams:
+            continue
+        h = np.array([int(hashlib.md5(g.encode()).hexdigest()[:15], 16) % p for g in grams])
+        want[doc_id] = ((h[:, None] * coeffs[:, 0] + coeffs[:, 1]) % p).min(axis=0).tolist()
+    assert len(want) == 52
+    assert got == want
+
+
 def test_simhash_near_dups(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]

@@ -2,6 +2,7 @@
 changepoints.csv per dataset directory)."""
 
 import numpy as np
+from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.sources.io import read_labeled_datasets, write_labeled_dataset
 
@@ -236,3 +237,92 @@ def test_bucketed_coded_write_rejects_append(spark, tmp_path):
             df, "series_coded_append_t", n_buckets=2, mode="append",
             path=str(tmp_path / "coded_append"),
         )
+
+
+def _open_counting_jobs(spark, group, path, **kw):
+    """Open ``path`` through read_parquet inside a job group; returns the
+    DataFrame and the number of Spark jobs the open ran."""
+    from pysatl_cpd_spark.sources.io import read_parquet
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = read_parquet(spark, path, **kw)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_reuses_schema_of_unchanged_file(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(5).write.parquet(path)
+
+    first, jobs_first = _open_counting_jobs(spark, "rp_first", path)
+    again, jobs_again = _open_counting_jobs(spark, "rp_again", path)
+    assert (jobs_first, jobs_again) == (1, 0)
+    assert again.schema == first.schema
+    assert sorted(r.id for r in again.collect()) == list(range(5))
+
+
+def test_read_parquet_sees_overwrite_with_extra_column(spark, tmp_path):
+    """A single parquet file rewritten in place with one more column."""
+    import pandas as pd
+
+    path = str(tmp_path / "t.parquet")
+    pd.DataFrame({"id": [0, 1, 2]}).to_parquet(path, index=False)
+    _open_counting_jobs(spark, "rp_before", path)
+
+    pd.DataFrame({"id": [0, 1, 2], "extra": [0, 2, 4]}).to_parquet(path, index=False)
+    df, jobs = _open_counting_jobs(spark, "rp_after", path)
+    assert jobs == 1
+    assert df.columns == ["id", "extra"]
+    assert sorted((r.id, r.extra) for r in df.collect()) == [(0, 0), (1, 2), (2, 4)]
+
+
+def test_read_parquet_sees_added_part_file(spark, tmp_path):
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).coalesce(1).write.parquet(path)
+    _open_counting_jobs(spark, "rp_parts_before", path)
+
+    spark.range(3, 7).coalesce(1).write.mode("append").parquet(path)
+    df, jobs = _open_counting_jobs(spark, "rp_parts_after", path)
+    assert jobs == 1
+    assert sorted(r.id for r in df.collect()) == list(range(7))
+
+
+def test_read_parquet_schema_matches_inference(spark, tmp_path):
+    """Timestamp, array and write-time non-nullable columns: the remembered
+    open and the ``schema=`` open report exactly the schema a fresh
+    ``spark.read.parquet`` infers (every column nullable)."""
+    from pysatl_cpd_spark.sources.io import read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    written = spark.range(4).select(
+        F.col("id"),
+        F.lit(7).alias("seven"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+        F.array(F.col("id"), F.lit(1)).alias("arr"),
+        F.when(F.col("id") > 1, F.lit("x")).alias("maybe"),
+    )
+    assert not written.schema["id"].nullable and not written.schema["seven"].nullable
+    written.write.parquet(path)
+
+    inferred = spark.read.parquet(path).schema
+    assert all(f.nullable for f in inferred.fields)
+    read_parquet(spark, path)  # stores the inferred schema
+    assert read_parquet(spark, path).schema == inferred
+    assert read_parquet(spark, path, schema=written.schema).schema == inferred
+
+
+def test_read_parquet_local_path_resolution(spark):
+    """Only paths on the local filesystem are stamped; another filesystem's
+    URI gets plain inference."""
+    import os
+
+    from pysatl_cpd_spark.sources.io import _local_path
+
+    assert _local_path(spark, "hdfs://namenode/warehouse/t.parquet") is None
+    assert _local_path(spark, "s3a://bucket/t.parquet") is None
+    assert _local_path(spark, "file:///tmp/t.parquet") == "/tmp/t.parquet"
+    assert _local_path(spark, "rel/t.parquet") == os.path.abspath("rel/t.parquet")
