@@ -810,15 +810,16 @@ def gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     series to Gorilla blobs, decode, re-aggregate — must equal the direct SQL
     aggregates (count/min/max/first/last are exact under a lossless codec)."""
     from pysatl_cpd_spark.operators.segments import roundtrip_summaries
-    from pysatl_cpd_spark.operators.series import events_series
 
-    series = events_series(_t(spark, sf_dir, "events")).withColumn(
+    # the co-located series: the repartition under the rank window is the
+    # one shuffle, and the encode runs on it with no second exchange
+    series = _event_series_colocated(spark, sf_dir).withColumn(
         "segment_id", F.lit(0).cast("long")
     )
     # fused encode->decode->summarize (roundtrip_summaries): the same codec
-    # calls as decode_segments(encode_segments(...)), computed from the
-    # DECODED arrays, without shipping every raw point back through Arrow
-    # between the stages. Per-series combine of the per-segment rows is
+    # calls as decode_segments(encode_segments_colocated(...)), computed
+    # from the DECODED arrays, without shipping every raw point back through
+    # Arrow between the stages. Per-series combine of the per-segment rows is
     # exact: the segment holding the globally-smallest t has t_min == that
     # t, so min_by(first_value, t_min) == min_by(value, t) (t unique per
     # series), and dually for last.
@@ -1118,7 +1119,7 @@ def cpd_bocpd_offline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BayesianOffline(learning_steps=20) (tests/test_lockstep_offline.py),
     # 1.8-2.4x per core at this series shape. Colocated dispatch over the
     # explicitly-repartitioned series: the detect stage reuses the window's
-    # one shuffle instead of paying a second salt-bucket exchange.
+    # one shuffle instead of paying a second exchange.
     return detect_lockstep_colocated(
         _event_series_colocated(spark, sf_dir),
         lambda: LockstepBayesianOffline(learning_steps=20),
@@ -1140,11 +1141,10 @@ def cpd_bocpd_offline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.operators.cpd import detect_counts_lockstep
 
     return detect_counts_lockstep(
-        _event_series(spark, sf_dir),
+        _event_series_colocated(spark, sf_dir),
         lambda: LockstepBayesianOffline(
             learning_steps=10, rate=50.0, threshold=0.04, mode="detect"
         ),
-        n_buckets=spark.sparkContext.defaultParallelism,
     )
 
 
@@ -1168,7 +1168,7 @@ def cpd_bocpd_online(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # colocated dispatch: the window's explicit repartition is the one
     # shuffle; detection streams each partition's complete series with no
-    # salt-bucket exchange (output identical — kernel lanes independent)
+    # second exchange (output identical — kernel lanes independent)
     return detect_lockstep_colocated(
         _event_series_colocated(spark, sf_dir), factory
     )
@@ -1549,11 +1549,7 @@ def cpd_detect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bare=True,
         detector="drop",
     )
-    return detect_counts_lockstep(
-        _event_series(spark, sf_dir),
-        factory,
-        n_buckets=spark.sparkContext.defaultParallelism,
-    )
+    return detect_counts_lockstep(_event_series_colocated(spark, sf_dir), factory)
 
 
 _QSCALE = 10_000_000  # embedding int64 quantization scale (matches COSINE_SQL)
@@ -2218,7 +2214,7 @@ def transcripts_segment_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
     # same zero-exchange shape as the flagship: one explicit key repartition
-    # buys a colocated (salt-free, shuffle-free) lockstep detect
+    # buys a colocated (shuffle-free) lockstep detect
     n_parts = spark.sparkContext.defaultParallelism
     series = (
         turn_rate_series(tr.filter(F.col("role") != "tool"))
@@ -2362,10 +2358,8 @@ def transcripts_cpd_rollup_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = spark.sparkContext.defaultParallelism
     coded, dim = compact_series_key(turn_rate_series(tr), n_partitions=n_parts)
     coded = coded.cache()
-    cps = detect_lockstep_colocated(
-        coded, lambda: LockstepCusum(k=0.05, h=2.0), key_type="long"
-    )
-    enc = encode_segments_colocated(coded, cps, key_type="long")
+    cps = detect_lockstep_colocated(coded, lambda: LockstepCusum(k=0.05, h=2.0))
+    enc = encode_segments_colocated(coded, cps)
     return attach_series_id(enc, dim).select(
         "series_id",
         "segment_id",
@@ -2419,16 +2413,15 @@ def entry(spark: SparkSession) -> DataFrame:
     summarize)."""
     sf_dir = "/root/testdata/sf0.001"
     from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_offline_lockstep
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.cusum import cusum_prefilter
-    from pysatl_cpd_spark.operators.segments import encode_segments_adaptive
-    from pysatl_cpd_spark.operators.series import events_series
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
-    series = events_series(_t(spark, sf_dir, "events")).cache()
+    series = _event_series_colocated(spark, sf_dir).cache()
     alarmed = cusum_prefilter(series, k=2.0, h=20.0)
     gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    cps = detect_offline_lockstep(gated, lambda: LockstepCusum(k=2.0, h=20.0))
-    return encode_segments_adaptive(series, cps).drop("blob")
+    cps = detect_lockstep_colocated(gated, lambda: LockstepCusum(k=2.0, h=20.0))
+    return encode_segments_colocated(series, cps).drop("blob")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -157,8 +157,9 @@ class LockstepCusum:
     bucket of B series costs ~B-fold fewer numpy dispatches than the
     sequential per-series loop — the same amortization that made the BOCPD
     lockstep kernel ~3.6x faster per core (detectors/lockstep.py). Padding
-    waste is bounded by tail-length spread within a bucket; the operator
-    layer salts series into buckets by hash, which mixes lengths uniformly.
+    waste is bounded by tail-length spread within a batch; the operator
+    layer batches the series of a hash partition, which mixes lengths
+    uniformly.
     """
 
     k: float = 0.5

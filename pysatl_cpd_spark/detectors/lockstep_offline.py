@@ -64,7 +64,7 @@ class LockstepBayesianOffline:
     ConstantHazard(rate), ThresholdDetector(threshold), ArgmaxLocalizer())``
     with ``process_many(list[series]) -> list[list[int]]`` — the lockstep
     kernel contract shared with ``LockstepLinearBOCPD`` / ``LockstepCusum``,
-    so it drops into ``detect_offline_lockstep`` unchanged.
+    so it drops into ``detect_lockstep_colocated`` unchanged.
 
     ``mode="detect"`` runs the reference's COUNTING trajectory instead
     (``BayesianOffline.detect``): no rewind — after any fire (threshold or

@@ -1,39 +1,35 @@
 """Distributed change-point detection over keyed series.
 
-The one Spark-side pattern every detector shares (SURVEY.md §3.1): shuffle by
-series key, order each group by its index, run the numpy kernel inside a
-grouped-map pandas UDF, and emit (series_id, change_point) rows with window-
-local indices remapped to the carried global index column (the reference's
-index-remap law, cpd_core.py:41).
+Every detector runs through the one co-located runner
+(``operators/colocated.py::map_series``): co-locate the series on their
+key, sort each partition by ``(key, t)`` in the JVM, stream complete series
+into a ``process_many(list[np.ndarray]) -> list[list[int]]`` kernel in
+flush-sized batches, and emit (series_id, change_point) rows with
+series-local indices remapped to the carried global index column (the
+reference's index-remap law, cpd_core.py:41). Per-series kernels
+(``localize`` / ``process_series``) enter through ``sequential``.
 
-Scale levers:
-  - explicit column pruning before the UDF (Catalyst cannot prune through
-    applyInPandas — never ship text/payload columns into the detector);
-  - ``chunk_series`` splits hot keys into overlapping chunks so one giant
-    conversation cannot pin a single executor (salted repartition); chunk
-    windows overlap by the detector's horizon and detections are deduped on
-    the absolute index, so the stitch is exact;
-  - the linear-heuristic detector bounds per-point state, keeping per-series
-    cost linear (the reference's own scaling answer).
+The variation between detector families is only the key and the emit:
+
+  - whole series: key ``series_id``; points, counts or instrumented rows;
+  - scrubber windows: key ``(series_id, window_id)`` (``assign_windows``);
+  - hot-key chunks: key ``(series_id, chunk_id)`` (``chunk_series``) so one
+    giant conversation fans out over many tasks; chunk windows overlap by
+    the detector's horizon and detections are deduped on the absolute
+    index, so the stitch is exact;
+  - vector observations: a list column, read as an ``(n, dim)`` matrix.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Protocol
+import time
+from types import SimpleNamespace
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-CP_SCHEMA = "series_id string, change_point long"
-
-
-class WindowAlgorithm(Protocol):
-    def localize(self, window: np.ndarray) -> list[int]: ...
-
-
-class SeriesAlgorithm(Protocol):
-    def process_series(self, values: np.ndarray) -> list[int]: ...
+from pysatl_cpd_spark.operators.colocated import map_series
 
 
 def _prepared(series_df: DataFrame) -> DataFrame:
@@ -41,654 +37,138 @@ def _prepared(series_df: DataFrame) -> DataFrame:
     return series_df.select("series_id", "t", "value")
 
 
-def _bucketed(series_df: DataFrame, n_buckets: int | None) -> tuple[DataFrame, int]:
-    """Salt series into hash buckets so ONE grouped-map UDF call carries many
-    complete series: per-group Arrow round-trip + scheduling overhead was the
-    dominant cost for small-series workloads (1,500 event series at sf0.1 =
-    0.09 s of kernel work inside 4.3 s of per-group dispatch). Bucket count
-    defaults to 2x parallelism — full occupancy, ~parallelism-fold fewer UDF
-    calls.
-
-    The EXPLICIT repartition is load-bearing: detector input is small in
-    bytes but heavy in Python CPU, so AQE's byte-based partition coalescing
-    would merge the post-shuffle partitions down to ~1 and serialize the
-    whole UDF stage (measured: 3.2 s wall for 2.7 core-seconds of kernel).
-    A user-specified repartition is exempt from AQE coalescing, and the
-    grouped-map below reuses its hash partitioning (no second shuffle) —
-    the same fix encode_segments_adaptive applies to the encode stage.
-
-    ``n_buckets=0`` opts OUT of salting: the caller asserts the input is
-    already co-located by series_id (a bucketed table whose ingest shuffle
-    was paid once) and detection groups by series_id directly — ZERO
-    exchanges (plan-asserted in tests/test_io.py). Salting such input would
-    re-shuffle what storage bucketing already placed."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets == 0:
-        return _prepared(series_df), 0
-    return (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket"),
-        n_buckets,
-    )
+def _run_one(detector, values: np.ndarray) -> "list[int]":
+    if hasattr(detector, "process_series"):
+        return detector.process_series(values)
+    return detector.localize(values)
 
 
-def detect_offline(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Run a windowed (offline) detector over each whole series.
-
-    series_df: (series_id, t, value). Returns (series_id, change_point) where
-    change_point is the global ``t`` of the detected index. Series are
-    processed many-per-UDF-call (see ``_bucketed``); a fresh detector per
-    series keeps state isolation identical to one-group-per-series."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(run, CP_SCHEMA)
+def sequential(factory: "Callable[[], object]") -> "Callable[[], object]":
+    """Lift a per-series kernel (``process_series``, else window
+    ``localize``) to the ``process_many`` contract, a fresh detector per
+    series."""
+    many = lambda series: [_run_one(factory(), v) for v in series]  # noqa: E731
+    return lambda: SimpleNamespace(process_many=many)
 
 
-def detect_online(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Run a per-observation (online) detector across each ordered series.
-    The detector's absolute positions are remapped through the global index.
-    Series are processed many-per-UDF-call (see ``_bucketed``); a fresh
-    detector per series keeps state isolation identical."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().process_series(values):
-                if c < len(index):
-                    out_ids.append(sid)
-                    out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(run, CP_SCHEMA)
+def _values(batch) -> "list[np.ndarray]":
+    return [a["value"].astype(np.float64, copy=False) for _, a in batch]
 
 
-def detect_online_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
-    arrow: bool = True,
-) -> DataFrame:
-    """Online detection with the cross-series LOCKSTEP kernel
-    (detectors/lockstep.py): series are salted into ``n_buckets`` hash
-    buckets, each bucket's ~hundred COMPLETE series process together inside
-    one grouped-map UDF, and every numpy call covers the whole batch — the
-    per-observation dispatch overhead that dominates the sequential kernel
-    amortizes ~batch-fold (measured 3.6x per core at 190 series/bucket).
-    Output and semantics identical to ``detect_online`` with the equivalent
-    sequential factory (bit-identical; enforced by tests/test_lockstep.py
-    and the operator-level differential test).
-
-    ``lockstep_factory`` -> an object with
-    ``process_many(list[np.ndarray]) -> list[list[int]]`` (LockstepLinearBOCPD).
-    ``n_buckets`` defaults to 2x the session's default parallelism — enough
-    tasks to fill the cluster while keeping batches big enough to amortize.
-    Monster series should go through ``chunk_series`` first, as with
-    ``detect_online``. ``n_buckets=0`` (the co-location opt-out of the
-    sequential variants) is rejected: lockstep NEEDS multi-series batches,
-    and a per-series grouping would silently degrade it to worse-than-
-    sequential — use ``detect_online(..., n_buckets=0)`` over bucketed
-    tables instead.
-
-    Dispatch is ARROW-NATIVE (``applyInArrow``, Spark >= 4): the kernel
-    consumes numpy anyway, so the pandas layer bought nothing and cost a
-    table conversion per bucket — worst on the series_id strings, which
-    pandas lands as per-row Python objects while Arrow keeps them as one
-    contiguous buffer that the dispatch only dictionary-encodes.
-    Sort/group/emit all happen on Arrow/numpy arrays; falls back to the
-    pandas path (identical output, asserted by test) when applyInArrow is
-    unavailable. Measured A/B (9.6M pts, local[32], interleaved): output
-    bit-identical, wall time within noise of the pandas path — at
-    production bucket sizes the kernel dominates and the conversion is
-    amortized; the Arrow path is kept for the smaller constant factor and
-    the removed per-bucket object-string materialization."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets <= 0:
-        raise ValueError(
-            "detect_online_lockstep requires n_buckets >= 1 (batching is the "
-            "mechanism); for co-located bucketed input use detect_online with "
-            "n_buckets=0"
-        )
-
-    def split_and_run(t_np, v_np, sid_codes):
-        """Shared core: sorted (t, value, series-code) arrays → per-series
-        slices → lockstep kernel → (row-offsets of each cp's series, cps)."""
-        if sid_codes.shape[0] == 0:
-            return [], []
-        bounds = np.flatnonzero(np.diff(sid_codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [sid_codes.shape[0]]))
-        values = [v_np[s:e] for s, e in zip(starts, ends)]
-        all_cps = lockstep_factory().process_many(values)
-        out_rows: list[int] = []
-        out_cps: list[int] = []
-        for s, e, cps in zip(starts, ends, all_cps):
-            index = t_np[s:e]
-            for c in cps:
-                if c < index.shape[0]:
-                    out_rows.append(int(s))
-                    out_cps.append(int(index[c]))
-        return out_rows, out_cps
-
-    def run_arrow(table):
-        return _lockstep_arrow_table(table, lockstep_factory)
-
-    def run_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        sid = pdf["series_id"].to_numpy()
-        codes = np.zeros(sid.shape[0], dtype=np.int64)
-        if sid.shape[0]:
-            codes[1:] = np.cumsum(sid[1:] != sid[:-1])
-        out_rows, out_cps = split_and_run(
-            pdf["t"].to_numpy(),
-            pdf["value"].to_numpy(dtype=np.float64),
-            codes,
-        )
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(sid[out_rows], dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed = (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    )
-    grouped = bucketed.groupBy("bucket")
-    if arrow and hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(run_arrow, CP_SCHEMA)
-    return grouped.applyInPandas(run_pandas, CP_SCHEMA)
+def _remap(t: np.ndarray, cps: "list[int]") -> "list[int]":
+    """Series-local indices -> the carried global ``t``. A fire localized
+    past the last observation has no ``t`` and is dropped."""
+    return [int(t[c]) for c in cps if c < t.shape[0]]
 
 
-def _lockstep_arrow_table(table, lockstep_factory):
-    """Shared Arrow core of the lockstep dispatches: sort a (series_id, t,
-    value) pyarrow Table, dictionary-encode the key, slice per-series numpy
-    views, run the kernel, emit a (series_id, change_point) Table."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _points(factory: "Callable[[], object]"):
+    """Emit: one (series_id, change_point) row per localized change point."""
 
-    order = pc.sort_indices(
-        table, sort_keys=[("series_id", "ascending"), ("t", "ascending")]
-    )
-    sid = pc.take(table.column("series_id"), order).combine_chunks()
-    t_np = pc.take(table.column("t"), order).combine_chunks().to_numpy()
-    v_np = (
-        pc.take(table.column("value"), order)
-        .combine_chunks()
-        .to_numpy()
-        .astype(np.float64, copy=False)
-    )
-    codes = pc.dictionary_encode(sid).indices.to_numpy()
-    out_rows: list[int] = []
-    out_cps: list[int] = []
-    if codes.shape[0]:
-        bounds = np.flatnonzero(np.diff(codes)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [codes.shape[0]]))
-        values = [v_np[s:e] for s, e in zip(starts, ends)]
-        all_cps = lockstep_factory().process_many(values)
-        for s, e, cps in zip(starts, ends, all_cps):
-            index = t_np[s:e]
-            for c in cps:
-                if c < index.shape[0]:
-                    out_rows.append(int(s))
-                    out_cps.append(int(index[c]))
-    return pa.table(
-        {
-            "series_id": pc.take(sid, pa.array(out_rows, pa.int64())).cast(
-                pa.string()
-            ),
-            "change_point": pa.array(out_cps, pa.int64()),
+    def emit(batch):
+        all_cps = factory().process_many(_values(batch))
+        remapped = [_remap(a["t"], cps) for (_, a), cps in zip(batch, all_cps)]
+        return [len(r) for r in remapped], {
+            "change_point": [c for r in remapped for c in r]
         }
-    )
+
+    return emit
 
 
 def detect_lockstep_colocated(
     series_df: DataFrame,
     lockstep_factory: "Callable[[], object]",
     flush_points: int = 4_000_000,
-    validate: bool = False,
-    key_type: str = "string",
 ) -> DataFrame:
-    """ZERO-EXCHANGE lockstep detection over co-located input: the caller
-    asserts every partition holds only COMPLETE series — true for a table
-    bucketed/ingested by the series key (sources/catalog.py
-    write_bucketed_series: pay the shuffle once at ingest) and for any plan
-    downstream of an explicit ``repartition(n, series_id)``. No salt
-    column, no groupBy, no second shuffle (plan-asserted in
-    tests/test_lockstep.py).
+    """(series_id, t, value) -> (series_id, change_point), where
+    change_point is the global ``t`` of each detected index.
 
-    The per-partition sort runs in the JVM (``sortWithinPartitions`` — a
-    local Tungsten sort, no exchange) and the Python side streams the
-    sorted batches one series at a time (operators/colocated.py), so the
-    partition is never materialized as a second Arrow copy and never
-    sorted in Python — that serde share was the measured bus-bound cost of
-    the round-6 variant (BENCH.md). Series accumulate into lockstep calls
-    of ~``flush_points`` points so the cross-series kernel keeps its
-    amortization while peak memory stays bounded by the flush size, not
-    the partition size.
-
-    Per-series output is identical to ``detect_online_lockstep`` for any
-    partitioning that satisfies the contract (kernel lanes are independent;
-    batch composition does not affect results — differential-tested). A
-    VIOLATED contract (series split across partitions) silently detects on
-    partial series: ``validate=True`` runs ``assert_colocated`` first (one
-    debug-mode job; see its docstring) — when unsure and in production,
-    use the salted dispatch.
-
-    CAUTION with window-derived series (no explicit repartition upstream):
-    AQE's byte-based coalescing may merge the small-but-Python-heavy
-    partitions down to a handful and serialize the kernel — the same trap
-    ``_bucketed`` documents. Explicit-repartition or storage-bucketed
-    inputs are exempt; that is the intended use.
-
-    ``key_type="long"`` accepts a series_id column of dense int64 codes
-    (operators/keycompact.py — the collision-free key compaction that
-    removes the repeated string column from the Arrow socket bytes) and
-    emits the same type back; re-attach the string id afterwards with
-    ``attach_series_id``."""
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
-    )
-
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    pruned = _prepared(series_df).sortWithinPartitions("series_id", "t")
-
-    def run(batches):
-        import pyarrow as pa
-
-        key_pa = pa.string() if key_type == "string" else pa.int64()
-        buf: "list[tuple[object, np.ndarray, np.ndarray]]" = []
-        buf_pts = 0
-
-        def flush():
-            nonlocal buf, buf_pts
-            if not buf:
-                return None
-            all_cps = lockstep_factory().process_many([v for _, _, v in buf])
-            ids: list = []
-            cps_out: list[int] = []
-            for (sid, t_np, _), cps in zip(buf, all_cps):
-                for c in cps:
-                    if c < t_np.shape[0]:
-                        ids.append(sid)
-                        cps_out.append(int(t_np[c]))
-            buf, buf_pts = [], 0
-            if not ids:
-                return None
-            return pa.record_batch(
-                [pa.array(ids, key_pa), pa.array(cps_out, pa.int64())],
-                names=["series_id", "change_point"],
-            )
-
-        for sid, cols in iter_sorted_series(batches, ("t", "value")):
-            v = cols["value"].astype(np.float64, copy=False)
-            buf.append((sid, cols["t"], v))
-            buf_pts += v.shape[0]
-            if buf_pts >= flush_points:
-                out = flush()
-                if out is not None:
-                    yield out
-        out = flush()
-        if out is not None:
-            yield out
-
-    return pruned.mapInArrow(run, f"series_id {key_type}, change_point long")
-
-
-def detect_colocated_instrumented(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    validate: bool = False,
-    key_type: str = "string",
-) -> DataFrame:
-    """Observability twin of ``detect_lockstep_colocated`` (north-rule:
-    every unit of work emits lineage + metrics): the same ZERO-EXCHANGE
-    streamed dispatch, but each series additionally reports the partition
-    that processed it (``TaskContext.partitionId`` — per-partition lineage
-    for exact resume bookkeeping), its point count, and its kernel wall
-    time. Output: (series_id, partition_id, n_points, n_change_points,
-    kernel_ms, change_points).
-
-    Per-series ``kernel_ms`` requires one kernel call per series, so this
-    dispatch trades the cross-series flush amortization for attribution —
-    the same tradeoff the bucketed instrumented dispatch documents. Use
-    the plain colocated dispatch when only detections are needed."""
-    import time
-
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
-    )
-
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    pruned = _prepared(series_df).sortWithinPartitions("series_id", "t")
-
-    def run(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        key_pa = pa.string() if key_type == "string" else pa.int64()
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        out = {k: [] for k in (
-            "series_id", "n_points", "n_change_points", "kernel_ms",
-            "change_points",
-        )}
-
-        def emit():
-            return pa.record_batch(
-                [
-                    pa.array(out["series_id"], key_pa),
-                    pa.array([pid] * len(out["series_id"]), pa.int32()),
-                    pa.array(out["n_points"], pa.int64()),
-                    pa.array(out["n_change_points"], pa.int64()),
-                    pa.array(out["kernel_ms"], pa.float64()),
-                    pa.array(out["change_points"], pa.list_(pa.int64())),
-                ],
-                names=[
-                    "series_id", "partition_id", "n_points",
-                    "n_change_points", "kernel_ms", "change_points",
-                ],
-            )
-
-        for sid, cols in iter_sorted_series(batches, ("t", "value")):
-            t_np = cols["t"]
-            v = cols["value"].astype(np.float64, copy=False)
-            t0 = time.perf_counter()
-            cps = lockstep_factory().process_many([v])[0]
-            kernel_ms = (time.perf_counter() - t0) * 1000.0
-            remapped = [int(t_np[c]) for c in cps if c < t_np.shape[0]]
-            out["series_id"].append(sid)
-            out["n_points"].append(int(v.shape[0]))
-            out["n_change_points"].append(len(remapped))
-            out["kernel_ms"].append(kernel_ms)
-            out["change_points"].append(remapped)
-            if len(out["series_id"]) >= 8192:
-                yield emit()
-                out = {k: [] for k in out}
-        if out["series_id"]:
-            yield emit()
-
-    return pruned.mapInArrow(
-        run,
-        f"series_id {key_type}, partition_id int, n_points long, "
-        "n_change_points long, kernel_ms double, change_points array<long>",
-    )
-
-
-def detect_offline_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Offline twin of ``detect_online_lockstep``: the kernel contract is the
-    same ``process_many(list[np.ndarray]) -> list[list[int]]`` over complete
-    series either way (offline kernels see the whole series at once, which is
-    exactly what the lockstep dispatch delivers), so this is the identical
-    salted-bucket grouped-map plan. Use with ``LockstepCusum`` for the
-    bit-identical batched ``CusumDetector`` path (detectors/cusum.py §3)."""
-    return detect_online_lockstep(series_df, lockstep_factory, n_buckets)
-
-
-def detect_online_instrumented(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Online detection with per-series metrics rows (north-rule observability:
-    every unit of work emits lineage + metrics). Output:
-    (series_id, n_points, n_change_points, kernel_ms, change_points array).
-
-    BUCKETED dispatch (round 7): one grouped-map call carries a whole salt
-    bucket of complete series instead of one UDF call per series — the exact
-    per-group Arrow/scheduling overhead ``_bucketed`` documents (0.09 s of
-    kernel inside 4.3 s of dispatch on the main path). ``kernel_ms`` stays
-    PER-SERIES: the kernel call is timed around each series inside the
-    bucket, so the observability contract is unchanged (parity vs the
-    per-series dispatch asserted in tests/test_instrumented.py; only the
-    timing column is dispatch-dependent by nature). ``n_buckets=0`` opts out
-    of salting for co-located input (same contract as ``_bucketed``)."""
-    import time
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out = {
-            "series_id": [], "n_points": [], "n_change_points": [],
-            "kernel_ms": [], "change_points": [],
-        }
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            t0 = time.perf_counter()
-            cps = algorithm_factory().process_series(values)
-            kernel_ms = (time.perf_counter() - t0) * 1000.0
-            cps = [int(index[c]) for c in cps if c < len(index)]
-            out["series_id"].append(sid)
-            out["n_points"].append(len(values))
-            out["n_change_points"].append(len(cps))
-            out["kernel_ms"].append(kernel_ms)
-            out["change_points"].append(cps)
-        return pd.DataFrame(out)
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(
-        run,
-        "series_id string, n_points long, n_change_points long, "
-        "kernel_ms double, change_points array<long>",
-    )
-
-
-def detect_counts(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], SeriesAlgorithm],
-    n_buckets: int | None = None,
-) -> DataFrame:
-    """Detection-count mode (reference CpdCore.detect / OnlineCpdSolver.run
-    detect path): per-series count of change points."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        ids: list[str] = []
-        counts: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            ids.append(sid)
-            counts.append(len(algorithm_factory().process_series(values)))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(ids, dtype=str),
-                "n_change_points": pd.Series(counts, dtype="int64"),
-            }
-        )
-
-    bucketed, nb = _bucketed(series_df, n_buckets)
-    key = "series_id" if nb == 0 else "bucket"
-    return bucketed.groupBy(key).applyInPandas(
-        run, "series_id string, n_change_points long"
+    ``lockstep_factory`` -> an object with ``process_many(list[np.ndarray])
+    -> list[list[int]]`` (``LockstepLinearBOCPD``, ``LockstepCusum``,
+    ``LockstepBayesianOffline``, or ``sequential(factory)``). Series
+    accumulate into kernel calls of ~``flush_points`` points, so a
+    cross-series kernel keeps its amortization while peak memory stays
+    bounded by the flush size. Kernel lanes are independent, so batch
+    composition never changes a series' output. ``series_id`` may be a
+    string or a dense ``long`` code (operators/keycompact.py); the output
+    key has the input's type."""
+    return map_series(
+        series_df, ["series_id"], ["t", "value"], _points(lockstep_factory),
+        "change_point long", flush_points,
     )
 
 
 def detect_counts_lockstep(
-    series_df: DataFrame,
-    lockstep_factory: "Callable[[], object]",
-    n_buckets: int | None = None,
+    series_df: DataFrame, lockstep_factory: "Callable[[], object]"
 ) -> DataFrame:
-    """Detection-count mode through the LOCKSTEP batch kernel: the salted
-    dispatch of ``detect_online_lockstep`` (same AQE-proof bucket
-    repartition), but each bucket emits ONE ``(series_id, n_change_points)``
-    row per series — including zero-count series, which a groupBy-count over
-    the change-point rows would silently drop. Counts are RAW FIRE COUNTS,
-    ``len(sequential.process_series(values))`` exactly (the kernel is
-    bit-identical per series): the reference's count mode sums every
-    ``detect()`` fire, so — unlike the LOCALIZED dispatches — no
-    ``c < len`` index guard is applied here, matching ``detect_counts``. A
-    posterior-collapse fire at a series' final observation (localizes past
-    the end; only reachable with overflow-magnitude values) therefore
-    counts, as it does sequentially. Falls back to a pandas grouped-map
-    (identical output) when ``applyInArrow`` is unavailable (Spark < 4),
-    like ``detect_online_lockstep``."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-    if n_buckets <= 0:
-        raise ValueError("detect_counts_lockstep requires n_buckets >= 1")
+    """Detection-count mode (reference CpdCore.detect / OnlineCpdSolver.run
+    detect path): one ``(series_id, n_change_points)`` row per series,
+    zero-count series included, which a groupBy-count over the change-point
+    rows would silently drop. Counts are RAW FIRE COUNTS,
+    ``len(process_many([values])[0])``: the reference's count mode sums every
+    ``detect()`` fire, so unlike the localized emit no ``c < len`` cut is
+    applied. A posterior-collapse fire at a series' final observation
+    (only reachable with overflow-magnitude values) therefore counts, as it
+    does sequentially."""
 
-    def count_runs(v_np, codes):
-        """Sorted values + series codes -> (first-row offsets, fire counts)."""
-        out_rows: list[int] = []
-        out_counts: list[int] = []
-        if codes.shape[0]:
-            bounds = np.flatnonzero(np.diff(codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [codes.shape[0]]))
-            values = [v_np[s:e] for s, e in zip(starts, ends)]
-            all_cps = lockstep_factory().process_many(values)
-            for s, cps in zip(starts, all_cps):
-                out_rows.append(int(s))
-                out_counts.append(len(cps))
-        return out_rows, out_counts
+    def emit(batch):
+        all_cps = lockstep_factory().process_many(_values(batch))
+        return [1] * len(batch), {"n_change_points": [len(c) for c in all_cps]}
 
-    def run_arrow(table):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        order = pc.sort_indices(
-            table, sort_keys=[("series_id", "ascending"), ("t", "ascending")]
-        )
-        sid = pc.take(table.column("series_id"), order).combine_chunks()
-        v_np = (
-            pc.take(table.column("value"), order)
-            .combine_chunks()
-            .to_numpy()
-            .astype(np.float64, copy=False)
-        )
-        codes = pc.dictionary_encode(sid).indices.to_numpy()
-        out_rows, out_counts = count_runs(v_np, codes)
-        return pa.table(
-            {
-                "series_id": pc.take(sid, pa.array(out_rows, pa.int64())).cast(
-                    pa.string()
-                ),
-                "n_change_points": pa.array(out_counts, pa.int64()),
-            }
-        )
-
-    def run_pandas(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        sid = pdf["series_id"].to_numpy()
-        codes = np.zeros(sid.shape[0], dtype=np.int64)
-        if sid.shape[0]:
-            codes[1:] = np.cumsum(sid[1:] != sid[:-1])
-        out_rows, out_counts = count_runs(
-            pdf["value"].to_numpy(dtype=np.float64), codes
-        )
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(sid[out_rows], dtype=str),
-                "n_change_points": pd.Series(out_counts, dtype="int64"),
-            }
-        )
-
-    bucketed = (
-        _prepared(series_df)
-        .withColumn("bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets)))
-        .repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
+    return map_series(
+        series_df, ["series_id"], ["t", "value"], emit, "n_change_points long"
     )
-    grouped = bucketed.groupBy("bucket")
-    schema = "series_id string, n_change_points long"
-    if hasattr(grouped, "applyInArrow"):
-        return grouped.applyInArrow(run_arrow, schema)
-    return grouped.applyInPandas(run_pandas, schema)
+
+
+def detect_colocated_instrumented(
+    series_df: DataFrame, lockstep_factory: "Callable[[], object]"
+) -> DataFrame:
+    """Detection with per-series lineage + metrics rows (north-rule: every
+    unit of work emits lineage + metrics): (series_id, partition_id,
+    n_points, n_change_points, kernel_ms, change_points). ``partition_id``
+    is the partition that processed the series (per-partition lineage for
+    exact resume bookkeeping).
+
+    Per-series ``kernel_ms`` needs one kernel call per series, so this
+    emit trades the cross-series amortization for attribution. Use
+    ``detect_lockstep_colocated`` when only detections are needed."""
+
+    def emit(batch):
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else -1
+        out = {k: [] for k in (
+            "n_points", "n_change_points", "kernel_ms", "change_points",
+        )}
+        for v, (_, a) in zip(_values(batch), batch):
+            t0 = time.perf_counter()
+            cps = lockstep_factory().process_many([v])[0]
+            out["kernel_ms"].append((time.perf_counter() - t0) * 1000.0)
+            remapped = _remap(a["t"], cps)
+            out["n_points"].append(int(v.shape[0]))
+            out["n_change_points"].append(len(remapped))
+            out["change_points"].append(remapped)
+        return [1] * len(batch), dict(out, partition_id=[pid] * len(batch))
+
+    return map_series(
+        series_df, ["series_id"], ["t", "value"], emit,
+        "partition_id int, n_points long, n_change_points long, "
+        "kernel_ms double, change_points array<long>",
+    )
 
 
 def detect_offline_multivariate(
-    series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
-    n_buckets: int | None = None,
+    series_df: DataFrame, algorithm_factory: "Callable[[], object]"
 ) -> DataFrame:
     """Multivariate variant: series_df is (series_id, t, vec array<double>).
-    The group matrix (n, dim) feeds detectors that accept vector observations
-    (classification / kNN / graph families)."""
-    spark = series_df.sparkSession
-    if n_buckets is None:
-        n_buckets = 2 * spark.sparkContext.defaultParallelism
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for sid, grp in pdf.groupby("series_id", sort=False):
-            values = np.stack(grp["vec"].to_numpy())
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    pruned = series_df.select("series_id", "t", "vec")
-    if n_buckets == 0:  # co-located input (see _bucketed): no salt shuffle
-        return pruned.groupBy("series_id").applyInPandas(run, CP_SCHEMA)
-    pruned = pruned.withColumn(
-        "bucket", F.pmod(F.xxhash64("series_id"), F.lit(n_buckets))
-    ).repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    return pruned.groupBy("bucket").applyInPandas(run, CP_SCHEMA)
+    Each series reaches the kernel as an (n, dim) matrix, for detectors
+    that accept vector observations (classification / kNN / graph
+    families)."""
+    return map_series(
+        series_df.withColumnRenamed("vec", "value"), ["series_id"],
+        ["t", "value"], _points(sequential(algorithm_factory)),
+        "change_point long",
+    )
 
 
 # -- scrubber: overlapping sliding windows as a relational transform ---------
@@ -723,7 +203,7 @@ def assign_windows(
 
 def detect_windowed(
     series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
+    algorithm_factory: "Callable[[], object]",
     window_length: int = 100,
     shift_factor: float = 1.0 / 3.0,
     dedupe: bool = True,
@@ -731,37 +211,13 @@ def detect_windowed(
     """Offline detector over scrubber windows (the reference CpdCore.localize
     composition): window-local detections are remapped via the carried global
     index and concatenated; overlapping windows re-detect the same point, so
-    ``dedupe`` keeps one row per (series_id, change_point). Windows are
-    salt-bucketed many-per-UDF-call (the scrubber emits FAR more window
-    groups than series — per-group dispatch dominated)."""
+    ``dedupe`` keeps one row per (series_id, change_point). Each window is
+    one series of the runner, keyed ``(series_id, window_id)``."""
     windows = assign_windows(series_df, window_length, shift_factor)
-    spark = series_df.sparkSession
-    n_buckets = 2 * spark.sparkContext.defaultParallelism
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "window_id", "pos"])
-        out_ids: list[str] = []
-        out_cps: list[int] = []
-        for (sid, _wid), grp in pdf.groupby(
-            ["series_id", "window_id"], sort=False
-        ):
-            values = grp["value"].to_numpy(dtype=np.float64)
-            index = grp["t"].to_numpy()
-            for c in algorithm_factory().localize(values):
-                out_ids.append(sid)
-                out_cps.append(int(index[c]))
-        return pd.DataFrame(
-            {
-                "series_id": pd.Series(out_ids, dtype=str),
-                "change_point": pd.Series(out_cps, dtype="int64"),
-            }
-        )
-
-    bucketed = windows.withColumn(
-        "bucket",
-        F.pmod(F.xxhash64("series_id", "window_id"), F.lit(n_buckets)),
-    ).repartition(n_buckets, "bucket")  # AQE-coalesce-proof (see _bucketed)
-    out = bucketed.groupBy("bucket").applyInPandas(run, CP_SCHEMA)
+    out = map_series(
+        windows, ["series_id", "window_id"], ["t", "value"],
+        _points(sequential(algorithm_factory)), "change_point long",
+    )
     return out.distinct() if dedupe else out
 
 
@@ -806,27 +262,14 @@ def chunk_series(
 
 def detect_offline_chunked(
     series_df: DataFrame,
-    algorithm_factory: Callable[[], WindowAlgorithm],
+    algorithm_factory: "Callable[[], object]",
     chunk_size: int = 20000,
     overlap: int = 500,
 ) -> DataFrame:
     """Offline detection with hot-key chunking. Detections are absolute
     (remapped through the carried t), so stitching = distinct on (series, t)."""
-    chunks = chunk_series(series_df, chunk_size, overlap)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        index = pdf["t"].to_numpy()
-        cps = algorithm_factory().localize(values)
-        return pd.DataFrame(
-            {"series_id": pdf["series_id"].iloc[0], "change_point": index[cps]}
-            if cps
-            else {"series_id": pd.Series([], dtype=str), "change_point": pd.Series([], dtype="int64")}
-        )
-
-    return (
-        chunks.groupBy("series_id", "chunk_id")
-        .applyInPandas(run, CP_SCHEMA)
-        .distinct()
-    )
+    return map_series(
+        chunk_series(series_df, chunk_size, overlap),
+        ["series_id", "chunk_id"], ["t", "value"],
+        _points(sequential(algorithm_factory)), "change_point long",
+    ).distinct()

@@ -81,8 +81,8 @@ def cusum_prefilter(
     statistic on the remaining points crosses h (detectors/cusum.py
     _first_alarm). This filter computes that identical statistic with window
     functions — a series it does not flag provably yields zero change points,
-    so gating detect_offline through a semi-join on this output leaves
-    results unchanged while the expensive pandas-UDF pass runs only on
+    so gating detection through a semi-join on this output leaves
+    results unchanged while the expensive Python kernel pass runs only on
     flagged series. At 100 TB this is the difference between scanning every
     conversation in Python and scanning the (usually small) alarmed subset.
     """

@@ -1,10 +1,11 @@
 """CPD-adaptive segmentation + Gorilla materialization.
 
 Segments are the half-open stretches between detected change points. The
-segment id assignment is relational (marker join + running sum — one shuffle,
-no UDF); only the codec itself runs in a grouped pandas UDF, emitting one
-compressed blob + summary row per segment. decode_segments reverses the codec
-for verification, proving the per-row invariant decode(encode(s)) == s.
+segment id assignment is relational (marker join + running sum, no UDF);
+the codec runs on the co-located per-series runner
+(``operators/colocated.py::map_series``), emitting one compressed blob +
+summary row per segment. decode_segments reverses the codec for
+verification, proving the per-row invariant decode(encode(s)) == s.
 """
 
 from __future__ import annotations
@@ -13,359 +14,127 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from pysatl_cpd_spark.operators.gorilla import decode_segment, encode_segment
+from pysatl_cpd_spark.operators.colocated import map_series
+from pysatl_cpd_spark.operators.gorilla import encode_segment
 
-SEGMENT_SCHEMA = (
-    "series_id string, segment_id long, n_points long, "
-    "t_min long, t_max long, min_value double, max_value double, "
-    "first_value double, last_value double, blob binary"
+_SUMMARY_COLS = (
+    "segment_id", "n_points", "t_min", "t_max",
+    "min_value", "max_value", "first_value", "last_value",
 )
+_SUMMARY_SCHEMA = (
+    "segment_id long, n_points long, t_min long, t_max long, "
+    "min_value double, max_value double, first_value double, last_value double"
+)
+# after the series_id key, which keeps the input's type
+_SEGMENT_SCHEMA = f"{_SUMMARY_SCHEMA}, blob binary"
+
+
+def _markers(cps_df: DataFrame) -> DataFrame:
+    """(series_id, t, _cp=1) once per distinct change point."""
+    return cps_df.select(
+        "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
+    ).distinct()
 
 
 def assign_segments(series_df: DataFrame, cps_df: DataFrame) -> DataFrame:
     """series (series_id, t, value) × change points (series_id, change_point)
     → + segment_id: number of change points at or before t."""
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    joined = series_df.join(markers, on=["series_id", "t"], how="left")
+    joined = series_df.join(_markers(cps_df), on=["series_id", "t"], how="left")
     run = W.partitionBy("series_id").orderBy("t").rowsBetween(W.unboundedPreceding, 0)
     return joined.withColumn(
         "segment_id", F.coalesce(F.sum("_cp").over(run), F.lit(0)).cast("long")
     ).drop("_cp")
 
 
-def encode_segments(segmented: DataFrame, bundles: int | None = None) -> DataFrame:
-    """(series_id, t, value, segment_id) → one Gorilla blob + summary per
-    segment. ``t`` doubles as the int64 timestamp stream. Segments are
-    BUNDLED ``bundles`` ways (hash of the segment key) so one Arrow batch
-    carries many segments — per-group dispatch dominated the codec at
-    per-segment grouping (same rationale as encode_segments_adaptive).
-    Default bundle count = 2x parallelism: full occupancy without slicing
-    small jobs into hundreds of near-empty tasks."""
-    if bundles is None:
-        bundles = 2 * segmented.sparkSession.sparkContext.defaultParallelism
+def _summarize(out: dict, segment_id: int, ts: np.ndarray, values: np.ndarray) -> None:
+    """Append one segment's summary row to the column lists in ``out``."""
+    for col, v in zip(_SUMMARY_COLS, (
+        segment_id, int(ts.shape[0]), int(ts[0]), int(ts[-1]),
+        float(np.min(values)), float(np.max(values)),
+        float(values[0]), float(values[-1]),
+    )):
+        out[col].append(v)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "segment_id", "t"])
-        rows = []
-        for (sid, seg), grp in pdf.groupby(["series_id", "segment_id"], sort=False):
-            ts = grp["t"].to_numpy(dtype=np.int64)
-            values = grp["value"].to_numpy(dtype=np.float64)
-            rows.append(
-                (
-                    sid,
-                    int(seg),
-                    len(ts),
-                    int(ts[0]),
-                    int(ts[-1]),
-                    float(np.min(values)),
-                    float(np.max(values)),
-                    float(values[0]),
-                    float(values[-1]),
-                    encode_segment(ts, values),
-                )
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "series_id", "segment_id", "n_points", "t_min", "t_max",
-                "min_value", "max_value", "first_value", "last_value", "blob",
-            ],
-        )
-        if not rows:  # typed empty frame for Arrow
-            for c, dt in (
-                ("segment_id", "int64"), ("n_points", "int64"),
-                ("t_min", "int64"), ("t_max", "int64"),
-                ("min_value", "float64"), ("max_value", "float64"),
-                ("first_value", "float64"), ("last_value", "float64"),
-            ):
-                out[c] = out[c].astype(dt)
-        return out
 
-    pruned = (
-        segmented.select("series_id", "segment_id", "t", "value")
-        .withColumn(
-            "bundle",
-            F.pmod(F.xxhash64("series_id", "segment_id"), F.lit(bundles)),
-        )
-        # explicit repartition: exempt from AQE byte-coalescing, which would
-        # serialize this Python-CPU-bound stage (see cpd._bucketed)
-        .repartition(bundles, "bundle")
+def _runs(labels: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
+    """[lo, hi) bounds of the runs of equal values in ``labels``."""
+    bounds = np.flatnonzero(labels[1:] != labels[:-1]) + 1
+    return (
+        np.concatenate([[0], bounds]),
+        np.concatenate([bounds, [labels.shape[0]]]),
     )
-    return pruned.groupBy("bundle").applyInPandas(run, SEGMENT_SCHEMA)
-
-
-def encode_segments_adaptive(
-    series_df: DataFrame, cps_df: DataFrame, bundles: int = 256
-) -> DataFrame:
-    """Fused assign_segments + encode_segments: change-point markers arrive
-    via a broadcast join (no shuffle — cps_df is tiny relative to the
-    series), and the segment split happens vectorized inside a grouped UDF.
-
-    Series are BUNDLED ``bundles`` ways (group key = hash(series_id) mod
-    bundles) instead of grouped per series: Arrow ships one batch per
-    *bundle*, so the per-group pandas/serde overhead (~ms) amortizes over
-    many series — at millions of 400-turn conversations, per-series groups
-    spend more time in group plumbing than in the codec. Inside the UDF the
-    bundle is sorted once by (series_id, t) and split on series boundaries
-    + markers with numpy. One shuffle for the whole stage, same output."""
-    from pyspark.sql import functions as F
-
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    # explicit repartition by bundle: the UDF stage is Python-cost-bound,
-    # and AQE's byte-based coalescing would shrink a small-but-CPU-heavy
-    # shuffle to a handful of tasks; a user-specified partition count is
-    # exempt from coalescing and already satisfies the groupBy distribution
-    joined = (
-        series_df.select("series_id", "t", "value")
-        .join(F.broadcast(markers), on=["series_id", "t"], how="left")
-        .withColumn("_bundle", F.pmod(F.hash("series_id"), F.lit(bundles)))
-        .repartition(bundles, "_bundle")
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "t"], kind="mergesort")
-        sids = pdf["series_id"].to_numpy()
-        ts = pdf["t"].to_numpy(dtype=np.int64)
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        cp = pdf["_cp"].fillna(0).to_numpy(dtype=np.int64)
-        # series boundaries reset the running segment counter
-        new_series = np.empty(len(sids), dtype=bool)
-        new_series[0] = True
-        new_series[1:] = sids[1:] != sids[:-1]
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value", "blob",
-        )}
-        # split where a new series starts or a change point lands; segment id
-        # = within-series running count of markers (cumsum semantics, so a
-        # marker on a series' first row labels it segment 1, as before)
-        bounds = np.flatnonzero(new_series[1:] | (cp[1:] == 1)) + 1
-        cum = np.cumsum(cp)
-        base = 0
-        for lo, hi in zip(
-            np.concatenate([[0], bounds]), np.concatenate([bounds, [len(sids)]])
-        ):
-            if new_series[lo]:
-                base = int(cum[lo]) - int(cp[lo])
-            seg_id = int(cum[lo]) - base
-            seg_ts, seg_vals = ts[lo:hi], values[lo:hi]
-            out["series_id"].append(sids[lo])
-            out["segment_id"].append(seg_id)
-            out["n_points"].append(hi - lo)
-            out["t_min"].append(int(seg_ts[0]))
-            out["t_max"].append(int(seg_ts[-1]))
-            out["min_value"].append(float(np.min(seg_vals)))
-            out["max_value"].append(float(np.max(seg_vals)))
-            out["first_value"].append(float(seg_vals[0]))
-            out["last_value"].append(float(seg_vals[-1]))
-            out["blob"].append(encode_segment(seg_ts, seg_vals))
-        return pd.DataFrame(out)
-
-    return joined.groupBy("_bundle").applyInPandas(run, SEGMENT_SCHEMA)
 
 
 def encode_segments_colocated(
-    series_df: DataFrame,
-    cps_df: DataFrame,
-    flush_segments: int = 8192,
-    validate: bool = False,
-    key_type: str = "string",
+    series_df: DataFrame, cps_df: DataFrame, flush_points: int = 4_000_000
 ) -> DataFrame:
-    """ZERO-EXCHANGE twin of ``encode_segments_adaptive`` for CO-LOCATED
-    series (every partition holds complete series — a bucket-ingested table
-    or any plan downstream of an explicit ``repartition(n, series_id)``,
-    same contract as cpd.detect_lockstep_colocated; ``validate=True`` runs
-    the debug-mode ``assert_colocated`` guard first). The change-point
-    markers arrive by broadcast join (no shuffle, partitioning preserved —
-    the streamed side of a BroadcastHashJoin keeps both its partitioning
-    and its row order) and each partition encodes its own series in one
-    mapInArrow pass — the bundle repartition that dominated the adaptive
-    variant's wall time at scale (the codec itself is ~260k pts/s/core; the
-    9.6M-row shuffle was the cost) disappears.
+    """(series_id, t, value) x change points (series_id, change_point) ->
+    one Gorilla blob + summary row per segment: (series_id, segment_id,
+    n_points, t_min, t_max, min/max/first/last value, blob). The key keeps
+    the input's type, so a dense ``long`` code passes through.
 
-    The per-partition sort runs in the JVM (``sortWithinPartitions`` after
-    the join — local, no exchange) and the Python side streams the sorted
-    batches ONE SERIES AT A TIME (operators/colocated.py): the round-6
-    variant's whole-partition Arrow copy + Python sort + per-column take
-    copies are gone, and since every segment is independent the encoder is
-    fully streaming — peak memory is one series plus ~``flush_segments``
-    output rows. Blobs are byte-identical to the adaptive/"plain" variants
-    (same encode_segment per segment; parity-tested)."""
-    from pysatl_cpd_spark.operators.colocated import (
-        assert_colocated,
-        iter_sorted_series,
+    The change-point markers arrive by broadcast join (no shuffle; the
+    streamed side of a BroadcastHashJoin keeps its partitioning) and each
+    series is split at its markers on the runner: segment_id = the running
+    count of markers at or before t, so a marker on a series' first row
+    labels it segment 1. ``t`` doubles as the int64 timestamp stream. Every
+    segment is independent, so peak memory is one flush of series plus
+    its output rows."""
+    joined = series_df.select("series_id", "t", "value").join(
+        F.broadcast(_markers(cps_df)), on=["series_id", "t"], how="left"
     )
 
-    if key_type not in ("string", "long"):
-        raise ValueError(f"key_type must be string|long, got {key_type!r}")
-    if validate:
-        assert_colocated(series_df)
-    markers = (
-        cps_df.select(
-            "series_id", F.col("change_point").alias("t"), F.lit(1).alias("_cp")
-        )
-        .distinct()
-    )
-    joined = (
-        series_df.select("series_id", "t", "value")
-        .join(F.broadcast(markers), on=["series_id", "t"], how="left")
-        .sortWithinPartitions("series_id", "t")
-    )
+    def emit(batch):
+        counts = []
+        out = {k: [] for k in (*_SUMMARY_COLS, "blob")}
+        for _, a in batch:
+            ts, values = a["t"], a["value"].astype(np.float64, copy=False)
+            cum = np.cumsum(a["_cp"], dtype=np.int64)
+            los, his = _runs(cum)
+            for lo, hi in zip(los, his):
+                _summarize(out, int(cum[lo]), ts[lo:hi], values[lo:hi])
+                out["blob"].append(encode_segment(ts[lo:hi], values[lo:hi]))
+            counts.append(len(los))
+        return counts, out
 
-    _OUT_COLS = (
-        "series_id", "segment_id", "n_points", "t_min", "t_max",
-        "min_value", "max_value", "first_value", "last_value", "blob",
+    return map_series(
+        joined, ["series_id"], ["t", "value", "_cp"], emit,
+        _SEGMENT_SCHEMA, flush_points,
     )
 
-    def _emit(out):
-        import pyarrow as pa
 
-        key_pa = pa.string() if key_type == "string" else pa.int64()
-        return pa.record_batch(
-            [
-                pa.array(out["series_id"], key_pa),
-                pa.array(out["segment_id"], pa.int64()),
-                pa.array(out["n_points"], pa.int64()),
-                pa.array(out["t_min"], pa.int64()),
-                pa.array(out["t_max"], pa.int64()),
-                pa.array(out["min_value"], pa.float64()),
-                pa.array(out["max_value"], pa.float64()),
-                pa.array(out["first_value"], pa.float64()),
-                pa.array(out["last_value"], pa.float64()),
-                pa.array(out["blob"], pa.binary()),
-            ],
-            names=list(_OUT_COLS),
-        )
-
-    def run(batches):
-        out = {k: [] for k in _OUT_COLS}
-        n_out = 0
-        for sid, cols in iter_sorted_series(batches, ("t", "value", "_cp")):
-            ts = cols["t"]
-            values = cols["value"].astype(np.float64, copy=False)
-            cp = cols["_cp"]
-            # identical split/segment-id law to encode_segments_adaptive.run,
-            # expressed per series: within one series the running base is the
-            # cumsum before its first row, i.e. 0 — segment_id = cum[lo]
-            bounds = np.flatnonzero(cp[1:] == 1) + 1
-            cum = np.cumsum(cp, dtype=np.int64)
-            n = ts.shape[0]
-            for lo, hi in zip(
-                np.concatenate([[0], bounds]), np.concatenate([bounds, [n]])
-            ):
-                seg_ts, seg_vals = ts[lo:hi], values[lo:hi]
-                out["series_id"].append(sid)
-                out["segment_id"].append(int(cum[lo]))
-                out["n_points"].append(int(hi - lo))
-                out["t_min"].append(int(seg_ts[0]))
-                out["t_max"].append(int(seg_ts[-1]))
-                out["min_value"].append(float(np.min(seg_vals)))
-                out["max_value"].append(float(np.max(seg_vals)))
-                out["first_value"].append(float(seg_vals[0]))
-                out["last_value"].append(float(seg_vals[-1]))
-                out["blob"].append(encode_segment(seg_ts, seg_vals))
-                n_out += 1
-            if n_out >= flush_segments:
-                yield _emit(out)
-                out = {k: [] for k in _OUT_COLS}
-                n_out = 0
-        if n_out:
-            yield _emit(out)
-
-    schema = (
-        SEGMENT_SCHEMA
-        if key_type == "string"
-        else SEGMENT_SCHEMA.replace("series_id string", "series_id long", 1)
-    )
-    return joined.mapInArrow(run, schema)
-
-
-def roundtrip_summaries(segmented: DataFrame, bundles: int | None = None) -> DataFrame:
+def roundtrip_summaries(segmented: DataFrame) -> DataFrame:
     """Fused encode -> decode -> per-segment summary for codec-verification
     queries (gorilla_roundtrip): each segment is Gorilla-encoded and the BLOB
     is immediately decoded back, with the summary computed from the DECODED
     arrays — the same encode_segment/decode_segment calls the two-stage
     operator chain makes, minus the Arrow round-trip of every raw point back
-    to the JVM between the stages and the second shuffle (measured ~1 s of
-    pure serde at 1M points / 15k series). Output: one row per segment
-    (series_id, segment_id, n_points, t_min, t_max, min/max/first/last of
-    the decoded values); callers combine per series with sum/min/max +
-    struct-extreme semantics."""
+    to the JVM between the stages. Input (series_id, t, value, segment_id)
+    with segment ids non-decreasing in t (as ``assign_segments`` makes
+    them); output one row per segment (series_id, segment_id, n_points,
+    t_min, t_max, min/max/first/last of the decoded values). Callers
+    combine per series with sum/min/max + struct-extreme semantics."""
     from pysatl_cpd_spark.operators.gorilla import decode_batch
 
-    if bundles is None:
-        bundles = 2 * segmented.sparkSession.sparkContext.defaultParallelism
+    def emit(batch):
+        segs, blobs, counts = [], [], []
+        for _, a in batch:
+            los, his = _runs(a["segment_id"])
+            segs += [int(a["segment_id"][lo]) for lo in los]
+            values = a["value"].astype(np.float64, copy=False)
+            blobs += [encode_segment(a["t"][lo:hi], values[lo:hi]) for lo, hi in zip(los, his)]
+            counts.append(len(los))
+        # ONE vectorized decode_batch pass: per-blob decode_segment costs
+        # ~2.8 ms of anchor setup while decode_batch amortizes it to
+        # ~0.05 ms/blob (measured)
+        out = {k: [] for k in _SUMMARY_COLS}
+        for seg, (dts, dvals) in zip(segs, decode_batch(blobs)):
+            _summarize(out, seg, dts, dvals)
+        return counts, out
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["series_id", "segment_id", "t"], kind="mergesort")
-        sids = pdf["series_id"].to_numpy()
-        segs = pdf["segment_id"].to_numpy(dtype=np.int64)
-        ts = pdf["t"].to_numpy(dtype=np.int64)
-        values = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(sids)
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value",
-        )}
-        if n:
-            new_grp = np.empty(n, dtype=bool)
-            new_grp[0] = True
-            new_grp[1:] = (sids[1:] != sids[:-1]) | (segs[1:] != segs[:-1])
-            bounds = np.flatnonzero(new_grp[1:]) + 1
-            los = np.concatenate([[0], bounds])
-            his = np.concatenate([bounds, [n]])
-            # encode every segment, then ONE vectorized decode_batch pass:
-            # per-blob decode_segment costs ~2.8 ms of anchor setup while
-            # decode_batch amortizes it to ~0.05 ms/blob (measured)
-            blobs = [
-                encode_segment(ts[lo:hi], values[lo:hi])
-                for lo, hi in zip(los, his)
-            ]
-            for lo, (dts, dvals) in zip(los, decode_batch(blobs)):
-                out["series_id"].append(sids[lo])
-                out["segment_id"].append(int(segs[lo]))
-                out["n_points"].append(int(dts.shape[0]))
-                out["t_min"].append(int(dts[0]))
-                out["t_max"].append(int(dts[-1]))
-                out["min_value"].append(float(np.min(dvals)))
-                out["max_value"].append(float(np.max(dvals)))
-                out["first_value"].append(float(dvals[0]))
-                out["last_value"].append(float(dvals[-1]))
-        res = pd.DataFrame(out)
-        if not out["series_id"]:  # typed empty frame for Arrow
-            for c, dt in (
-                ("segment_id", "int64"), ("n_points", "int64"),
-                ("t_min", "int64"), ("t_max", "int64"),
-                ("min_value", "float64"), ("max_value", "float64"),
-                ("first_value", "float64"), ("last_value", "float64"),
-            ):
-                res[c] = res[c].astype(dt)
-        return res
-
-    pruned = (
-        segmented.select("series_id", "segment_id", "t", "value")
-        .withColumn(
-            "bundle",
-            F.pmod(F.xxhash64("series_id", "segment_id"), F.lit(bundles)),
-        )
-        # explicit repartition: exempt from AQE byte-coalescing (cpd._bucketed)
-        .repartition(bundles, "bundle")
-    )
-    return pruned.groupBy("bundle").applyInPandas(
-        run,
-        "series_id string, segment_id long, n_points long, t_min long, "
-        "t_max long, min_value double, max_value double, "
-        "first_value double, last_value double",
+    return map_series(
+        segmented, ["series_id"], ["t", "value", "segment_id"], emit,
+        _SUMMARY_SCHEMA,
     )
 
 
@@ -374,55 +143,45 @@ def compact_segments(encoded: DataFrame, min_points: int = 4096) -> DataFrame:
     of a series whose point counts fall below ``min_points`` are decoded,
     concatenated in time order, and re-encoded as one blob, greedily until
     each output segment reaches the floor (the final segment of a series may
-    stay smaller). Output schema == SEGMENT_SCHEMA with ``segment_id``
-    renumbered densely; summaries are recomputed from the merged points, so
+    stay smaller). Output schema == encode_segments_colocated's, with
+    ``segment_id`` renumbered densely; summaries are recomputed from the merged points, so
     compact(decode) == decode — the roundtrip invariant is preserved and
-    pytest-asserted. Runs per-series in a grouped UDF over the (tiny)
-    segment-summary table; decode/encode are the vectorized batch kernels,
+    pytest-asserted. Each series' blobs, ordered by ``t_min``, are one
+    series of the runner; decode/encode are the vectorized batch kernels,
     so compaction cost is O(points) numpy, not per-point Python."""
     from pysatl_cpd_spark.operators.gorilla import decode_batch
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t_min")
-        decoded = decode_batch([bytes(b) for b in pdf["blob"]])
-        out = {k: [] for k in (
-            "series_id", "segment_id", "n_points", "t_min", "t_max",
-            "min_value", "max_value", "first_value", "last_value", "blob",
-        )}
-        acc_ts: list = []
-        acc_vals: list = []
+    def emit(batch):
+        counts = []
+        out = {k: [] for k in (*_SUMMARY_COLS, "blob")}
+        for _, a in batch:
+            n_before = len(out["blob"])
+            acc: list = []
 
-        def flush() -> None:
-            if not acc_ts:
-                return
-            ts = np.concatenate(acc_ts)
-            vals = np.concatenate(acc_vals)
-            out["series_id"].append(pdf["series_id"].iloc[0])
-            out["segment_id"].append(len(out["segment_id"]))
-            out["n_points"].append(len(ts))
-            out["t_min"].append(int(ts[0]))
-            out["t_max"].append(int(ts[-1]))
-            out["min_value"].append(float(np.min(vals)))
-            out["max_value"].append(float(np.max(vals)))
-            out["first_value"].append(float(vals[0]))
-            out["last_value"].append(float(vals[-1]))
-            out["blob"].append(encode_segment(ts, vals))
-            acc_ts.clear()
-            acc_vals.clear()
+            def flush() -> None:
+                if not acc:
+                    return
+                ts = np.concatenate([t for t, _ in acc])
+                vals = np.concatenate([v for _, v in acc])
+                _summarize(out, len(out["blob"]) - n_before, ts, vals)
+                out["blob"].append(encode_segment(ts, vals))
+                acc.clear()
 
-        n_acc = 0
-        for ts, vals in decoded:
-            acc_ts.append(ts)
-            acc_vals.append(vals)
-            n_acc += len(ts)
-            if n_acc >= min_points:
-                flush()
-                n_acc = 0
-        flush()
-        return pd.DataFrame(out)
+            n_acc = 0
+            for ts, vals in decode_batch([bytes(b) for b in a["blob"]]):
+                acc.append((ts, vals))
+                n_acc += len(ts)
+                if n_acc >= min_points:
+                    flush()
+                    n_acc = 0
+            flush()
+            counts.append(len(out["blob"]) - n_before)
+        return counts, out
 
-    pruned = encoded.select("series_id", "t_min", "blob")
-    return pruned.groupBy("series_id").applyInPandas(run, SEGMENT_SCHEMA)
+    return map_series(
+        encoded.select("series_id", F.col("t_min").alias("t"), "blob"),
+        ["series_id"], ["t", "blob"], emit, _SEGMENT_SCHEMA,
+    )
 
 
 def decode_segments(encoded: DataFrame) -> DataFrame:

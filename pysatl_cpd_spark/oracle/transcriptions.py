@@ -679,7 +679,8 @@ def knn_multivariate_rows(sf_dir: str, k: int, thr: float, indent: float) -> lis
 
 def expected_count_rows(sf_dir: str) -> list[tuple[str, int]]:
     """(series_id, n_change_points) for cpd_detect_counts (DropDetector 0.3);
-    counts include every localization, mirroring detect_counts (no < n cut)."""
+    counts include every localization, mirroring detect_counts_lockstep (no
+    < n cut)."""
     series = events_series_arrays(sf_dir)
     rows = []
     for sid in series:

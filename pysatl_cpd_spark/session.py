@@ -73,7 +73,7 @@ def get_spark(
     # inside a worker only adds contention)
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    # detector classes are cloudpickled BY REFERENCE into grouped-map UDFs, so
+    # detector classes are cloudpickled BY REFERENCE into the Arrow UDFs, so
     # Python workers must import pysatl_cpd_spark themselves; put the package
     # parent on PYTHONPATH before the JVM launches (workers inherit it) so
     # jobs work from any cwd — on a real cluster --py-files serves this role
@@ -113,6 +113,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # keep bucketed scans bucketed: Spark otherwise de-buckets any scan
+        # whose consumers require no distribution, and mapInArrow requires
+        # none, so a bucketed series table would be read in file splits and
+        # series split across partitions. No benchmark workload reads one.
+        .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

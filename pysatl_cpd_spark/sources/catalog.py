@@ -94,11 +94,14 @@ def write_bucketed_series(
     path: str | None = None,
 ) -> DataFrame:
     """Persist a keyed series table bucketed + sorted by its group key so
-    every downstream groupBy/applyInPandas on that key is SHUFFLE-FREE: the
-    bucketed scan already satisfies the hash-distribution requirement, so
-    the detector stage reads straight into Python workers with zero
-    exchanges (plan-asserted in tests). This is the 100 TB co-location
-    story — pay the shuffle once at ingest, never again per detection run.
+    the per-series runner (operators/colocated.py) reads it SHUFFLE-FREE:
+    the bucketed scan hash-partitions on the key, so ``colocate`` adds no
+    exchange and the detector stage reads straight into Python workers
+    (plan-asserted in tests). The session keeps such scans bucketed
+    (session.get_spark); a de-bucketed scan reads each file as its own
+    split and would split series across partitions. This is the 100 TB
+    co-location story — pay the shuffle once at ingest, never again per
+    detection run.
     Size ``n_buckets`` to the executor count. ``path`` makes it an external
     table at that location (session-safe: the default managed location
     outlives the in-memory catalog and collides on re-create). Returns the
@@ -124,7 +127,7 @@ def write_bucketed_series_coded(
     INGEST (operators/keycompact.py): factorize ``series_id`` once into a
     deterministic int64 ``code``, store the points table bucketed + sorted
     BY THE CODE, and persist the (series_id, code) dim table alongside.
-    Downstream zero-exchange detect/encode then run ``key_type="long"`` —
+    Downstream zero-exchange detect/encode then carry the ``long`` key —
     no repeated string column ever crosses the Arrow socket on any later
     detection run, and the factorization join is amortized into the one
     ingest shuffle a bucketed table pays anyway. Returns ``(points, dim)``

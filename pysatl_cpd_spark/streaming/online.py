@@ -1,7 +1,9 @@
 """Streaming online CPD: applyInPandasWithState keyed by series.
 
-The batch engine runs online detectors as an ordered scan inside a grouped
-UDF (operators/cpd.detect_online). For unbounded streams the same kernel runs
+The batch engine runs online detectors as an ordered scan over each
+complete series on the co-located runner (operators/cpd.py,
+``detect_lockstep_colocated(series, sequential(factory))``). For unbounded
+streams the same kernel runs
 under ``applyInPandasWithState``: state = the detector's pickled internals
 (training buffer, run-length posterior, likelihood posterior-parameter
 arrays, current time), one state row per series key.

@@ -23,10 +23,13 @@ from pysatl_cpd_spark.detectors import (  # noqa: E402
     HeuristicGaussianVsExponential,
     ThresholdDetector,
 )
-from pysatl_cpd_spark.operators.cpd import detect_online  # noqa: E402
+from pysatl_cpd_spark.operators.cpd import (  # noqa: E402
+    detect_lockstep_colocated,
+    sequential,
+)
 from pysatl_cpd_spark.operators.metrics import confusion_matrix  # noqa: E402
 from pysatl_cpd_spark.operators.rollup import rollup_tier  # noqa: E402
-from pysatl_cpd_spark.operators.segments import encode_segments_adaptive  # noqa: E402
+from pysatl_cpd_spark.operators.segments import encode_segments_colocated  # noqa: E402
 from pysatl_cpd_spark.operators.series import turn_rate_series  # noqa: E402
 from pysatl_cpd_spark.plans.lineage import CheckpointedJob, StageSpec  # noqa: E402
 from pysatl_cpd_spark.session import get_spark  # noqa: E402
@@ -47,9 +50,9 @@ def run(workdir: str) -> None:
         return turn_rate_series(res["generate"].df.drop("is_cp"))
 
     def detect_stage(res):
-        return detect_online(
+        return detect_lockstep_colocated(
             res["series"].df,
-            lambda: BayesianLinearHeuristic(
+            sequential(lambda: BayesianLinearHeuristic(
                 lambda: BayesianOnlineDetector(
                     ConstantHazard(1.0 / (1.0 - 0.5 ** (1.0 / 500))),
                     HeuristicGaussianVsExponential(),
@@ -59,11 +62,11 @@ def run(workdir: str) -> None:
                 ),
                 500,
                 250,
-            ),
+            )),
         )
 
     def segments_stage(res):
-        return encode_segments_adaptive(res["series"].df, res["detect"].df)
+        return encode_segments_colocated(res["series"].df, res["detect"].df)
 
     def rollup_stage(res):
         return rollup_tier(
@@ -85,7 +88,7 @@ def run(workdir: str) -> None:
             outputs={"conv_id", "turn_idx", "role", "text", "tool", "ts", "is_cp"},
         ),
         StageSpec(
-            # bucketed by series: the detect/segments groupBys downstream
+            # bucketed by series: the detect/segments runners downstream
             # read this stage SHUFFLE-FREE, on first run and on resume
             "series",
             series_stage,

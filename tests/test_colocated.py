@@ -1,10 +1,10 @@
-"""Streaming colocated runner (operators/colocated.py): the contract guard,
-and parity of the sorted-batch-stream paths under adversarial batch/flush
-sizes (series spanning many Arrow batches; many kernel flushes per
-partition)."""
+"""Streaming colocated runner (operators/colocated.py): the co-location
+decision, and parity of the sorted-batch-stream paths under adversarial
+batch/flush sizes (series spanning many Arrow batches; many kernel flushes
+per partition)."""
 
 import numpy as np
-import pytest
+from _reference import detect_ref, encode_ref
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -23,27 +23,12 @@ def _series_df(spark, n_series=6, n_pts=120, parts=4):
     ).repartition(parts, "series_id")
 
 
-def test_assert_colocated_guard(spark):
-    from pysatl_cpd_spark.operators.colocated import assert_colocated
-
-    good = _series_df(spark)
-    assert_colocated(good)  # must not raise
-
-    bad = good.repartition(4)  # round-robin: series span partitions
-    with pytest.raises(ValueError, match="co-location contract violated"):
-        assert_colocated(bad)
-
-
 def test_detect_colocated_multi_batch_multi_flush_parity(spark):
     """Force every series across many Arrow batches (tiny
     maxRecordsPerBatch) and many kernel flushes per partition (tiny
-    flush_points): output must equal the salted lockstep dispatch exactly,
-    and validate=True must pass on contract-satisfying input."""
+    flush_points): output must equal the local kernel loop exactly."""
     from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 
     series = _series_df(spark)
     fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
@@ -54,23 +39,17 @@ def test_detect_colocated_multi_batch_multi_flush_parity(spark):
         got = {
             (r.series_id, r.change_point)
             for r in detect_lockstep_colocated(
-                series, fac, flush_points=50, validate=True
+                series, fac, flush_points=50
             ).collect()
         }
     finally:
         spark.conf.set(key, old)
-    want = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac).collect()
-    }
+    want = detect_ref(series, fac)
     assert got == want and len(got) >= 1
 
 
 def test_encode_colocated_multi_batch_multi_flush_parity(spark):
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
     series = _series_df(spark)
     cps = series.filter(F.col("t") % 37 == 3).select(
@@ -90,14 +69,10 @@ def test_encode_colocated_multi_batch_multi_flush_parity(spark):
     old = spark.conf.get(conf_key)
     try:
         spark.conf.set(conf_key, "13")
-        got = key_rows(
-            encode_segments_colocated(
-                series, cps, flush_segments=3, validate=True
-            )
-        )
+        got = key_rows(encode_segments_colocated(series, cps, flush_points=50))
     finally:
         spark.conf.set(conf_key, old)
-    assert got == key_rows(encode_segments_adaptive(series, cps))
+    assert got == encode_ref(series, cps)
 
 
 @settings(max_examples=40, deadline=None)
@@ -149,3 +124,110 @@ def test_iter_sorted_series_random_batch_splits(seed, n_series, int_keys):
         for sid, cols in iter_sorted_series(batches, ("t", "value"))
     }
     assert got == want
+
+
+def _events(spark):
+    """A small events table: (event_id, ts, user_id, value)."""
+    return spark.range(600).select(
+        F.col("id").alias("event_id"),
+        F.timestamp_seconds(F.col("id") * 7).alias("ts"),
+        (F.col("id") % 9).alias("user_id"),
+        (F.col("id") % 13).cast("double").alias("value"),
+    )
+
+
+def _kept(df, keys=("series_id",)):
+    from pysatl_cpd_spark.operators.colocated import colocate
+
+    return colocate(df, keys) is df
+
+
+def test_colocate_keeps_hash_partitioned_inputs(spark):
+    """Inputs whose plan already hash-partitions on exactly the key get no
+    new exchange: the perfbench rollup shape (repartition on conv_id, rate
+    window, alias to series_id), the ``events_series(colocate=n)`` frame the
+    cpd_* queries read, and the flagship's cache + broadcast left-semi gate
+    while the cache is still unfilled (AQE reports UnknownPartitioning for
+    it; the check reads the plan that fills the cache)."""
+    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
+    from pysatl_cpd_spark.operators.series import events_series, turn_rate_series
+    from pysatl_cpd_spark.sources.transcripts import transcripts_table
+
+    tr = transcripts_table(
+        spark, n_conversations=8, avg_turns=60, seed=5, with_text=False
+    )
+    assert _kept(
+        turn_rate_series(tr.select("conv_id", "turn_idx", "ts").repartition(4, "conv_id"))
+    )
+    assert _kept(events_series(_events(spark), colocate=4))
+
+    cached = turn_rate_series(tr).repartition(4, "series_id").cache()
+    try:
+        alarmed = cusum_prefilter(cached, k=0.05, h=2.0)
+        gated = cached.join(F.broadcast(alarmed), "series_id", "left_semi")
+        exec_plan = gated._jdf.queryExecution().executedPlan()
+        assert "UnknownPartitioning" in exec_plan.inputPlan().outputPartitioning().toString()
+        assert _kept(gated) and _kept(cached)
+    finally:
+        cached.unpersist()
+
+
+def test_colocate_repartitions_everything_else(spark):
+    """Window-only series (the window's own exchange is one AQE may
+    coalesce), unpartitioned and round-robin frames, and a partitioning on a
+    strict subset of the keys all get ``repartition(n, *keys)``, after which
+    every series sits inside one partition. (Spark drops that repartition
+    when it equals the exchange below it, as for the window here when
+    shuffle partitions == default parallelism.)"""
+    from pysatl_cpd_spark.operators.colocated import colocate
+    from pysatl_cpd_spark.operators.series import events_series
+
+    events = _events(spark)
+    colocated = events_series(events, colocate=4)
+    cases = [
+        (events_series(events), ("series_id",)),
+        (_series_df(spark).repartition(4), ("series_id",)),
+        (spark.createDataFrame([("a", 0, 1.0)], "series_id string, t long, value double"), ("series_id",)),
+        (colocated.withColumn("chunk_id", F.col("t") % 3), ("series_id", "chunk_id")),
+    ]
+    for df, keys in cases:
+        assert not _kept(df, keys)
+        fixed = colocate(df, keys)
+        spans = (
+            fixed.withColumn("_pid", F.spark_partition_id())
+            .groupBy(*keys)
+            .agg(F.countDistinct("_pid").alias("n"))
+            .filter("n > 1")
+            .count()
+        )
+        assert spans == 0
+
+
+def test_map_series_composite_keys_and_list_columns(spark):
+    """Composite keys arrive as tuples, list columns as (n, dim) matrices,
+    each group ordered by t; the output key keeps the input key's type."""
+    from pysatl_cpd_spark.operators.colocated import map_series
+
+    rows = [
+        (k, w, t, [float(t), float(-t)])
+        for k in (3, 9) for w in (0, 1) for t in range(5 * w, 5 * w + 4)
+    ]
+    df = spark.createDataFrame(
+        rows[::-1], "series_id long, window_id long, t long, vec array<double>"
+    )
+
+    def emit(batch):
+        return [1] * len(batch), {
+            "window_id": [k[1] for k, _ in batch],
+            "first": [float(a["vec"][0, 0]) for _, a in batch],
+            "dims": [int(a["vec"].shape[1]) for _, a in batch],
+            "ordered": [bool((a["t"][1:] > a["t"][:-1]).all()) for _, a in batch],
+        }
+
+    out = map_series(
+        df, ["series_id", "window_id"], ["t", "vec"], emit,
+        "window_id long, first double, dims int, ordered boolean",
+    )
+    assert dict(out.dtypes)["series_id"] == "bigint"
+    got = {tuple(r) for r in out.collect()}
+    assert got == {(k, w, float(5 * w), 2, True) for k in (3, 9) for w in (0, 1)}

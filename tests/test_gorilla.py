@@ -1,6 +1,7 @@
 """Gorilla codec: lossless round-trip property (hypothesis) + edge cases."""
 
 import numpy as np
+from _reference import encode_ref
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -129,7 +130,7 @@ def test_compact_segments_roundtrip(spark):
     from pysatl_cpd_spark.operators.segments import (
         compact_segments,
         decode_segments,
-        encode_segments_adaptive,
+        encode_segments_colocated,
     )
 
     rng = np.random.default_rng(11)
@@ -143,7 +144,7 @@ def test_compact_segments_roundtrip(spark):
     cps = series.filter(F.col("t") % 50 == 3).select(
         "series_id", F.col("t").alias("change_point")
     )
-    encoded = encode_segments_adaptive(series, cps).cache()
+    encoded = encode_segments_colocated(series, cps).cache()
     compacted = compact_segments(encoded, min_points=200).cache()
 
     n_before = encoded.count()
@@ -165,14 +166,12 @@ def test_compact_segments_roundtrip(spark):
 
 def test_encode_colocated_matches_adaptive(spark):
     """encode_segments_colocated over explicitly repartitioned series must
-    emit byte-identical rows (blob included) to encode_segments_adaptive,
-    and add no exchange on the series side beyond the caller's repartition."""
+    emit byte-identical rows (blob included) to a local split-and-encode
+    loop, and add no exchange on the series side beyond the
+    caller's repartition."""
     from pyspark.sql import functions as F
 
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
     rng = np.random.default_rng(5)
     rows = []
@@ -204,19 +203,16 @@ def test_encode_colocated_matches_adaptive(spark):
     assert plan.count("Exchange hashpartitioning") <= base.count(
         "Exchange hashpartitioning"
     ) + 2, plan[:800]
-    assert key(col) == key(encode_segments_adaptive(series, cps))
+    assert key(col) == encode_ref(series, cps)
 
 
 def test_encode_colocated_edge_shapes(spark):
-    """Edge parity vs adaptive: no change points at all; a marker on a
-    series' first row; back-to-back markers (single-point segments); more
-    partitions than series (some partitions empty)."""
+    """Edge parity vs the local encode loop: no change points at all;
+    a marker on a series' first row; back-to-back markers (single-point
+    segments); more partitions than series (some partitions empty)."""
     from pyspark.sql import functions as F
 
-    from pysatl_cpd_spark.operators.segments import (
-        encode_segments_adaptive,
-        encode_segments_colocated,
-    )
+    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
     rows = []
     for s, ts_list in (
@@ -248,5 +244,5 @@ def test_encode_colocated_edge_shapes(spark):
         if not markers:
             cps = cps.filter(F.col("change_point") > 0)  # truly empty
         got = key(encode_segments_colocated(series, cps))
-        want = key(encode_segments_adaptive(series, cps))
+        want = {r[:5] + r[7:] for r in encode_ref(series, cps)}
         assert got == want, (markers, got ^ want)

@@ -1,6 +1,7 @@
 """Per-series metrics instrumentation of the detection operator."""
 
 import numpy as np
+from _reference import detect_ref
 
 from pysatl_cpd_spark.detectors import (
     ArgmaxLocalizer,
@@ -9,7 +10,7 @@ from pysatl_cpd_spark.detectors import (
     GaussianConjugate,
     ThresholdDetector,
 )
-from pysatl_cpd_spark.operators.cpd import detect_online, detect_online_instrumented
+from pysatl_cpd_spark.operators.cpd import detect_colocated_instrumented, sequential
 
 
 def test_instrumented_matches_plain(spark):
@@ -28,11 +29,8 @@ def test_instrumented_matches_plain(spark):
         ThresholdDetector(0.04),
         ArgmaxLocalizer(),
     )
-    plain = {
-        (r["series_id"], r["change_point"])
-        for r in detect_online(df, factory).collect()
-    }
-    inst = detect_online_instrumented(df, factory).collect()
+    plain = detect_ref(df, factory)
+    inst = detect_colocated_instrumented(df, sequential(factory)).collect()
     from_inst = {
         (r["series_id"], cp) for r in inst for cp in r["change_points"]
     }
@@ -43,10 +41,10 @@ def test_instrumented_matches_plain(spark):
 
 
 def test_instrumented_bucketed_parity(spark):
-    """The bucketed dispatch (many series per grouped-map call) emits the
-    same per-series rows as per-series grouping — every column except the
-    dispatch-dependent kernel_ms timing — across bucket counts including
-    buckets that force series to share a UDF call."""
+    """The instrumented emit (many series per mapInArrow call) emits the
+    same per-series rows — every column except the dispatch-dependent
+    kernel_ms timing and partition_id — whatever the input partitioning,
+    including one partition where every series shares a call."""
     rows = []
     for seed in range(6):
         np.random.seed(seed)
@@ -72,11 +70,14 @@ def test_instrumented_bucketed_parity(spark):
             for r in collected
         }
 
+    fac = sequential(factory)
     per_series = key_rows(
-        detect_online_instrumented(df, factory, n_buckets=0).collect()
+        detect_colocated_instrumented(df.repartition(6, "series_id"), fac).collect()
     )
-    for nb in (2, 13):
-        got = detect_online_instrumented(df, factory, n_buckets=nb).collect()
+    for parts in (1, 2, 13):
+        got = detect_colocated_instrumented(
+            df.repartition(parts, "series_id"), fac
+        ).collect()
         assert key_rows(got) == per_series and len(got) == 6
         assert all(r["kernel_ms"] > 0 for r in got)
 
@@ -128,8 +129,8 @@ def test_colocated_instrumented_matches_plain_and_reports_lineage(spark):
 
 
 def test_colocated_instrumented_long_keys(spark):
-    """key_type='long' (the compacted path) emits int64 series ids with the
-    same per-series metrics."""
+    """A long key (the compacted path) passes through: int64 series ids in,
+    int64 series ids out, with the same per-series metrics."""
     from pysatl_cpd_spark.detectors.cusum import LockstepCusum
     from pysatl_cpd_spark.operators.cpd import detect_colocated_instrumented
 
@@ -142,7 +143,7 @@ def test_colocated_instrumented_long_keys(spark):
         rows, "series_id long, t long, value double"
     ).repartition(2, "series_id")
     fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
-    inst = detect_colocated_instrumented(df, fac, key_type="long").collect()
+    inst = detect_colocated_instrumented(df, fac).collect()
     assert {r.series_id for r in inst} == {3, 7}
     assert all(r.n_points == 160 for r in inst)
     assert sum(r.n_change_points for r in inst) > 0

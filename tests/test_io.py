@@ -2,6 +2,7 @@
 changepoints.csv per dataset directory)."""
 
 import numpy as np
+from _reference import detect_ref
 from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.sources.io import read_labeled_datasets, write_labeled_dataset
@@ -76,12 +77,12 @@ def test_catalog_parquet_roundtrip_and_iceberg_gate(spark, tmp_path):
 
 def test_bucketed_series_detection_is_shuffle_free(spark, tmp_path):
     """Co-location law: detection over a series table bucketed by its group
-    key runs with ZERO exchanges (the ingest shuffle is paid once), and the
-    results equal the unbucketed path. ``n_buckets=0`` is the explicit
-    opt-out of UDF salt-bucketing: the caller asserts storage co-location,
-    so detection groups by series_id directly instead of re-shuffling."""
+    key runs with ZERO exchanges (the ingest shuffle is paid once: the
+    bucketed scan already hash-partitions on series_id, so the runner adds
+    none), and the results equal the sequential kernel run per series in a
+    local loop."""
     from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated, sequential
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series
 
@@ -93,26 +94,22 @@ def test_bucketed_series_detection_is_shuffle_free(spark, tmp_path):
     )
 
     factory = lambda: CusumDetector(k=1.0, h=10.0)  # noqa: E731
-    out_b = detect_offline(bucketed, factory, n_buckets=0)
+    out_b = detect_lockstep_colocated(bucketed, sequential(factory))
     plan = out_b._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 0, plan[:500]
 
     got_b = {(r.series_id, r.change_point) for r in out_b.collect()}
-    got_u = {(r.series_id, r.change_point) for r in detect_offline(series, factory).collect()}
-    assert got_b == got_u and got_b
+    assert got_b == detect_ref(series, factory) and got_b
 
 
 def test_bucketed_table_feeds_colocated_lockstep(spark, tmp_path):
     """The full production detect plan: bucket-ingest the series table once
     (write_bucketed_series), then run the zero-exchange LOCKSTEP dispatch
     straight off the bucketed scan — no exchange anywhere in the detection
-    plan, rows equal to the salted dispatch. (Companion to the sequential
-    n_buckets=0 law above, for the batched kernel.)"""
+    plan, rows equal to the local kernel loop. (Companion to the
+    sequential-kernel law above, for the batched kernel.)"""
     from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series
 
@@ -130,11 +127,51 @@ def test_bucketed_table_feeds_colocated_lockstep(spark, tmp_path):
     assert plan.count("Exchange") == 0, plan[:500]
 
     got = {(r.series_id, r.change_point) for r in out.collect()}
-    want = {
+    assert got == detect_ref(series, fac) and got
+
+
+def test_bucketed_table_with_many_files_per_bucket(spark, tmp_path):
+    """A bucketed table written from 6 input partitions into 4 buckets
+    holds 24 files, so each bucket is several files. Spark de-buckets a
+    scan whose consumers require no distribution, and mapInArrow requires
+    none: the files are then read as independent splits and series split
+    across partitions. The session keeps bucketed scans bucketed, so
+    detection off the table equals detection after an explicit
+    ``repartition(4, "series_id")``, with zero exchanges."""
+    from pysatl_cpd_spark.detectors.cusum import LockstepCusum
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
+    from pysatl_cpd_spark.sources.catalog import write_bucketed_series
+
+    rng = np.random.default_rng(40)
+    rows = []
+    for s in range(40):
+        levels = np.repeat(rng.normal(0.0, 3.0, 8), 250)
+        values = levels + rng.normal(0.0, 1.0, 2000)
+        rows += [(f"s{s:02d}", t, float(v)) for t, v in enumerate(values)]
+    series = spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).repartition(6)
+    table = write_bucketed_series(
+        series, "series_bucketed_multifile_t", n_buckets=4,
+        path=str(tmp_path / "series_mf"),
+    )
+    assert len(table.inputFiles()) > 4
+
+    fac = lambda: LockstepCusum(k=0.05, h=2.0)  # noqa: E731
+    out = detect_lockstep_colocated(table, fac)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 0, plan[:500]
+    got = {(r.series_id, r.change_point) for r in out.collect()}
+    # the repartition matches the bucketing, so Spark plans it away and the
+    # scan decides co-location on both sides; the local loop does not
+    # depend on the scan at all
+    repartitioned = {
         (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac, n_buckets=4).collect()
+        for r in detect_lockstep_colocated(
+            table.repartition(4, "series_id"), fac
+        ).collect()
     }
-    assert got == want and got
+    assert got == repartitioned == detect_ref(table, fac) and got
 
 
 def test_load_table_multi_format(spark, tmp_path):
@@ -179,15 +216,12 @@ def test_write_table_format_roundtrip(spark, tmp_path):
 
 def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
     """write_bucketed_series_coded: the dense-int factorization paid at
-    ingest — the coded bucketed scan feeds key_type='long' colocated detect
+    ingest — the coded bucketed scan feeds the long-keyed colocated detect
     with ZERO exchanges, and after the broadcast re-attach the rows equal
-    the string-keyed path. Codes must be stable across re-reads (stored,
-    not session-pinned)."""
+    the string-keyed kernel loop. Codes must be stable across re-reads
+    (stored, not session-pinned)."""
     from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import (
-        detect_lockstep_colocated,
-        detect_online_lockstep,
-    )
+    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.keycompact import attach_series_id
     from pysatl_cpd_spark.operators.series import events_series
     from pysatl_cpd_spark.sources.catalog import write_bucketed_series_coded
@@ -205,7 +239,7 @@ def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
     assert sorted(dmap.values()) == list(range(len(dmap)))
 
     fac = lambda: LockstepCusum(k=1.0, h=10.0)  # noqa: E731
-    out = detect_lockstep_colocated(points, fac, key_type="long")
+    out = detect_lockstep_colocated(points, fac)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 0, plan[:500]
 
@@ -213,11 +247,7 @@ def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
         (r.series_id, r.change_point)
         for r in attach_series_id(out, dim).collect()
     }
-    want = {
-        (r.series_id, r.change_point)
-        for r in detect_online_lockstep(series, fac, n_buckets=4).collect()
-    }
-    assert got == want and got
+    assert got == detect_ref(series, fac) and got
 
 
 def test_bucketed_coded_write_rejects_append(spark, tmp_path):

@@ -21,7 +21,7 @@ CHILD = """
 import json, sys
 from pysatl_cpd_spark.session import get_spark
 from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
-from pysatl_cpd_spark.operators.cpd import detect_online_lockstep
+from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
 from pysatl_cpd_spark.operators.series import turn_rate_series
 from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
@@ -36,7 +36,7 @@ factory = lambda: LockstepLinearBOCPD(
     threshold=0.04, start_after=500, prep=250)
 cps = sorted(
     (r.series_id, int(r.change_point))
-    for r in detect_online_lockstep(series, factory, n_buckets=8).collect()
+    for r in detect_lockstep_colocated(series, factory).collect()
 )
 print("RESULT:" + json.dumps(cps))
 """

@@ -250,7 +250,6 @@ def test_detect_counts_lockstep_offline_operator(spark):
         for r in detect_counts_lockstep(
             df,
             lambda: LockstepBayesianOffline(learning_steps=20, mode="detect"),
-            n_buckets=3,
         ).collect()
     }
     assert got == want

@@ -11,7 +11,11 @@ from pysatl_cpd_spark.detectors import (
     GaussianConjugate,
     ThresholdDetector,
 )
-from pysatl_cpd_spark.operators.cpd import detect_counts, detect_online
+from pysatl_cpd_spark.operators.cpd import (
+    detect_counts_lockstep,
+    detect_lockstep_colocated,
+    sequential,
+)
 
 SEEDS = [42, 43, 44, 45, 46]
 
@@ -50,7 +54,7 @@ def null_df(spark):
 
 
 def test_localize_mode_all_seeds(spark, shift_df):
-    got = detect_online(shift_df, _factory).toPandas()
+    got = detect_lockstep_colocated(shift_df, sequential(_factory)).toPandas()
     by_series = got.groupby("series_id")["change_point"].apply(list).to_dict()
     for seed in SEEDS:
         cps = by_series.get(f"shift{seed}", [])
@@ -61,7 +65,7 @@ def test_localize_mode_all_seeds(spark, shift_df):
 def test_detect_mode_all_seeds(spark, shift_df):
     got = {
         r["series_id"]: r["n_change_points"]
-        for r in detect_counts(shift_df, _factory).collect()
+        for r in detect_counts_lockstep(shift_df, sequential(_factory)).collect()
     }
     assert all(got[f"shift{seed}"] >= 1 for seed in SEEDS)
 
@@ -69,7 +73,7 @@ def test_detect_mode_all_seeds(spark, shift_df):
 def test_null_data_quiet(spark, null_df):
     got = {
         r["series_id"]: r["n_change_points"]
-        for r in detect_counts(null_df, _factory).collect()
+        for r in detect_counts_lockstep(null_df, sequential(_factory)).collect()
     }
     # reference budget: no more than a couple of false alarms on 500 points
     assert all(got.get(f"null{seed}", 0) <= 2 for seed in SEEDS)
@@ -78,5 +82,5 @@ def test_null_data_quiet(spark, null_df):
 def test_no_premature_detection(spark, shift_df):
     """Reference 'CP cannot be detected beforehand' law: nothing before the
     true change point minus tolerance."""
-    got = detect_online(shift_df, _factory).toPandas()
+    got = detect_lockstep_colocated(shift_df, sequential(_factory)).toPandas()
     assert (got["change_point"] >= 225).all()

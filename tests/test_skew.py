@@ -3,10 +3,11 @@ conversation must (a) fan out over chunks and (b) stitch without duplicate or
 lost change points at chunk seams."""
 
 import numpy as np
+from _reference import detect_ref
 from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.detectors import CusumDetector
-from pysatl_cpd_spark.operators.cpd import detect_offline, detect_offline_chunked
+from pysatl_cpd_spark.operators.cpd import detect_offline_chunked
 from pysatl_cpd_spark.sources.transcripts import (
     synthesize_transcripts,
     transcripts_table,
@@ -25,9 +26,7 @@ def test_chunked_detection_on_hot_series(spark):
     df = spark.createDataFrame(rows, "series_id string, t long, value double")
 
     algo = lambda: CusumDetector(k=1.5, h=20.0)  # noqa: E731
-    plain = {
-        (r["series_id"], r["change_point"]) for r in detect_offline(df, algo).collect()
-    }
+    plain = detect_ref(df, algo)
     chunked = {
         (r["series_id"], r["change_point"])
         for r in detect_offline_chunked(df, algo, chunk_size=2000, overlap=400).collect()

@@ -8,9 +8,10 @@ from pyspark.sql import functions as F
 
 from pysatl_cpd_spark.detectors import BayesianOffline, CusumDetector
 from pysatl_cpd_spark.operators.cpd import (
-    detect_offline,
+    detect_lockstep_colocated,
     detect_offline_chunked,
     detect_windowed,
+    sequential,
 )
 from pysatl_cpd_spark.operators.gapfill import gap_fill
 from pysatl_cpd_spark.operators.metrics import confusion_matrix, result_diff
@@ -18,8 +19,13 @@ from pysatl_cpd_spark.operators.rollup import DEFAULT_TIERS, apply_retention, ro
 from pysatl_cpd_spark.operators.segments import (
     assign_segments,
     decode_segments,
-    encode_segments,
+    encode_segments_colocated,
 )
+
+
+def detect_sequential(df, factory):
+    """Whole-series detection with a per-series kernel."""
+    return detect_lockstep_colocated(df, sequential(factory))
 
 
 def make_series_df(spark, seeds=(1, 2, 3), n=500, cp=250):
@@ -38,7 +44,7 @@ class TestDetectOverGroups:
         df = make_series_df(spark)
         got = {
             r["series_id"]: r["change_point"]
-            for r in detect_offline(df, BayesianOffline).collect()
+            for r in detect_sequential(df, BayesianOffline).collect()
         }
         for seed in (1, 2, 3):
             np.random.seed(seed)
@@ -57,7 +63,7 @@ class TestDetectOverGroups:
         )
         rows = [("s", 1000 + 2 * t, float(v)) for t, v in enumerate(data)]
         df = spark.createDataFrame(rows, "series_id string, t long, value double")
-        got = detect_offline(df, BayesianOffline).collect()[0]["change_point"]
+        got = detect_sequential(df, BayesianOffline).collect()[0]["change_point"]
         local_cp = BayesianOffline().localize(data)[0]
         assert got == 1000 + 2 * local_cp
 
@@ -65,7 +71,7 @@ class TestDetectOverGroups:
         df = make_series_df(spark, seeds=(7,))
         plain = {
             r["change_point"]
-            for r in detect_offline(df, lambda: CusumDetector(k=1.0, h=10.0)).collect()
+            for r in detect_sequential(df, lambda: CusumDetector(k=1.0, h=10.0)).collect()
         }
         chunked = {
             r["change_point"]
@@ -165,7 +171,7 @@ class TestSegments:
             [("s1", 250)], "series_id string, change_point long"
         )
         seg = assign_segments(df, cps)
-        enc = encode_segments(seg)
+        enc = encode_segments_colocated(df, cps)
         assert enc.count() == 2
         dec = decode_segments(enc).toPandas().sort_values("t").reset_index(drop=True)
         orig = df.toPandas().sort_values("t").reset_index(drop=True)
@@ -220,11 +226,10 @@ class TestMetrics:
 
 
 def test_cusum_prefilter_gating_is_exact(spark):
-    """The JVM pre-filter is an exact gate: detect_offline over the flagged
+    """The JVM pre-filter is an exact gate: detection over the flagged
     subset produces the identical CP set as over all series (unflagged series
     provably alarm nowhere — same statistic, same learned mu)."""
     from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
     from pysatl_cpd_spark.operators.cusum import cusum_prefilter
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
@@ -233,13 +238,13 @@ def test_cusum_prefilter_gating_is_exact(spark):
     series = turn_rate_series(tr).cache()
     factory = lambda: CusumDetector(k=0.05, h=2.0)  # noqa: E731
     ungated = {
-        (r.series_id, r.change_point) for r in detect_offline(series, factory).collect()
+        (r.series_id, r.change_point) for r in detect_sequential(series, factory).collect()
     }
     alarmed = cusum_prefilter(series, k=0.05, h=2.0)
     gated_series = series.join(F.broadcast(alarmed), "series_id", "left_semi")
     gated = {
         (r.series_id, r.change_point)
-        for r in detect_offline(gated_series, factory).collect()
+        for r in detect_sequential(gated_series, factory).collect()
     }
     assert gated == ungated
     # and the gate actually prunes (otherwise it's not a pre-filter)
@@ -313,24 +318,19 @@ def test_north_star_composition_end_to_end(spark):
     from pyspark.sql import functions as F
 
     from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cpd import detect_offline
     from pysatl_cpd_spark.operators.gapfill import segment_gapfill_turns
-    from pysatl_cpd_spark.operators.segments import (
-        decode_segments,
-        encode_segments_adaptive,
-    )
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=6, avg_turns=200, seed=9)
     series = turn_rate_series(tr.filter(F.col("role") != "tool")).cache()
-    cps = detect_offline(series, lambda: CusumDetector(k=0.05, h=2.0)).cache()
+    cps = detect_sequential(series, lambda: CusumDetector(k=0.05, h=2.0)).cache()
     filled = segment_gapfill_turns(series, cps).select(
         "series_id", "t", F.col("value_interp").alias("value")
     ).cache()
     assert filled.count() > series.count()  # real holes were filled
 
-    encoded = encode_segments_adaptive(filled, cps)
+    encoded = encode_segments_colocated(filled, cps)
     decoded = decode_segments(encoded).select("series_id", "t", "value")
     assert decoded.exceptAll(filled).count() == 0
     assert filled.exceptAll(decoded).count() == 0
