@@ -2162,26 +2162,18 @@ def transcripts_cpd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
-    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
-
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
     # explicit repartition on the series key: pays the ONE shuffle the
     # zero-exchange detect+encode assume (and discharges the documented
     # AQE-coalescing caveat for window-derived series — a user-specified
-    # repartition is exempt); the broadcast left-semi gate below preserves
-    # this partitioning, so detect/encode add NO further exchange
-    # (plan-asserted in tests/test_entry_contract.py; bench.py measured the
-    # identical pipeline shape 8.78 -> 7.23 s interleaved at sf0.1)
+    # repartition is exempt). Detect and encode read the same uncached
+    # series, so encode runs the lockstep CUSUM kernel (bit-identical to the
+    # sequential CusumDetector, tests/test_lockstep_cusum.py) inside its own
+    # pass: one MapInArrow, no further exchange (plan-asserted in
+    # tests/test_entry_contract.py)
     n_parts = spark.sparkContext.defaultParallelism
-    series = turn_rate_series(tr).repartition(n_parts, "series_id").cache()
-    # JVM CUSUM pre-filter: the window-function twin of the detector's first
-    # pass — only series it flags can produce change points (exact gate), so
-    # the pandas-UDF localization runs on the alarmed subset only; the
-    # localization itself is the batched lockstep kernel (bit-identical to
-    # the sequential CusumDetector, tests/test_lockstep_cusum.py)
-    alarmed = cusum_prefilter(series, k=0.05, h=2.0)
-    gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    cps = detect_lockstep_colocated(gated, lambda: LockstepCusum(k=0.05, h=2.0))
+    series = turn_rate_series(tr).repartition(n_parts, "series_id")
+    cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=0.05, h=2.0))
     return encode_segments_colocated(series, cps).select(
         "series_id",
         "segment_id",
@@ -2207,23 +2199,21 @@ def transcripts_segment_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns are exercised, not vacuous."""
     from pysatl_cpd_spark.detectors import LockstepCusum
     from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
-    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
     from pysatl_cpd_spark.operators.gapfill import segment_gapfill_turns
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
     # same zero-exchange shape as the flagship: one explicit key repartition
-    # buys a colocated (shuffle-free) lockstep detect
+    # buys a colocated (shuffle-free) lockstep detect. The series has two
+    # consumers (detect and the gap-fill windows), so it is cached
     n_parts = spark.sparkContext.defaultParallelism
     series = (
         turn_rate_series(tr.filter(F.col("role") != "tool"))
         .repartition(n_parts, "series_id")
         .cache()
     )
-    alarmed = cusum_prefilter(series, k=0.05, h=2.0)
-    gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    cps = detect_lockstep_colocated(gated, lambda: LockstepCusum(k=0.05, h=2.0))
+    cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=0.05, h=2.0))
     out = segment_gapfill_turns(series, cps)
     return out.select(
         "series_id",
@@ -2337,40 +2327,6 @@ GROUP BY series_id, turn_idx // {bucket_turns}
 """
 
 
-def transcripts_cpd_rollup_coded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship pipeline through the dense-int key compaction
-    (operators/keycompact.py): factorize series_id at the ingest
-    repartition, run the zero-exchange colocated detect+encode on
-    (code:int64, t, value), broadcast-re-attach the string id on the
-    summary rows. Hash-checked against the SAME oracle as the string-keyed
-    flagship — the compaction must be output-invisible."""
-    from pysatl_cpd_spark.detectors import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
-    from pysatl_cpd_spark.operators.keycompact import (
-        attach_series_id,
-        compact_series_key,
-    )
-    from pysatl_cpd_spark.operators.segments import encode_segments_colocated
-    from pysatl_cpd_spark.operators.series import turn_rate_series
-    from pysatl_cpd_spark.sources.transcripts import transcripts_table
-
-    tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
-    n_parts = spark.sparkContext.defaultParallelism
-    coded, dim = compact_series_key(turn_rate_series(tr), n_partitions=n_parts)
-    coded = coded.cache()
-    cps = detect_lockstep_colocated(coded, lambda: LockstepCusum(k=0.05, h=2.0))
-    enc = encode_segments_colocated(coded, cps)
-    return attach_series_id(enc, dim).select(
-        "series_id",
-        "segment_id",
-        "n_points",
-        "t_min",
-        "t_max",
-        F.round("min_value", 9).alias("min_value"),
-        F.round("max_value", 9).alias("max_value"),
-    )
-
-
 def cpd_colocated_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observability surface of the zero-exchange production path
     (detect_colocated_instrumented): per-series lineage/metrics rows from
@@ -2409,18 +2365,15 @@ GROUP BY r.series_id
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship on sf0.001: CPD-adaptive segment rollup of per-user event
-    series (detect CPs JVM-side via CUSUM scores, segment, Gorilla-encode,
-    summarize)."""
+    series (detect CPs with the lockstep CUSUM kernel, segment,
+    Gorilla-encode, summarize — one fused Python pass per series)."""
     sf_dir = "/root/testdata/sf0.001"
     from pysatl_cpd_spark.detectors import LockstepCusum
     from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
-    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
     from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
-    series = _event_series_colocated(spark, sf_dir).cache()
-    alarmed = cusum_prefilter(series, k=2.0, h=20.0)
-    gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    cps = detect_lockstep_colocated(gated, lambda: LockstepCusum(k=2.0, h=20.0))
+    series = _event_series_colocated(spark, sf_dir)
+    cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=2.0, h=20.0))
     return encode_segments_colocated(series, cps).drop("blob")
 
 
@@ -2522,9 +2475,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cpd_bocpd_offline_counts": cpd_bocpd_offline_counts,
         # round 8: zero-exchange instrumented dispatch (lineage/metrics)
         "cpd_colocated_metrics": cpd_colocated_metrics,
-        # round 8: coded-key flagship twin (same oracle as the flagship —
-        # the key compaction must be output-invisible)
-        "transcripts_cpd_rollup_coded": transcripts_cpd_rollup_coded,
     }
 
 
@@ -2546,7 +2496,6 @@ def oracle_sql() -> dict[str, str]:
         out["transcripts_segment_gapfill"] = _segment_gapfill_sql()
         out["transcripts_tool_rate"] = _tool_rate_sql()
         out["cpd_colocated_metrics"] = _colocated_metrics_sql()
-        out["transcripts_cpd_rollup_coded"] = _flagship_sql()
     except Exception:  # noqa: BLE001
         pass
     # sequential detectors: expected rows computed at oracle-build time by

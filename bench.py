@@ -62,11 +62,13 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
     # touches the fat `text` column, and a UDF source blocks Catalyst pruning.
     # The explicit conv_id repartition pays ONE shuffle up front so every
     # downstream stage reuses the partitioning: mapInPandas synthesis erases
-    # partitioning info, so without it the series window, detect groupBy,
-    # encode groupBy AND the 1m rollup groupBy(conv_id, bucket) each shuffle
-    # the full point set (hashpartitioning(conv_id) satisfies all of their
-    # clustered distributions). Measured at 2.4M pts: rollup stage 3.9->2.4s,
-    # series 1.7->0.7s, identical outputs.
+    # partitioning info, so without it the series window, the detect+encode
+    # pass AND the 1m rollup groupBy(conv_id, bucket) each shuffle the full
+    # point set (hashpartitioning(conv_id) satisfies all of their clustered
+    # distributions). One partition per core: every Python stage pays its
+    # per-task cost once per partition, and a fixed 64 was 16 tasks per core
+    # on 4 cores (see CHANGES.md for the interleaved A/B).
+    n_parts = spark.sparkContext.defaultParallelism
     tr = (
         transcripts_table(
             spark,
@@ -76,7 +78,7 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
             with_text=False,  # projected away below; synthesis hot spot
         )
         .select("conv_id", "turn_idx", "ts")
-        .repartition(64, "conv_id")
+        .repartition(n_parts, "conv_id")
         .cache()
     )
 

@@ -101,8 +101,7 @@ def detect_lockstep_colocated(
     cross-series kernel keeps its amortization while peak memory stays
     bounded by the flush size. Kernel lanes are independent, so batch
     composition never changes a series' output. ``series_id`` may be a
-    string or a dense ``long`` code (operators/keycompact.py); the output
-    key has the input's type.
+    string or a ``long``; the output key has the input's type.
 
     The result remembers ``(series_df, lockstep_factory)`` (see
     ``detection_of``), so ``encode_segments_colocated(series_df, result)``
@@ -262,8 +261,9 @@ def chunk_series(
     Group key becomes (series_id, chunk_id) so a 10^6-turn conversation fans
     out over many tasks instead of pinning one.
 
-    WHEN TO CHUNK (measured crossover, scripts/chunk_crossover.py, BENCH.md
-    round-9 table, local[32], chunk_size=200k/overlap=2k, rare-alarm CUSUM):
+    WHEN TO CHUNK (measured crossover, BENCH.md round-9 table, local[32],
+    chunk_size=200k/overlap=2k, rare-alarm CUSUM; the sweep script that
+    measured it is in git history):
     the single colocated lane wins below ~250k points (0.36 s vs 0.48 s —
     the explode+shuffle overhead exceeds the fan-out gain), the arms cross
     between 250k and 500k (0.94 vs 0.78 at 500k), and past ~1M the chunked

@@ -6,9 +6,13 @@ The one-sided CUSUM recursion S_t = max(0, S_{t-1} + (x_t - mu0 - k))
     S_t = C_t - min(0, min_{j<=t} C_j),   C_t = cumsum(x - mu0 - k),
 
 so the statistic is two window functions (running sum + running min) that
-whole-stage codegen executes entirely in the JVM. At 100 TB this is the
-detector you run first: a full-scan, shuffle-once-per-key, no-UDF scan that
-flags which series need the heavier Bayesian treatment.
+whole-stage codegen executes entirely in the JVM: a full-scan,
+shuffle-once-per-key, no-UDF score.
+
+It is not a gate in front of the Python detectors: a semi-join onto the
+alarmed series keeps detection off the fused detect -> encode pass
+(operators/segments.py), and its window shuffles and broadcast cost more
+than the kernel time they save (README, "One flagship shape").
 """
 
 from __future__ import annotations
@@ -65,45 +69,3 @@ def cusum_alarms(
         )
         alarms.append(hits.select("series_id", F.lit(direction).alias("direction"), "t"))
     return alarms[0].unionByName(alarms[1])
-
-
-def cusum_prefilter(
-    series_df: DataFrame,
-    k: float,
-    h: float,
-    learning_steps: int = 50,
-) -> DataFrame:
-    """Exact JVM gate for CusumDetector(k, h, mu0=None, learning_steps):
-    one distinct ``series_id`` row per series that would alarm at least once.
-
-    Exactness: the detector's FIRST pass learns mu from the first
-    ``learning_steps`` points and alarms iff the reset-free two-sided
-    statistic on the remaining points crosses h (detectors/cusum.py
-    _first_alarm). This filter computes that identical statistic with window
-    functions — a series it does not flag provably yields zero change points,
-    so gating detection through a semi-join on this output leaves
-    results unchanged while the expensive Python kernel pass runs only on
-    flagged series. At 100 TB this is the difference between scanning every
-    conversation in Python and scanning the (usually small) alarmed subset.
-    """
-    w = W.partitionBy("series_id").orderBy("t")
-    pos = F.row_number().over(w) - F.lit(1)
-    df = series_df.select("series_id", "t", "value").withColumn("_pos", pos)
-    mu = F.avg(F.when(F.col("_pos") < learning_steps, F.col("value"))).over(
-        W.partitionBy("series_id")
-    )
-    tail = df.withColumn("_mu", mu).filter(F.col("_pos") >= learning_steps)
-    run = W.partitionBy("series_id").orderBy("t").rowsBetween(W.unboundedPreceding, 0)
-    c_pos = F.sum(F.col("value") - F.col("_mu") - F.lit(k)).over(run)
-    c_neg = F.sum(F.col("_mu") - F.col("value") - F.lit(k)).over(run)
-    scored = (
-        tail.withColumn("_cp", c_pos)
-        .withColumn("s_pos", F.col("_cp") - F.least(F.min("_cp").over(run), F.lit(0.0)))
-        .withColumn("_cn", c_neg)
-        .withColumn("s_neg", F.col("_cn") - F.least(F.min("_cn").over(run), F.lit(0.0)))
-    )
-    return (
-        scored.filter((F.col("s_pos") > h) | (F.col("s_neg") > h))
-        .select("series_id")
-        .distinct()
-    )

@@ -251,9 +251,8 @@ def shingle_jaccard_pairs(
     raw = shingles(docs, n, id_col, text_col, distinct=False).select(
         "doc_id", token_hash64(F.col("shingle")).alias("sh")
     )
-    if strategy in ("auto", "broadcast"):
-        raw = _maybe_persist(raw, cache_shingles)  # count + collect read it
     if strategy == "auto":
+        raw = _maybe_persist(raw, cache_shingles)  # count + collect read it
         strategy = "broadcast" if raw.count() <= broadcast_max_rows else "join"
     if strategy == "broadcast":
         return _jaccard_pairs_broadcast(raw, threshold)

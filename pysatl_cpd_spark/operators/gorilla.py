@@ -18,8 +18,7 @@ each blob padded to a byte boundary; ``encode_segment`` is a batch of one,
 so both give the same bytes. To make that possible the encoder always
 emits the explicit-window '11' control for changed values instead of the
 stateful '10' inherit path — a size-for-speed trade (≤13 extra bits per
-changed value) that the decoder, which supports both controls per the
-published format, is unaffected by.
+changed value).
 
 Layout (v2, marker byte 0x47): the published token encodings, but the two
 token streams are stored back-to-back instead of interleaved, plus a sparse
@@ -34,53 +33,14 @@ state — the encoder never emits the stateful '10' control), so the decoder
 chases all 512-record blocks IN PARALLEL (a Python loop of ≤512 steps total,
 independent of segment size, advancing one numpy cursor per block), then
 gathers payloads with one unaligned read per token; timestamps close with
-two cumsums, values with one bitwise-xor scan. Legacy interleaved (v1)
-blobs — any blob not starting with 0x47 — decode through the original
-sequential reader, which supports the full format including '10' inherit
-controls.
+two cumsums, values with one bitwise-xor scan. The decoder reads only this
+layout: a blob that does not start with 0x47 is rejected with ValueError.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import numpy.typing as npt
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self._buf = bytearray()
-        self._acc = 0
-        self._nbits = 0
-
-    def write(self, value: int, nbits: int) -> None:
-        self._acc = (self._acc << nbits) | (value & ((1 << nbits) - 1))
-        self._nbits += nbits
-        while self._nbits >= 8:
-            self._nbits -= 8
-            self._buf.append((self._acc >> self._nbits) & 0xFF)
-        self._acc &= (1 << self._nbits) - 1
-
-    def bytes(self) -> bytes:
-        if self._nbits:
-            return bytes(self._buf) + bytes([(self._acc << (8 - self._nbits)) & 0xFF])
-        return bytes(self._buf)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._data = data
-        self._pos = 0  # bit position
-
-    def read(self, nbits: int) -> int:
-        """O(1) per call: pull the covering byte span, shift, mask."""
-        if nbits == 0:
-            return 0
-        pos = self._pos
-        start = pos >> 3
-        end = (pos + nbits + 7) >> 3
-        chunk = int.from_bytes(self._data[start:end], "big")
-        self._pos = pos + nbits
-        return (chunk >> ((end << 3) - pos - nbits)) & ((1 << nbits) - 1)
 
 
 _DOD_CODES = (  # (prefix, prefix_len, payload_bits) — two's-complement payloads
@@ -122,8 +82,7 @@ def _pack_tokens(vals: npt.NDArray[np.uint64], nbits: npt.NDArray[np.int64]) -> 
     return counts[:total_bytes].astype(np.uint8).tobytes()
 
 
-_V2_MARKER = 0x47  # 'G'. v1 blobs begin with the high byte of a 32-bit point
-# count, so any count < 0x47000000 (1.19e9 points/segment) cannot collide.
+_V2_MARKER = 0x47  # 'G'
 
 
 def encode_segment(ts: npt.NDArray[np.int64], values: npt.NDArray[np.float64]) -> bytes:
@@ -321,26 +280,28 @@ def decode_batch(
     v2 blobs are concatenated into one buffer and every 512-record block of
     every blob advances in lockstep, so the Python-step count is ≤512 for the
     whole batch regardless of batch size or segment lengths; per-blob closes
-    (delta/ts cumsums, xor scan) are segmented vector ops. v1 blobs decode
-    through the sequential reader. Peak temp memory ≈ 16 bytes per point."""
+    (delta/ts cumsums, xor scan) are segmented vector ops. A blob that does
+    not start with the v2 marker raises ValueError. Peak temp memory ≈ 16
+    bytes per point."""
     out: list = [None] * len(blobs)
     batch_idx: list[int] = []
     for i, b in enumerate(blobs):
         if len(b) == 0 or b[0] != _V2_MARKER:
-            out[i] = _decode_v1(b)
+            raise ValueError(
+                f"blob {i} is not a v2 Gorilla segment (no 0x47 marker byte)"
+            )
+        n = int.from_bytes(b[1:5], "big")
+        if n == 0:
+            out[i] = (np.empty(0, np.int64), np.empty(0, np.float64))
+        elif n == 1:
+            ts0 = int.from_bytes(b[5:13], "big", signed=False)
+            v0 = int.from_bytes(b[13:21], "big", signed=False)
+            out[i] = (
+                np.array([_signed(ts0, 64)], dtype=np.int64),
+                np.array([v0], dtype=np.uint64).view(np.float64),
+            )
         else:
-            n = int.from_bytes(b[1:5], "big")
-            if n == 0:
-                out[i] = (np.empty(0, np.int64), np.empty(0, np.float64))
-            elif n == 1:
-                ts0 = int.from_bytes(b[5:13], "big", signed=False)
-                v0 = int.from_bytes(b[13:21], "big", signed=False)
-                out[i] = (
-                    np.array([_signed(ts0, 64)], dtype=np.int64),
-                    np.array([v0], dtype=np.uint64).view(np.float64),
-                )
-            else:
-                batch_idx.append(i)
+            batch_idx.append(i)
     if batch_idx:
         for i, res in zip(batch_idx, _decode_v2_core([blobs[i] for i in batch_idx])):
             out[i] = res
@@ -510,53 +471,3 @@ def _decode_v2_core(
     prefix = np.concatenate([[np.uint64(0)], acc])[first_n]
     vals_all = (acc ^ np.repeat(prefix, n)).view(np.float64)
     return list(zip(np.split(ts_all, splits), np.split(vals_all, splits)))
-
-
-def _decode_v1(blob: bytes) -> tuple[npt.NDArray[np.int64], npt.NDArray[np.float64]]:
-    """Sequential reader for legacy interleaved blobs; supports the full
-    published format including the stateful '10' window-inherit control."""
-    r = _BitReader(blob)
-    n = r.read(32)
-    ts = np.empty(n, dtype=np.int64)
-    vals = np.empty(n, dtype=np.uint64)
-    if n == 0:
-        return ts, vals.view(np.float64)
-
-    ts[0] = _signed(r.read(64), 64)
-    vals[0] = r.read(64)
-    if n == 1:
-        return ts, vals.view(np.float64)
-
-    delta = _signed(r.read(64), 64)
-    prev_lead, prev_trail, prev_mean = 65, 0, 0
-    prev_val = int(vals[0])
-    for i in range(1, n):
-        if i >= 2:
-            if r.read(1) == 0:
-                dod = 0
-            else:
-                if r.read(1) == 0:
-                    dod = _signed(r.read(7), 7)
-                elif r.read(1) == 0:
-                    dod = _signed(r.read(9), 9)
-                elif r.read(1) == 0:
-                    dod = _signed(r.read(12), 12)
-                else:
-                    dod = _signed(r.read(64), 64)
-            delta += dod
-        ts[i] = ts[i - 1] + delta
-
-        if r.read(1) == 0:
-            x = 0
-        else:
-            if r.read(1) == 0:
-                x = r.read(prev_mean) << prev_trail
-            else:
-                le = r.read(6)
-                mean = r.read(7)
-                tr = 64 - le - mean
-                x = r.read(mean) << tr
-                prev_lead, prev_trail, prev_mean = le, tr, mean
-        prev_val ^= x
-        vals[i] = prev_val
-    return ts, vals.view(np.float64)

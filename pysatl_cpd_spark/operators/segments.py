@@ -15,7 +15,7 @@ positions from one of two places:
     ``factory().process_many`` on each flush and cuts at the kernel's local
     indices. No marker shuffle, broadcast or second Python pass.
   - markers: for any other change points (detected on another DataFrame,
-    such as a gated subset; supplied by the caller; derived; cached) the
+    such as a filtered subset; supplied by the caller; derived; cached) the
     distinct (series_id, t) markers are broadcast-joined onto the series.
 
 Both feed one split -> summarize -> encode helper and emit the same bytes.

@@ -115,66 +115,6 @@ def write_bucketed_series(
     return spark.table(table_name)
 
 
-def write_bucketed_series_coded(
-    df: DataFrame,
-    table_name: str,
-    n_buckets: int,
-    mode: str = "overwrite",
-    path: str | None = None,
-    dim_path: str | None = None,
-) -> "tuple[DataFrame, DataFrame]":
-    """``write_bucketed_series`` with the dense-int key compaction paid AT
-    INGEST (operators/keycompact.py): factorize ``series_id`` once into a
-    deterministic int64 ``code``, store the points table bucketed + sorted
-    BY THE CODE, and persist the (series_id, code) dim table alongside.
-    Downstream zero-exchange detect/encode then carry the ``long`` key —
-    no repeated string column ever crosses the Arrow socket on any later
-    detection run, and the factorization join is amortized into the one
-    ingest shuffle a bucketed table pays anyway. Returns ``(points, dim)``
-    re-read from storage (codes are therefore stable across sessions —
-    stronger than the in-memory helper's cache pin).
-
-    ``dim_path``: parquet location for the dim table (defaults to
-    ``<path>_dim`` when ``path`` is given, else a managed table
-    ``<table_name>_dim``).
-
-    Only ``mode="overwrite"`` is supported (round-8 advice): an append
-    would re-factorize codes from the NEW batch alone — its code 0 is the
-    batch's first sorted key, colliding with codes already stored in the
-    points table — and destroy the persisted dim mapping: exactly the
-    silent series-merge corruption this module exists to prevent. Append
-    ingest needs the dim extended from the PERSISTED mapping (new keys get
-    codes after the existing max); until that exists, fail loudly."""
-    from pysatl_cpd_spark.operators.keycompact import series_key_dim
-
-    if mode != "overwrite":
-        raise ValueError(
-            "write_bucketed_series_coded supports only mode='overwrite': "
-            f"mode={mode!r} would re-factorize codes from the incoming "
-            "batch and corrupt the stored code space (see docstring)"
-        )
-    spark = df.sparkSession
-    dim = series_key_dim(df)
-    coded = df.join(F.broadcast(dim), "series_id").select(
-        F.col("code").alias("series_id"),
-        *[c for c in df.columns if c != "series_id"],
-    )
-    points = write_bucketed_series(
-        coded, table_name, n_buckets, mode=mode, path=path
-    )
-    if dim_path is None and path is not None:
-        dim_path = path + "_dim"
-    if dim_path is not None:
-        dim.write.mode(mode).parquet(dim_path)
-        dim_out = read_parquet(spark, dim_path, schema=dim.schema)
-    else:
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}_dim")
-        dim.write.mode(mode).saveAsTable(f"{table_name}_dim")
-        dim_out = spark.table(f"{table_name}_dim")
-    dim.unpersist()
-    return points, dim_out
-
-
 def write_table(
     df: DataFrame,
     ref: str,

@@ -38,7 +38,8 @@ def main() -> None:
     # warm Python workers / Arrow / JIT like bench.py does
     tr0 = transcripts_table(
         spark, n_conversations=64, avg_turns=100, seed=42, with_text=False
-    ).select("conv_id", "turn_idx", "ts").repartition(64, "conv_id").cache()
+    ).select("conv_id", "turn_idx", "ts")
+    tr0 = tr0.repartition(sc.defaultParallelism, "conv_id").cache()
     s0 = turn_rate_series(tr0).cache()
     detect_lockstep_colocated(s0, lambda: LockstepLinearBOCPD(
         rate=1.0 / (1.0 - 0.5 ** (1.0 / 500)), learning_sample_size=20,
@@ -65,7 +66,7 @@ def main() -> None:
                 seed=42, with_text=False,
             )
             .select("conv_id", "turn_idx", "ts")
-            .repartition(64, "conv_id")
+            .repartition(sc.defaultParallelism, "conv_id")
             .cache()
         )
         timed("1_synth+ingest+cache", lambda: tr.count())

@@ -146,10 +146,10 @@ def test_colocate_keeps_hash_partitioned_inputs(spark):
     """Inputs whose plan already hash-partitions on exactly the key get no
     new exchange: the perfbench rollup shape (repartition on conv_id, rate
     window, alias to series_id), the ``events_series(colocate=n)`` frame the
-    cpd_* queries read, and the flagship's cache + broadcast left-semi gate
-    while the cache is still unfilled (AQE reports UnknownPartitioning for
-    it; the check reads the plan that fills the cache)."""
-    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
+    cpd_* queries read, and a cache under a broadcast left-semi join while
+    the cache is still unfilled (AQE reports UnknownPartitioning for it; the
+    check reads the plan that fills the cache and does not enter the
+    broadcast side)."""
     from pysatl_cpd_spark.operators.series import events_series, turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
@@ -163,7 +163,7 @@ def test_colocate_keeps_hash_partitioned_inputs(spark):
 
     cached = turn_rate_series(tr).repartition(4, "series_id").cache()
     try:
-        alarmed = cusum_prefilter(cached, k=0.05, h=2.0)
+        alarmed = cached.filter(F.col("series_id") != "c0").select("series_id")
         gated = cached.join(F.broadcast(alarmed), "series_id", "left_semi")
         exec_plan = gated._jdf.queryExecution().executedPlan()
         assert "UnknownPartitioning" in exec_plan.inputPlan().outputPartitioning().toString()
@@ -231,3 +231,36 @@ def test_map_series_composite_keys_and_list_columns(spark):
     assert dict(out.dtypes)["series_id"] == "bigint"
     got = {tuple(r) for r in out.collect()}
     assert got == {(k, w, float(5 * w), 2, True) for k in (3, 9) for w in (0, 1)}
+
+
+def test_iter_sorted_series_int_fast_path():
+    """The integer-key branch (np.diff boundaries, no dictionary hash) must
+    stitch series across batches exactly like the string branch."""
+    import pyarrow as pa
+
+    from pysatl_cpd_spark.operators.colocated import iter_sorted_series
+
+    def batch(codes, ts, vals):
+        return pa.record_batch(
+            [
+                pa.array(codes, pa.int64()),
+                pa.array(ts, pa.int64()),
+                pa.array(vals, pa.float64()),
+            ],
+            names=["series_id", "t", "value"],
+        )
+
+    batches = [
+        batch([5, 5, 7], [0, 1, 0], [1.0, 2.0, 3.0]),
+        batch([], [], []),  # zero-row batch carries schema only
+        batch([7, 7, 9], [1, 2, 0], [4.0, 5.0, 6.0]),
+    ]
+    got = [
+        (sid, cols["t"].tolist(), cols["value"].tolist())
+        for sid, cols in iter_sorted_series(batches, ("t", "value"))
+    ]
+    assert got == [
+        (5, [0, 1], [1.0, 2.0]),
+        (7, [0, 1, 2], [3.0, 4.0, 5.0]),
+        (9, [0], [6.0]),
+    ]

@@ -211,6 +211,29 @@ def test_shingle_jaccard_strategies_identical(wide_docs):
     assert join_rows == bc_rows and len(join_rows) > 10
 
 
+def test_shingle_jaccard_explicit_broadcast_persists_nothing(wide_docs):
+    """Explicit ``strategy="broadcast"`` reads the incidence table once (the
+    collect), so it persists nothing; ``"auto"`` persists it for its count
+    and collect. Both return the same pairs."""
+    from pysatl_cpd_spark.operators import dedup
+
+    before = [id(df) for df in dedup._PERSISTED]
+    bc_rows = sorted(
+        map(tuple, dedup.shingle_jaccard_pairs(
+            wide_docs, n=3, threshold=0.5, strategy="broadcast"
+        ).collect())
+    )
+    assert [id(df) for df in dedup._PERSISTED] == before
+    auto_rows = sorted(
+        map(tuple, dedup.shingle_jaccard_pairs(
+            wide_docs, n=3, threshold=0.5, strategy="auto"
+        ).collect())
+    )
+    assert id(dedup._PERSISTED[-1]) not in before
+    dedup._PERSISTED.pop().unpersist()
+    assert bc_rows == auto_rows and len(bc_rows) > 10
+
+
 def test_simhash_strategies_identical(wide_docs):
     """Broadcast candidate kernel == blocked self-join: same pair set, same
     hamming values (including the numpy SWAR popcount and the numpy

@@ -150,9 +150,10 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
       - NO exchange anywhere partitions by the salt 'bucket' column;
       - the caller's one paid ingest shuffle is present
         (REPARTITION_BY_NUM on series_id);
-      - between each MapInArrow and the cached feed / a broadcast build
-        side there is NO shuffle of any kind on its streamed input — the
-        property that makes detect+encode zero-exchange."""
+      - between each MapInArrow and its feed (the cache, or the caller's
+        series_id repartition itself) / a broadcast build side there is
+        NO other shuffle of any kind on its streamed input — the property
+        that makes detect+encode zero-exchange."""
     import re
 
     assert "FlatMapGroupsIn" not in plan, "salted grouped-map dispatch leaked in"
@@ -168,23 +169,53 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
         assert len(streamed) == n_map_in_arrow, plan[:800]
     assert streamed, plan[:800]
     for sub in streamed:
-        # BroadcastExchange roots were skipped above, so ANY remaining
-        # Exchange/ReusedExchange here is a shuffle of the streamed input
-        bad = [t for t in sub if "Exchange" in t]
-        assert not bad, f"exchange on a MapInArrow streamed side: {bad}"
+        # BroadcastExchange roots were skipped above, so every remaining
+        # Exchange/ReusedExchange is on the streamed input. A cached feed
+        # hides the ingest repartition, so there must be none; an uncached
+        # feed must meet exactly one series_id repartition first (the
+        # caller's), and only the series' synthesis below it may shuffle
+        exchanges = [t for t in sub if "Exchange" in t]
+        ingest = [
+            t for t in exchanges if "REPARTITION_BY_NUM" in t and "series_id" in t
+        ]
+        bad = exchanges if not ingest else exchanges[: exchanges.index(ingest[0])]
+        assert not bad and len(ingest) <= 1, (
+            f"exchange on a MapInArrow streamed side: {exchanges}"
+        )
 
 
 def test_flagship_zero_exchange_plan(spark):
     """The contract flagship (transcripts_cpd_rollup) runs the ZERO-EXCHANGE
-    detect+encode path: one explicit caller repartition on series_id pays the
-    only series-data shuffle, and neither MapInArrow op adds an exchange on
-    its streamed side (both stream straight from the cached feed through a
-    broadcast join + local sort)."""
+    fused detect+encode path: one explicit caller repartition on series_id
+    pays the only series-data shuffle, and the one MapInArrow (encode, with
+    the detector run inline) streams straight from that repartition through
+    a local sort, with no exchange and no broadcast."""
     import __spark_entry__ as entry
 
     df = entry.queries()["transcripts_cpd_rollup"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    _assert_colocated_detect_plan(plan, n_map_in_arrow=2)
+    _assert_colocated_detect_plan(plan, n_map_in_arrow=1)
+    assert "BroadcastExchange" not in plan, plan[:800]
+
+
+# SHA-256 of entry()'s sorted row reprs, computed before its CUSUM
+# pre-filter gate was dropped (the gate was exact, so the rows are the same)
+ENTRY_ROWS_SHA256 = "d85e7336e1171d6bf7dd90254ef1b305d7c5cd7b195afcbd6525d1f6637ef352"
+
+
+def test_entry_fused_plan_and_rows(spark):
+    """entry() detects and encodes in one fused pass: its plan has one
+    MapInArrow and no BroadcastExchange, and its sf0.001 rows are pinned."""
+    import hashlib
+
+    df = entry_mod.entry(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan[:800]
+    assert "BroadcastExchange" not in plan, plan[:800]
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    assert len(rows) == 30
+    digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+    assert digest == ENTRY_ROWS_SHA256
 
 
 def test_gapfill_zero_exchange_detect_plan(spark):

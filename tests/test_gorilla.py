@@ -157,72 +157,19 @@ def test_summaries_match_per_segment_reductions():
             assert bits(got[col][i]) == bits(want), (col, i, list(v))
 
 
-def _encode_v1(ts, values):
-    """Reference v1 (interleaved) writer — kept in the test to pin the legacy
-    decode path now that the engine encodes v2: header [n|ts0|v0|delta0] then
-    per record (dod token, value token) interleaved, '11' explicit windows."""
-    from pysatl_cpd_spark.operators.gorilla import _BitWriter
+def test_decode_rejects_blob_without_v2_marker():
+    """Blobs come from outside input: one that does not start with the v2
+    marker (0x47), empty ones included, is refused, not decoded as noise."""
+    import pytest
 
-    w = _BitWriter()
-    n = len(ts)
-    w.write(n, 32)
-    if n >= 1:
-        w.write(int(ts[0]), 64)
-        w.write(int(np.float64(values[0]).view(np.uint64)), 64)
-    if n >= 2:
-        deltas = np.diff(ts)
-        w.write(int(deltas[0]), 64)
-    prev_bits = int(np.float64(values[0]).view(np.uint64)) if n else 0
-    for i in range(1, n):
-        if i >= 2:
-            dod = int(deltas[i - 1] - deltas[i - 2])
-            if dod == 0:
-                w.write(0, 1)
-            elif -64 <= dod < 64:
-                w.write(0b10, 2)
-                w.write(dod, 7)
-            elif -256 <= dod < 256:
-                w.write(0b110, 3)
-                w.write(dod, 9)
-            elif -2048 <= dod < 2048:
-                w.write(0b1110, 4)
-                w.write(dod, 12)
-            else:
-                w.write(0b1111, 4)
-                w.write(dod, 64)
-        cur = int(np.float64(values[i]).view(np.uint64))
-        x = prev_bits ^ cur
-        if x == 0:
-            w.write(0, 1)
-        else:
-            lead = max(0, 63 - x.bit_length() + 1) if x else 64
-            trail = (x & -x).bit_length() - 1
-            mean = 64 - lead - trail
-            w.write(0b11, 2)
-            w.write(lead, 6)
-            w.write(mean, 7)
-            w.write(x >> trail, mean)
-        prev_bits = cur
-    return w.bytes()
-
-
-def test_legacy_v1_blob_decodes():
-    """Blobs written before the v2 layout (no 0x47 marker) must keep
-    decoding through the sequential reader."""
-    from pysatl_cpd_spark.operators.gorilla import decode_batch
-
-    rng = np.random.default_rng(5)
-    ts = np.cumsum(rng.integers(1, 500, 300)).astype(np.int64)
-    values = np.round(rng.normal(size=300), 3)
-    blob = _encode_v1(ts, values)
-    assert blob[0] != 0x47
-    t2, v2 = decode_segment(blob)
-    assert np.array_equal(t2, ts) and np.array_equal(v2, values)
-    # mixed batch: v1 and v2 blobs interleaved
-    blob2 = encode_segment(ts + 7, values * 2)
-    out = decode_batch([blob, blob2, blob])
-    assert np.array_equal(out[0][0], ts) and np.array_equal(out[2][1], values)
-    assert np.array_equal(out[1][0], ts + 7) and np.array_equal(out[1][1], values * 2)
+    good = encode_segment(np.array([1, 2], np.int64), np.array([0.5, 1.5]))
+    for bad in (b"", b"\x00\x00\x00\x02" + good[5:], b"\x46" + good[1:]):
+        with pytest.raises(ValueError, match="0x47"):
+            decode_batch([good, bad])
+    # the zero-length segment is a 5-byte v2 header, not an empty blob
+    empty = encode_segment(np.empty(0, np.int64), np.empty(0))
+    assert empty == b"\x47\x00\x00\x00\x00"
+    assert [len(t) for t, _ in decode_batch([empty, good])] == [0, 2]
 
 
 def test_compact_segments_roundtrip(spark):

@@ -214,61 +214,6 @@ def test_write_table_format_roundtrip(spark, tmp_path):
         assert {(r.conv_id, float(r.value)) for r in back.collect()} == want, fmt
 
 
-def test_bucketed_coded_table_feeds_long_key_colocated(spark, tmp_path):
-    """write_bucketed_series_coded: the dense-int factorization paid at
-    ingest — the coded bucketed scan feeds the long-keyed colocated detect
-    with ZERO exchanges, and after the broadcast re-attach the rows equal
-    the string-keyed kernel loop. Codes must be stable across re-reads
-    (stored, not session-pinned)."""
-    from pysatl_cpd_spark.detectors.cusum import LockstepCusum
-    from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
-    from pysatl_cpd_spark.operators.keycompact import attach_series_id
-    from pysatl_cpd_spark.operators.series import events_series
-    from pysatl_cpd_spark.sources.catalog import write_bucketed_series_coded
-
-    series = events_series(
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    )
-    points, dim = write_bucketed_series_coded(
-        series, "series_bucketed_coded_t", n_buckets=8,
-        path=str(tmp_path / "series_coded"),
-    )
-    assert dict(points.dtypes)["series_id"] == "bigint"
-    # dim is dense + stable: re-read equals first read
-    dmap = {r.series_id: r.code for r in dim.collect()}
-    assert sorted(dmap.values()) == list(range(len(dmap)))
-
-    fac = lambda: LockstepCusum(k=1.0, h=10.0)  # noqa: E731
-    out = detect_lockstep_colocated(points, fac)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 0, plan[:500]
-
-    got = {
-        (r.series_id, r.change_point)
-        for r in attach_series_id(out, dim).collect()
-    }
-    assert got == detect_ref(series, fac) and got
-
-
-def test_bucketed_coded_write_rejects_append(spark, tmp_path):
-    """mode='append' would re-factorize codes from the new batch alone
-    (its code 0 = the batch's first sorted key, colliding with stored
-    codes) and clobber the persisted dim — the writer must refuse loudly
-    instead of corrupting the code space (round-8 advice)."""
-    import pytest
-
-    from pysatl_cpd_spark.sources.catalog import write_bucketed_series_coded
-
-    df = spark.createDataFrame(
-        [("a", 0, 1.0)], "series_id string, t long, value double"
-    )
-    with pytest.raises(ValueError, match="overwrite"):
-        write_bucketed_series_coded(
-            df, "series_coded_append_t", n_buckets=2, mode="append",
-            path=str(tmp_path / "coded_append"),
-        )
-
-
 def _open_counting_jobs(spark, group, path, **kw):
     """Open ``path`` through read_parquet inside a job group; returns the
     DataFrame and the number of Spark jobs the open ran."""

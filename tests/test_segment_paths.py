@@ -109,7 +109,7 @@ def test_path_selection(spark):
     assert fused.count("MapInArrow") == 1
     assert fused.count("Exchange hashpartitioning") == shuffles
 
-    # the flagship's shape: detection on a broadcast left-semi gate
+    # detection on another DataFrame: a broadcast left-semi join
     alarmed = series.filter(F.col("series_id") != "s00").select("series_id")
     gated = series.join(F.broadcast(alarmed), "series_id", "left_semi")
     cached = detect_lockstep_colocated(series, fac).cache()

@@ -225,33 +225,6 @@ class TestMetrics:
         assert got == [1, 4]
 
 
-def test_cusum_prefilter_gating_is_exact(spark):
-    """The JVM pre-filter is an exact gate: detection over the flagged
-    subset produces the identical CP set as over all series (unflagged series
-    provably alarm nowhere — same statistic, same learned mu)."""
-    from pysatl_cpd_spark.detectors import CusumDetector
-    from pysatl_cpd_spark.operators.cusum import cusum_prefilter
-    from pysatl_cpd_spark.operators.series import turn_rate_series
-    from pysatl_cpd_spark.sources.transcripts import transcripts_table
-
-    tr = transcripts_table(spark, n_conversations=12, avg_turns=250, seed=7)
-    series = turn_rate_series(tr).cache()
-    factory = lambda: CusumDetector(k=0.05, h=2.0)  # noqa: E731
-    ungated = {
-        (r.series_id, r.change_point) for r in detect_sequential(series, factory).collect()
-    }
-    alarmed = cusum_prefilter(series, k=0.05, h=2.0)
-    gated_series = series.join(F.broadcast(alarmed), "series_id", "left_semi")
-    gated = {
-        (r.series_id, r.change_point)
-        for r in detect_sequential(gated_series, factory).collect()
-    }
-    assert gated == ungated
-    # and the gate actually prunes (otherwise it's not a pre-filter)
-    assert alarmed.count() <= series.select("series_id").distinct().count()
-    assert {r.series_id for r in alarmed.collect()} >= {s for s, _ in ungated}
-
-
 def test_distinct_sketch_hierarchy(spark):
     """HLL distinct-count tiers: the hierarchical (1m -> 1h -> 1d sketch
     union) estimate is IDENTICAL to sketching raw directly (union = register
