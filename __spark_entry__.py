@@ -2205,13 +2205,10 @@ def transcripts_segment_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
     # same zero-exchange shape as the flagship: one explicit key repartition
-    # buys a colocated (shuffle-free) lockstep detect. The series has two
-    # consumers (detect and the gap-fill windows), so it is cached
+    # buys a colocated (shuffle-free) lockstep detect
     n_parts = spark.sparkContext.defaultParallelism
-    series = (
-        turn_rate_series(tr.filter(F.col("role") != "tool"))
-        .repartition(n_parts, "series_id")
-        .cache()
+    series = turn_rate_series(tr.filter(F.col("role") != "tool")).repartition(
+        n_parts, "series_id"
     )
     cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=0.05, h=2.0))
     out = segment_gapfill_turns(series, cps)

@@ -15,59 +15,6 @@ from pysatl_cpd_spark.functions.text import fingerprint, token_hash64
 _MERSENNE = (1 << 31) - 1  # int64-safe: (h mod p) * a < 2^62
 
 
-_PERSISTED: "list[DataFrame]" = []
-_PERSISTED_MAX = 32  # FIFO-evict beyond this (see _maybe_persist LIFETIME note)
-
-
-def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
-    """Persist an intermediate that the downstream plan references from
-    MULTIPLE subplans (self-join sides, size joins): Spark plans each
-    reference as an independent subplan — no exchange reuse through alias
-    pairs — so without the cache the expensive derivation runs once per
-    reference. MEMORY_AND_DISK, LRU-evicted; at true corpus scale these
-    intermediates (signatures, shingle sets, simhashes) are materialized as
-    first-class lake assets instead.
-
-    LIFETIME: the operator cannot unpersist eagerly — the consuming action
-    runs later, in the caller — so every persisted handle is registered and
-    a long-lived session should call ``unpersist_cached()`` after its
-    actions complete. Until then the blocks stay cached and rely on LRU
-    eviction under memory pressure (fine for one-shot jobs, a slow
-    accumulation for a resident service). As a backstop for sessions that
-    never call it, the registry is BOUNDED: beyond ``_PERSISTED_MAX``
-    handles the oldest is unpersisted FIFO — correctness-safe (unpersist
-    only drops the cache; a plan that still references the handle simply
-    recomputes), and it stops a resident service from accumulating cached
-    blocks and lineage objects without limit."""
-    if not flag:
-        return df
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(df)
-    while len(_PERSISTED) > _PERSISTED_MAX:
-        old = _PERSISTED.pop(0)
-        try:
-            old.unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    return df
-
-
-def unpersist_cached(blocking: bool = False) -> int:
-    """Release every intermediate the dedup/similarity operators persisted
-    via ``_maybe_persist`` (see its LIFETIME note). Safe to call any time
-    after the consuming actions; returns the number of handles released."""
-    n = len(_PERSISTED)
-    for df in _PERSISTED:
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _PERSISTED.clear()
-    return n
-
-
 def _fan_out(docs: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow documents scan up to the session's
     parallelism before per-row-heavy generation (explode + md5 hashing): a
@@ -136,7 +83,6 @@ def token_jaccard_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     max_df: int | None = None,
-    cache_tokens: bool = True,
 ) -> DataFrame:
     """Exact Jaccard similarity over distinct word tokens for candidate pairs
     sharing >= 1 token: (doc_a, doc_b, jaccard), doc_a < doc_b.
@@ -162,7 +108,6 @@ def token_jaccard_pairs(
             .select("token")
         )
         toks = toks.join(F.broadcast(heavy), "token", "left_anti")
-    toks = _maybe_persist(toks, cache_tokens)  # 3 plan references (a, b, sizes)
     # same two tricks as shingle_jaccard_pairs: broadcast the per-doc set
     # size onto the token rows so the self-join prunes size-incompatible
     # pairs before the pair aggregate (jaccard <= min/max, so min <= t*max-1
@@ -208,7 +153,6 @@ def shingle_jaccard_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_shingles: bool = True,
     strategy: str = "auto",
     broadcast_max_rows: int = 16_000_000,
 ) -> DataFrame:
@@ -227,12 +171,18 @@ def shingle_jaccard_pairs(
       does with its build side), and each task counts shared hashes for its
       slice of docs with vectorized numpy gathers + bincount — no pair
       shuffle, no 10^8-group aggregate. Identical output: same distinct
-      md5-hash sets, same integer counts, same double jaccard.
+      md5-hash sets, same integer counts, same double jaccard. Raises
+      ``ValueError`` when the table holds more than ``broadcast_max_rows``
+      rows.
     - ``"join"``: the shuffle equi-join + pair aggregate — unbounded-scale
       path (the incidence table never has to fit anywhere).
     - ``"auto"`` (default): broadcast while the incidence table holds at
       most ``broadcast_max_rows`` rows (16M rows ≈ 250 MB of build arrays —
       same order as a large broadcast-join build side), else join.
+
+    Both broadcast-capable strategies collect at most
+    ``broadcast_max_rows + 1`` rows in one job: that collect is the size
+    gate and, when it passes, the build side.
     """
     # join on the portable 60-bit md5 hash of the shingle, not the string:
     # an 8-byte shuffle key instead of a ~20-byte string. The SQL oracle
@@ -251,17 +201,18 @@ def shingle_jaccard_pairs(
     raw = shingles(docs, n, id_col, text_col, distinct=False).select(
         "doc_id", token_hash64(F.col("shingle")).alias("sh")
     )
-    if strategy == "auto":
-        raw = _maybe_persist(raw, cache_shingles)  # count + collect read it
-        strategy = "broadcast" if raw.count() <= broadcast_max_rows else "join"
-    if strategy == "broadcast":
-        return _jaccard_pairs_broadcast(raw, threshold)
-    if strategy != "join":
+    if strategy not in ("auto", "broadcast", "join"):
         raise ValueError(f"strategy must be auto|broadcast|join, got {strategy!r}")
-    sh = _maybe_persist(
-        raw.distinct(),
-        cache_shingles,  # 3 plan references (a, b, sizes)
-    )
+    if strategy != "join":
+        build = raw.limit(broadcast_max_rows + 1).toPandas()
+        if len(build) <= broadcast_max_rows:
+            return _jaccard_pairs_broadcast(raw.sparkSession, build, threshold)
+        if strategy == "broadcast":
+            raise ValueError(
+                f"shingle incidence table exceeds broadcast_max_rows="
+                f"{broadcast_max_rows}; use strategy='join' or 'auto'"
+            )
+    sh = raw.distinct()
     # attach each doc's set size to its shingle rows (sizes is one row per
     # doc — broadcast, no corpus-side shuffle) so that
     # (1) the self-join can prune size-incompatible pairs BEFORE the pair
@@ -305,11 +256,11 @@ def shingle_jaccard_pairs(
     )
 
 
-def _jaccard_pairs_broadcast(sh: DataFrame, threshold: float) -> DataFrame:
+def _jaccard_pairs_broadcast(spark, pdf, threshold: float) -> DataFrame:
     """Broadcast-incidence counting kernel behind ``shingle_jaccard_pairs``
-    (strategy="broadcast"): collect the distinct (doc_id, hash) incidence
-    table — the build side, bounded by the caller's row gate exactly like a
-    broadcast-join build side — index it into forward/transpose CSR arrays,
+    (strategy="broadcast"): take the collected (doc_id, hash) incidence
+    table ``pdf`` — the build side, bounded by the caller's row gate exactly
+    like a broadcast-join build side — index it into forward/transpose CSR arrays,
     broadcast them, and let each task compute EXACT shared-hash counts for a
     slice of docs via numpy gathers + bincount. Replaces the O(sum df^2)
     join fan-out + pair-count shuffle aggregate (74.7M groups for 25 result
@@ -319,9 +270,7 @@ def _jaccard_pairs_broadcast(sh: DataFrame, threshold: float) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    spark = sh.sparkSession
     sc = spark.sparkContext
-    pdf = sh.toPandas()
     doc = pdf["doc_id"].to_numpy(np.int64)
     hv = pdf["sh"].to_numpy(np.int64)
     out_schema = "doc_a long, doc_b long, jaccard double"
@@ -330,8 +279,8 @@ def _jaccard_pairs_broadcast(sh: DataFrame, threshold: float) -> DataFrame:
     docs_u, doc_idx = np.unique(doc, return_inverse=True)
     voc_u, voc_idx = np.unique(hv, return_inverse=True)
     nd, nv = docs_u.shape[0], voc_u.shape[0]
-    # exact (doc, hash) dedupe (input is already DISTINCT; this also makes
-    # the kernel safe for non-distinct callers) — packed fits int64 because
+    # exact (doc, hash) dedupe (the collected rows are not distinct: a doc
+    # repeats a shingle it contains twice) — packed fits int64 because
     # nd * nv <= nnz^2 <= (16M)^2 < 2^63
     packed = np.unique(doc_idx.astype(np.int64) * nv + voc_idx)
     doc_idx = packed // nv
@@ -487,7 +436,6 @@ def minhash_lsh_candidates(
     seed: int = 42,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_signatures: bool = True,
 ) -> DataFrame:
     """LSH near-dup candidates: band the signature, bucket-join on
     (band, band-hash), emit distinct candidate pairs with estimated Jaccard
@@ -496,15 +444,12 @@ def minhash_lsh_candidates(
     if num_hashes % bands != 0:
         raise ValueError("bands must divide num_hashes")
     rows_per_band = num_hashes // bands
-    sig = _maybe_persist(
-        minhash_signatures(
-            # distinct=False: per-hash-function minima are duplicate-
-            # insensitive, so the shingle dedup exchange is pure cost here
-            shingles(docs, shingle_n, id_col, text_col, distinct=False),
-            num_hashes,
-            seed,
-        ),
-        cache_signatures,  # both banded self-join sides derive from sig
+    sig = minhash_signatures(
+        # distinct=False: per-hash-function minima are duplicate-
+        # insensitive, so the shingle dedup exchange is pure cost here
+        shingles(docs, shingle_n, id_col, text_col, distinct=False),
+        num_hashes,
+        seed,
     )
     # band bucket = md5 of the comma-joined band values: portable (DuckDB
     # computes the identical key), unlike Spark-internal murmur F.hash
@@ -683,7 +628,6 @@ def simhash_kernel(
     bits: int = SIMHASH_BITS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Numpy twin of ``simhash``: same distinct-token table, same md5-derived
     per-token hashes (computed JVM-side, so the oracle-portable hash law is
@@ -701,15 +645,13 @@ def simhash_kernel(
     token string diverges only if two DISTINCT tokens of one doc collide
     in BOTH md5-derived 60-bit halves at once (~2^-120 per pair — far
     below the 60-bit shingle-hash-join collision bound the engine already
-    accepts as oracle-identical). ``n_parts`` is kept for API
-    compatibility; parallelism comes from the doc fan-out."""
+    accepts as oracle-identical). Parallelism comes from the doc fan-out."""
     import numpy as np
     import pyarrow as pa
 
     if bits <= 60 or bits > SIMHASH_BITS:
         raise ValueError("simhash_kernel supports 60 < bits <= 120")
     nbits = bits
-    del n_parts  # no repartition: doc-local input, per-partition kernel
     toks = _normalized_tokens(docs, id_col, text_col, distinct=False)
     hashed = toks.select(
         "doc_id",
@@ -924,7 +866,6 @@ def simhash_near_dups(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_simhash: bool = True,
     strategy: str = "auto",
     broadcast_max_docs: int = 4_000_000,
 ) -> DataFrame:
@@ -936,13 +877,9 @@ def simhash_near_dups(
     bucket-join cost. See ``simhash_chunk_layout`` for the per-chunk key
     cardinality / within-bucket cost model at corpus scale.
 
-    ``cache_simhash`` persists the per-doc simhash table before the
-    self-join: Spark plans the two join sides as independent subplans (no
-    exchange reuse through the alias pair), so without the cache the
-    120-aggregate-column sign-sum — the expensive stage — runs TWICE
-    (measured 4.8 s -> 3.9 s at sf0.1, interleaved). The cached frame is
-    ~32 bytes/doc (MEMORY_AND_DISK, LRU-evicted); at true corpus scale
-    you'd materialize the simhash table as a first-class asset instead."""
+    The two self-join sides are one subplan, so Spark runs the
+    120-aggregate-column sign-sum once and the second side reads the first
+    side's shuffle (``ReusedExchange``); nothing is persisted."""
     layout = simhash_chunk_layout(max_hamming)
     if strategy == "auto":
         # parquet-metadata count: the gate is doc cardinality (the broadcast
@@ -956,7 +893,7 @@ def simhash_near_dups(
         )
     if strategy != "join":
         raise ValueError(f"strategy must be auto|broadcast|join, got {strategy!r}")
-    sh = _maybe_persist(simhash(docs, SIMHASH_BITS, id_col, text_col), cache_simhash)
+    sh = simhash(docs, SIMHASH_BITS, id_col, text_col)
     chunks = sh.select(
         "doc_id",
         "simhash",
@@ -1137,7 +1074,7 @@ def dedup_components_star(
     sym = fwd.unionByName(
         fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).filter(F.col("a") != F.col("b"))
-    nodes = sym.select("a").distinct().cache()
+    nodes = sym.select("a").distinct()
 
     def large_star(sym_edges: DataFrame) -> DataFrame:
         """Input symmetric edges; output directed (v -> m) edges, v > m."""
@@ -1177,18 +1114,15 @@ def dedup_components_star(
             break
         cur = nxt
     else:
-        nodes.unpersist()
         raise RuntimeError(
             f"small-star/large-star did not converge in {max_rounds} rounds"
         )
     # at the fixpoint `cur` is a star forest: (node -> component min).
     # Roots appear only on the right; map them to themselves.
-    labels = nodes.join(cur, "a", "left").select(
+    return nodes.join(cur, "a", "left").select(
         F.col("a").alias("doc_id"),
         F.coalesce("b", "a").alias("cluster_id"),
     )
-    nodes.unpersist()
-    return labels
 
 
 def _symmetrize(directed: DataFrame) -> DataFrame:

@@ -103,45 +103,54 @@ def segment_gapfill_turns(series_df: DataFrame, cps_df: DataFrame) -> DataFrame:
     """The north-rule composition: per-(series, SEGMENT) gap-fill on the
     dense integer turn grid — segments between detected change points are
     filled by LOCF + linear interpolation before they are encoded/rolled up.
-    Entirely window functions + one sequence/explode; the only shuffles are
-    the segment-extent aggregate and the per-segment windows.
 
     Input: series (series_id, t, value) + change points (series_id,
     change_point). Output one row per (series_id, segment_id, t) on each
     segment's [t_min, t_max] grid: observed ``value`` (null in gaps),
-    ``value_locf``, ``value_interp`` (edges fall back to LOCF/NOCB)."""
+    ``value_locf``, ``value_interp`` (edges fall back to LOCF/NOCB).
+
+    One window pass over the observed rows computes everything: a grid
+    point between two observed rows has the same last non-null value before
+    it and the same first non-null value after it as the earlier row, so
+    each row carries its LOCF and its next non-null (value, t) over
+    ``ROWS 1 FOLLOWING .. UNBOUNDED`` and is exploded over
+    ``[t, lead(t) - 1]``. The segmented series is read once, so detection
+    runs once. A row whose ``value`` is null is a gap that still spans the
+    grid to its ``t``."""
     from pysatl_cpd_spark.operators.segments import assign_segments
 
     seg = assign_segments(series_df, cps_df)
-    extent = seg.groupBy("series_id", "segment_id").agg(
-        F.min("t").alias("_lo"), F.max("t").alias("_hi")
-    )
-    grid = extent.select(
-        "series_id",
-        "segment_id",
-        F.explode(F.sequence("_lo", "_hi")).alias("t"),
-    )
-    g = grid.join(seg, on=["series_id", "segment_id", "t"], how="left")
-
     keys = ["series_id", "segment_id"]
-    back = W.partitionBy(*keys).orderBy("t").rowsBetween(W.unboundedPreceding, 0)
-    fwd = W.partitionBy(*keys).orderBy("t").rowsBetween(0, W.unboundedFollowing)
-    td = F.col("t").cast("double")
-    prev_val = F.last("value", ignorenulls=True).over(back)
-    next_val = F.first("value", ignorenulls=True).over(fwd)
-    prev_t = F.last(F.when(F.col("value").isNotNull(), td), ignorenulls=True).over(back)
-    next_t = F.first(F.when(F.col("value").isNotNull(), td), ignorenulls=True).over(fwd)
-    frac = (td - prev_t) / (next_t - prev_t)
-    interp = F.when(F.col("value").isNotNull(), F.col("value")).otherwise(
+    by_t = W.partitionBy(*keys).orderBy("t")
+    back = by_t.rowsBetween(W.unboundedPreceding, 0)
+    after = by_t.rowsBetween(1, W.unboundedFollowing)
+    observed_t = F.when(F.col("value").isNotNull(), F.col("t").cast("double"))
+    # a duplicate t has lead(t) == t: it covers only its own grid point
+    last_t = F.greatest(F.col("t"), F.coalesce(F.lead("t").over(by_t) - 1, F.col("t")))
+    rows = seg.select(
+        *keys,
+        "t",
+        "value",
+        F.last("value", ignorenulls=True).over(back).alias("prev_val"),
+        F.last(observed_t, ignorenulls=True).over(back).alias("prev_t"),
+        F.first("value", ignorenulls=True).over(after).alias("next_val"),
+        F.first(observed_t, ignorenulls=True).over(after).alias("next_t"),
+        last_t.alias("last_t"),
+    ).withColumn("g", F.explode(F.sequence("t", "last_t")))
+    value = F.when(F.col("g") == F.col("t"), F.col("value"))
+    gd = F.col("g").cast("double")
+    prev_val, prev_t = F.col("prev_val"), F.col("prev_t")
+    next_val, next_t = F.col("next_val"), F.col("next_t")
+    frac = (gd - prev_t) / (next_t - prev_t)
+    interp = F.when(value.isNotNull(), value).otherwise(
         F.when(prev_val.isNull(), next_val)
         .when(next_val.isNull(), prev_val)
         .otherwise(prev_val + (next_val - prev_val) * frac)
     )
-    return g.select(
-        "series_id",
-        "segment_id",
-        "t",
-        "value",
+    return rows.select(
+        *keys,
+        F.col("g").alias("t"),
+        value.alias("value"),
         prev_val.alias("value_locf"),
         interp.alias("value_interp"),
     )

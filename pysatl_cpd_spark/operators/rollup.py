@@ -67,7 +67,6 @@ def rollup_all_tiers(
     ts_col: str = "ts",
     value_col: str = "value",
     tiers: tuple[Tier, ...] = DEFAULT_TIERS,
-    persist_base: bool = False,
     base_table_path: str | None = None,
 ) -> dict[str, DataFrame]:
     """All tiers from one source scan. The 1h/1d tiers re-aggregate the 1m
@@ -75,22 +74,19 @@ def rollup_all_tiers(
     once; counts/min/max/sum compose exactly, avg = sum/count, and
     first/last compose by carrying bucket-edge values.
 
-    Base-tier reuse, in preference order:
+    Base-tier reuse:
     - ``base_table_path``: write the 1m tier to parquet and read it back —
       the production continuous-aggregate shape (each tier is a table; the
       next tier scans it, the raw table is scanned exactly once). Measured
       faster than cache() at bench scale too: the in-memory columnar cache
       build of the 1m tier costs more than its parquet round trip.
-    - ``persist_base=True``: Spark cache() of the 1m tier.
-    - neither: lazy plans; each downstream tier recomputes 1m from the raw
-      scan (fine when the raw source is itself cached and small)."""
+    - ``None`` (default): lazy plans; each downstream tier recomputes 1m
+      from the raw scan."""
     out: dict[str, DataFrame] = {}
     minute = rollup_tier(df, "1m", key_cols, ts_col, value_col)
     if base_table_path is not None:
         minute.write.mode("overwrite").parquet(base_table_path)
         minute = read_parquet(df.sparkSession, base_table_path, schema=minute.schema)
-    elif persist_base:
-        minute = minute.cache()
     out["1m"] = minute
     prev = minute
     for tier in ("1h", "1d"):

@@ -129,7 +129,6 @@ def lsh_cosine_topk(
     quantize_scale: int | None = None,
     round_digits: int | None = None,
     n_tables: int = 1,
-    cache_corpus: bool = True,
     multiprobe: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates share an LSH bucket in ANY of
@@ -192,20 +191,11 @@ def lsh_cosine_topk(
     ``quantize_scale`` makes bucket + rerank exact integer arithmetic so a
     SQL oracle reproduces results bit-for-bit.
 
-    ``cache_corpus`` persists the column-pruned (id, vec) projections: the
-    plan otherwise re-scans the corpus n_tables times for bucketing plus
-    once for the rerank join (each table's plane projection must differ,
-    but the scan underneath need not repeat)."""
-    from pysatl_cpd_spark.operators.dedup import _maybe_persist
-
-    c_base = _maybe_persist(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")),
-        cache_corpus and n_tables > 1,
-    )
-    q_base = _maybe_persist(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")),
-        cache_corpus and n_tables > 1,
-    )
+    The plan scans the corpus once per table for bucketing plus once for
+    the rerank join; each table's plane projection differs, so only the
+    scans repeat. Nothing is persisted."""
+    c_base = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"))
+    q_base = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
     cand_frames = []
     for ti in range(n_tables):
         c = lsh_bucket(c_base, dim, n_planes, seed + ti, "cvec", quantize_scale)
@@ -382,27 +372,23 @@ def embedding_near_dups(
     vec_col: str = "embedding",
     quantize_scale: int | None = None,
     round_digits: int | None = None,
-    cache_buckets: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-blocked corpus×corpus.
     ``quantize_scale`` switches to exact integer bucket/cosine arithmetic;
     ``round_digits`` rounds the cosine *before* the threshold filter so the
-    SQL oracle's filter sees identical values. ``cache_buckets`` persists
-    the bucketed corpus so the self-join's two sides don't each recompute
-    the n_planes-projection over every embedding (see dedup._maybe_persist)."""
+    SQL oracle's filter sees identical values. Nothing is persisted: the
+    self-join's two sides are one subplan, so a shuffled join reads the
+    first side's exchange for the second (``ReusedExchange``), and a
+    broadcast join recomputes the n_planes projection for its small build
+    side."""
     assert dim is not None, "pass the embedding dimension"
-    from pysatl_cpd_spark.operators.dedup import _maybe_persist
-
-    b = _maybe_persist(
-        lsh_bucket(
-            corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")),
-            dim,
-            n_planes,
-            seed=7,
-            vec_col="vec",
-            quantize_scale=quantize_scale,
-        ),
-        cache_buckets,
+    b = lsh_bucket(
+        corpus.select(F.col(id_col).alias("doc_id"), F.col(vec_col).alias("vec")),
+        dim,
+        n_planes,
+        seed=7,
+        vec_col="vec",
+        quantize_scale=quantize_scale,
     )
     if quantize_scale:
         cosine = _cosine_int(

@@ -141,7 +141,6 @@ def main() -> None:
         approx = lsh_cosine_topk(
             emb, queries, dim=DIM, k=K, n_planes=planes, n_tables=tables,
             quantize_scale=QSCALE, round_digits=9, multiprobe=mp,
-            cache_corpus=True,
         )
         r = recall_at_k(emb, queries, approx)
         cf = candidate_fraction(emb, queries, planes, tables, mp)

@@ -72,7 +72,7 @@ def test_token_jaccard_max_df_plan_broadcasts(spark, docs):
     (the heavy-token set is small by construction) — a shuffled anti-join
     here would re-shuffle the whole corpus just to drop stopwords."""
     plan = token_jaccard_pairs(
-        docs, threshold=0.5, max_df=5, cache_tokens=False
+        docs, threshold=0.5, max_df=5
     )._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin LeftAnti" not in plan
@@ -195,43 +195,39 @@ def wide_docs(spark):
 
 def test_shingle_jaccard_strategies_identical(wide_docs):
     """The broadcast incidence kernel must emit EXACTLY the join path's
-    rows — same pairs, bit-identical jaccard doubles."""
+    rows — same pairs, bit-identical jaccard doubles. Over the row gate,
+    ``"auto"`` falls back to the join and ``"broadcast"`` raises."""
     from pysatl_cpd_spark.operators.dedup import shingle_jaccard_pairs
 
     join_rows = sorted(
         map(tuple, shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="join", cache_shingles=False
+            wide_docs, n=3, threshold=0.5, strategy="join"
         ).collect())
     )
     bc_rows = sorted(
         map(tuple, shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="broadcast", cache_shingles=False
-        ).collect())
-    )
-    assert join_rows == bc_rows and len(join_rows) > 10
-
-
-def test_shingle_jaccard_explicit_broadcast_persists_nothing(wide_docs):
-    """Explicit ``strategy="broadcast"`` reads the incidence table once (the
-    collect), so it persists nothing; ``"auto"`` persists it for its count
-    and collect. Both return the same pairs."""
-    from pysatl_cpd_spark.operators import dedup
-
-    before = [id(df) for df in dedup._PERSISTED]
-    bc_rows = sorted(
-        map(tuple, dedup.shingle_jaccard_pairs(
             wide_docs, n=3, threshold=0.5, strategy="broadcast"
         ).collect())
     )
-    assert [id(df) for df in dedup._PERSISTED] == before
-    auto_rows = sorted(
-        map(tuple, dedup.shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="auto"
-        ).collect())
-    )
-    assert id(dedup._PERSISTED[-1]) not in before
-    dedup._PERSISTED.pop().unpersist()
-    assert bc_rows == auto_rows and len(bc_rows) > 10
+    assert join_rows == bc_rows and len(join_rows) > 10
+    fallback = shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5, broadcast_max_rows=10)
+    assert "MapInArrow" not in fallback._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, fallback.collect())) == join_rows
+    with pytest.raises(ValueError, match="broadcast_max_rows"):
+        shingle_jaccard_pairs(
+            wide_docs, n=3, threshold=0.5, strategy="broadcast", broadcast_max_rows=10
+        )
+
+
+def test_shingle_jaccard_explicit_broadcast_persists_nothing(spark, wide_docs):
+    """No strategy leaves a cached plan in the session: the broadcast-capable
+    ones read the incidence table once, in their bounded collect."""
+    from pysatl_cpd_spark.operators.dedup import shingle_jaccard_pairs
+
+    spark.catalog.clearCache()
+    for strategy in ("broadcast", "auto", "join"):
+        shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5, strategy=strategy).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), strategy
 
 
 def test_simhash_strategies_identical(wide_docs):
@@ -240,12 +236,12 @@ def test_simhash_strategies_identical(wide_docs):
     bit-count aggregation twin of the 120-column expression aggregate)."""
     join_rows = sorted(
         map(tuple, simhash_near_dups(
-            wide_docs, max_hamming=6, strategy="join", cache_simhash=False
+            wide_docs, max_hamming=6, strategy="join"
         ).collect())
     )
     bc_rows = sorted(
         map(tuple, simhash_near_dups(
-            wide_docs, max_hamming=6, strategy="broadcast", cache_simhash=False
+            wide_docs, max_hamming=6, strategy="broadcast"
         ).collect())
     )
     assert join_rows == bc_rows and len(join_rows) > 10

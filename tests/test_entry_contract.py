@@ -115,9 +115,7 @@ def _plan_lines(plan: str) -> "list[tuple[int, str]]":
 def _streamed_side_lines(plan: str, op: str) -> "list[list[str]]":
     """For each occurrence of ``op``, return its subtree lines EXCLUDING
     subtrees rooted at BroadcastExchange (build sides may shuffle their tiny
-    inputs) and at InMemoryRelation (the cached feed's internal plan holds
-    the one deliberately-paid ingest shuffle) — i.e. the operator's streamed
-    input path down to the cache/scan boundary."""
+    inputs) — i.e. the operator's streamed input path."""
     lines = _plan_lines(plan)
     subtrees = []
     for i, (d, text) in enumerate(lines):
@@ -132,7 +130,7 @@ def _streamed_side_lines(plan: str, op: str) -> "list[list[str]]":
                 if dd > skip_deeper_than:
                     continue
                 skip_deeper_than = None
-            if "BroadcastExchange" in tt or "InMemoryRelation" in tt:
+            if "BroadcastExchange" in tt:
                 skip_deeper_than = dd
                 continue
             collected.append(tt)
@@ -150,10 +148,9 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
       - NO exchange anywhere partitions by the salt 'bucket' column;
       - the caller's one paid ingest shuffle is present
         (REPARTITION_BY_NUM on series_id);
-      - between each MapInArrow and its feed (the cache, or the caller's
-        series_id repartition itself) / a broadcast build side there is
-        NO other shuffle of any kind on its streamed input — the property
-        that makes detect+encode zero-exchange."""
+      - between each MapInArrow and the caller's series_id repartition
+        there is NO other shuffle of any kind on its streamed input — the
+        property that makes detect+encode zero-exchange."""
     import re
 
     assert "FlatMapGroupsIn" not in plan, "salted grouped-map dispatch leaked in"
@@ -170,16 +167,14 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
     assert streamed, plan[:800]
     for sub in streamed:
         # BroadcastExchange roots were skipped above, so every remaining
-        # Exchange/ReusedExchange is on the streamed input. A cached feed
-        # hides the ingest repartition, so there must be none; an uncached
-        # feed must meet exactly one series_id repartition first (the
-        # caller's), and only the series' synthesis below it may shuffle
+        # Exchange/ReusedExchange is on the streamed input: the first must
+        # be the caller's one series_id repartition, and only the series'
+        # synthesis below it may shuffle
         exchanges = [t for t in sub if "Exchange" in t]
         ingest = [
             t for t in exchanges if "REPARTITION_BY_NUM" in t and "series_id" in t
         ]
-        bad = exchanges if not ingest else exchanges[: exchanges.index(ingest[0])]
-        assert not bad and len(ingest) <= 1, (
+        assert len(ingest) == 1 and exchanges[0] == ingest[0], (
             f"exchange on a MapInArrow streamed side: {exchanges}"
         )
 
@@ -220,21 +215,24 @@ def test_entry_fused_plan_and_rows(spark):
 
 def test_gapfill_zero_exchange_detect_plan(spark):
     """transcripts_segment_gapfill runs the SAME zero-exchange colocated
-    detect (a future edit must not silently reintroduce a salt shuffle).
-    Its gap-fill windows legitimately require one series_id
-    ENSURE_REQUIREMENTS exchange over the cached feed (the AQE-wrapped
-    cache exposes UnknownPartitioning, so the window cannot reuse the
-    ingest partitioning) — that is a window requirement, not a salted
-    dispatch, and the detect stage itself stays exchange-free. The initial
-    plan may print the uncached detect subtree once per consumer; every
-    occurrence must be colocated."""
+    detect (a future edit must not silently reintroduce a salt shuffle),
+    and runs it once: the gap-fill reads the segmented series once, so the
+    final plan holds one detect MapInArrow, and nothing is left cached.
+    The initial plan prints the detect subtree too; every occurrence must
+    be colocated."""
     import __spark_entry__ as entry
 
+    spark.catalog.clearCache()
     df = entry.queries()["transcripts_segment_gapfill"](
         spark, "/root/testdata/sf0.001"
     )
+    df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     _assert_colocated_detect_plan(plan, n_map_in_arrow=None)
+    final = plan.split("\n+- == Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("MapInArrow") == 1, final[:1500]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_dist_zip_matches_working_tree():

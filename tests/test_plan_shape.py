@@ -4,8 +4,10 @@ run may not rise. The pins are the counts measured before the per-series
 runner (operators/colocated.py) replaced the salted grouped-map
 dispatchers, with this suite's session (4 cores, 4 shuffle partitions),
 except the two transcript flagships, pinned at their counts after their
-CUSUM pre-filter gate was dropped (39 -> 6 and 80 -> 54). Cached subplans
-are printed inside their InMemoryRelation and count too."""
+CUSUM pre-filter gate was dropped (39 -> 6 and 80 -> 54), and the gap-fill
+flagship again after it dropped its series cache and began to detect once
+(54 -> 12). Cached subplans are printed inside their InMemoryRelation and
+count too."""
 
 import re
 
@@ -29,7 +31,7 @@ SHUFFLES_BEFORE_RUNNER = {
     "cpd_rulsif": 6,
     "cpd_detect_counts": 4,
     "transcripts_cpd_rollup": 6,
-    "transcripts_segment_gapfill": 54,
+    "transcripts_segment_gapfill": 12,
     "cpd_bocpd_offline_counts": 4,
     "cpd_colocated_metrics": 12,
 }

@@ -254,32 +254,65 @@ def test_distinct_sketch_hierarchy(spark):
         assert abs(est - exact[k]) / max(exact[k], 1) < 0.05, (k, est, exact[k])
 
 
+# segment_gapfill_turns output, computed before the gap-fill became one
+# window pass. "s" has holes in both of its segments; in "a" and "b" rows
+# with a null value sit at a segment's head, middle and tail ("b" has an
+# all-null segment); "c" is one row.
+GAPFILL_ROWS = [
+    ("a", 0, 0, None, None, 1.0),
+    ("a", 0, 1, 1.0, 1.0, 1.0),
+    ("a", 0, 2, None, 1.0, 2.0),
+    ("a", 0, 3, None, 1.0, 3.0),
+    ("a", 0, 4, 4.0, 4.0, 4.0),
+    ("a", 0, 5, None, 4.0, 4.0),
+    ("a", 0, 6, None, 4.0, 4.0),
+    ("a", 1, 7, 2.0, 2.0, 2.0),
+    ("a", 1, 8, None, 2.0, 3.033333333333333),
+    ("a", 1, 9, None, 2.0, 4.066666666666666),
+    ("a", 1, 10, 5.1, 5.1, 5.1),
+    ("a", 1, 11, None, 5.1, 5.633333333333333),
+    ("a", 1, 12, None, 5.1, 6.166666666666666),
+    ("a", 1, 13, 6.7, 6.7, 6.7),
+    ("a", 1, 14, None, 6.7, 6.7),
+    ("b", 0, 2, None, None, None),
+    ("b", 0, 3, None, None, None),
+    ("b", 0, 4, None, None, None),
+    ("b", 1, 5, None, None, 3.0),
+    ("b", 1, 6, 3.0, 3.0, 3.0),
+    ("c", 0, 4, 1.5, 1.5, 1.5),
+    ("s", 0, 0, 1.0, 1.0, 1.0),
+    ("s", 0, 1, 2.0, 2.0, 2.0),
+    ("s", 0, 2, None, 2.0, 4.0),
+    ("s", 0, 3, None, 2.0, 6.0),
+    ("s", 0, 4, 8.0, 8.0, 8.0),
+    ("s", 1, 5, 10.0, 10.0, 10.0),
+    ("s", 1, 6, None, 10.0, 15.0),
+    ("s", 1, 7, 20.0, 20.0, 20.0),
+]
+
+
 def test_segment_gapfill_turns(spark):
     """North-rule gap-fill between change points: holes in the per-segment
     turn grid get LOCF + linear interpolation; segment boundaries are never
-    bridged (each segment fills independently)."""
+    bridged (each segment fills independently); observed rows pass through.
+    A row with a null ``value`` is a gap that still extends its segment's
+    grid to its ``t``."""
     from pysatl_cpd_spark.operators.gapfill import segment_gapfill_turns
 
+    n = None
     series = spark.createDataFrame(
-        [("s", 0, 1.0), ("s", 1, 2.0), ("s", 4, 8.0),   # hole at t=2,3
-         ("s", 5, 10.0), ("s", 7, 20.0)],                # hole at t=6
+        [("s", 0, 1.0), ("s", 1, 2.0), ("s", 4, 8.0), ("s", 5, 10.0), ("s", 7, 20.0),
+         ("a", 0, n), ("a", 1, 1.0), ("a", 3, n), ("a", 4, 4.0), ("a", 6, n),
+         ("a", 7, 2.0), ("a", 9, n), ("a", 10, 5.1), ("a", 13, 6.7), ("a", 14, n),
+         ("b", 2, n), ("b", 4, n), ("b", 5, n), ("b", 6, 3.0),
+         ("c", 4, 1.5)],
         "series_id string, t long, value double",
     )
-    cps = spark.createDataFrame([("s", 5)], "series_id string, change_point long")
-    rows = {
-        (r.series_id, r.segment_id, r.t): r
-        for r in segment_gapfill_turns(series, cps).collect()
-    }
-    assert len(rows) == 8  # seg0: t 0..4 (5 rows), seg1: t 5..7 (3 rows)
-    # linear interp inside seg0's hole: 2.0 -> 8.0 over t in (1, 4)
-    assert abs(rows[("s", 0, 2)].value_interp - 4.0) < 1e-12
-    assert abs(rows[("s", 0, 3)].value_interp - 6.0) < 1e-12
-    assert rows[("s", 0, 2)].value_locf == 2.0 and rows[("s", 0, 3)].value_locf == 2.0
-    # seg1 fills between its own points only (5 -> 7), never from seg0
-    assert abs(rows[("s", 1, 6)].value_interp - 15.0) < 1e-12
-    assert rows[("s", 1, 6)].value_locf == 10.0
-    # observed rows pass through untouched
-    assert rows[("s", 0, 4)].value_interp == 8.0 and rows[("s", 1, 5)].value_locf == 10.0
+    cps = spark.createDataFrame(
+        [("s", 5), ("a", 7), ("b", 5)], "series_id string, change_point long"
+    )
+    got = sorted(tuple(r) for r in segment_gapfill_turns(series, cps).collect())
+    assert got == GAPFILL_ROWS
 
 
 def test_north_star_composition_end_to_end(spark):
