@@ -811,9 +811,7 @@ def gorilla_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates (count/min/max/first/last are exact under a lossless codec)."""
     from pysatl_cpd_spark.operators.segments import roundtrip_summaries
 
-    # the co-located series: the repartition under the rank window is the
-    # one shuffle, and the encode runs on it with no second exchange
-    series = _event_series_colocated(spark, sf_dir).withColumn(
+    series = _event_series(spark, sf_dir).withColumn(
         "segment_id", F.lit(0).cast("long")
     )
     # fused encode->decode->summarize (roundtrip_summaries): the same codec
@@ -1095,20 +1093,6 @@ def _event_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events_series(_t(spark, sf_dir, "events"))
 
 
-def _event_series_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Series frame for the zero-exchange detect dispatches: the explicit
-    repartition under the rank window is the ONE shuffle of the whole
-    detect pipeline (the window reuses it, detection adds none) and
-    guarantees every partition holds complete series. Same rows as
-    ``_event_series``."""
-    from pysatl_cpd_spark.operators.series import events_series
-
-    return events_series(
-        _t(spark, sf_dir, "events"),
-        colocate=spark.sparkContext.defaultParallelism,
-    )
-
-
 def cpd_bocpd_offline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.detectors.lockstep_offline import (
         LockstepBayesianOffline,
@@ -1117,11 +1101,9 @@ def cpd_bocpd_offline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # batched offline-BOCPD kernel — bit-identical to the sequential
     # BayesianOffline(learning_steps=20) (tests/test_lockstep_offline.py),
-    # 1.8-2.4x per core at this series shape. Colocated dispatch over the
-    # explicitly-repartitioned series: the detect stage reuses the window's
-    # one shuffle instead of paying a second exchange.
+    # 1.8-2.4x per core at this series shape.
     return detect_lockstep_colocated(
-        _event_series_colocated(spark, sf_dir),
+        _event_series(spark, sf_dir),
         lambda: LockstepBayesianOffline(learning_steps=20),
     )
 
@@ -1141,7 +1123,7 @@ def cpd_bocpd_offline_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.operators.cpd import detect_counts_lockstep
 
     return detect_counts_lockstep(
-        _event_series_colocated(spark, sf_dir),
+        _event_series(spark, sf_dir),
         lambda: LockstepBayesianOffline(
             learning_steps=10, rate=50.0, threshold=0.04, mode="detect"
         ),
@@ -1166,11 +1148,8 @@ def cpd_bocpd_online(spark: SparkSession, sf_dir: str) -> DataFrame:
         model="gauss",
         bare=True,
     )
-    # colocated dispatch: the window's explicit repartition is the one
-    # shuffle; detection streams each partition's complete series with no
-    # second exchange (output identical — kernel lanes independent)
     return detect_lockstep_colocated(
-        _event_series_colocated(spark, sf_dir), factory
+        _event_series(spark, sf_dir), factory
     )
 
 
@@ -1190,9 +1169,8 @@ def cpd_linear_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     factory = lambda: LockstepLinearBOCPD(  # noqa: E731
         50.0, 10, 0.04, 500, 250
     )
-    # colocated dispatch: one shuffle total (see cpd_bocpd_online)
     return detect_lockstep_colocated(
-        _event_series_colocated(spark, sf_dir), factory
+        _event_series(spark, sf_dir), factory
     )
 
 
@@ -1202,9 +1180,8 @@ def cpd_cusum_localized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # batched CUSUM kernel — bit-identical to the sequential CusumDetector
     # (tests/test_lockstep_cusum.py), ~3x per core at this series shape.
-    # Colocated dispatch: one shuffle total (see cpd_bocpd_online).
     return detect_lockstep_colocated(
-        _event_series_colocated(spark, sf_dir),
+        _event_series(spark, sf_dir),
         lambda: LockstepCusum(k=2.0, h=20.0),
     )
 
@@ -1549,7 +1526,7 @@ def cpd_detect_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bare=True,
         detector="drop",
     )
-    return detect_counts_lockstep(_event_series_colocated(spark, sf_dir), factory)
+    return detect_counts_lockstep(_event_series(spark, sf_dir), factory)
 
 
 _QSCALE = 10_000_000  # embedding int64 quantization scale (matches COSINE_SQL)
@@ -2163,16 +2140,12 @@ def transcripts_cpd_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
-    # explicit repartition on the series key: pays the ONE shuffle the
-    # zero-exchange detect+encode assume (and discharges the documented
-    # AQE-coalescing caveat for window-derived series — a user-specified
-    # repartition is exempt). Detect and encode read the same uncached
-    # series, so encode runs the lockstep CUSUM kernel (bit-identical to the
-    # sequential CusumDetector, tests/test_lockstep_cusum.py) inside its own
-    # pass: one MapInArrow, no further exchange (plan-asserted in
+    # Detect and encode read the same uncached series, so encode runs the
+    # lockstep CUSUM kernel (bit-identical to the sequential CusumDetector,
+    # tests/test_lockstep_cusum.py) inside its own pass: one MapInArrow over
+    # the series' one co-locating shuffle (plan-asserted in
     # tests/test_entry_contract.py)
-    n_parts = spark.sparkContext.defaultParallelism
-    series = turn_rate_series(tr).repartition(n_parts, "series_id")
+    series = turn_rate_series(tr)
     cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=0.05, h=2.0))
     return encode_segments_colocated(series, cps).select(
         "series_id",
@@ -2204,12 +2177,7 @@ def transcripts_segment_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
-    # same zero-exchange shape as the flagship: one explicit key repartition
-    # buys a colocated (shuffle-free) lockstep detect
-    n_parts = spark.sparkContext.defaultParallelism
-    series = turn_rate_series(tr.filter(F.col("role") != "tool")).repartition(
-        n_parts, "series_id"
-    )
+    series = turn_rate_series(tr.filter(F.col("role") != "tool"))
     cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=0.05, h=2.0))
     out = segment_gapfill_turns(series, cps)
     return out.select(
@@ -2338,8 +2306,7 @@ def cpd_colocated_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
     tr = transcripts_table(spark, n_conversations=20, avg_turns=300, seed=42)
-    n_parts = spark.sparkContext.defaultParallelism
-    series = turn_rate_series(tr).repartition(n_parts, "series_id")
+    series = turn_rate_series(tr)
     m = detect_colocated_instrumented(series, lambda: LockstepCusum(k=0.05, h=2.0))
     return m.select("series_id", "n_points", "n_change_points")
 
@@ -2369,7 +2336,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from pysatl_cpd_spark.operators.cpd import detect_lockstep_colocated
     from pysatl_cpd_spark.operators.segments import encode_segments_colocated
 
-    series = _event_series_colocated(spark, sf_dir)
+    series = _event_series(spark, sf_dir)
     cps = detect_lockstep_colocated(series, lambda: LockstepCusum(k=2.0, h=20.0))
     return encode_segments_colocated(series, cps).drop("blob")
 

@@ -10,7 +10,7 @@ stops dominating — the default-scale ``rollup_points_per_sec`` is kept for
 r1-r3 comparability but is ~half fixed cost.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the cores this process may run on),
      SPARK_GRAFT_BENCH_CONVS / _TURNS to size the transcripts pipeline.
 """
 
@@ -84,7 +84,9 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
 
     # not cached: detect + encode run as one fused pass over the series, so
     # it has one consumer (uncached measured 9.70 s vs cached 10.09 s,
-    # median of 6 interleaved runs at 600k points on 4 cores)
+    # median of 6 interleaved runs at 600k points on 4 cores). tr keeps its
+    # own repartition and cache because the rollup tiers read it too; the
+    # series' colocate() sees through the cache and adds no shuffle.
     series = turn_rate_series(tr)
     # cross-series lockstep kernel: bit-identical to the sequential
     # BayesianLinearHeuristic(BayesianOnlineDetector(...)) stack (differential
@@ -96,9 +98,6 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
         start_after=500,
         prep=250,
     )
-    # zero-exchange dispatch: the explicit conv_id repartition above makes
-    # every partition hold complete series, so detection needs no second
-    # shuffle (measured 1.95->1.34 s on this stage at 600k pts, same rows)
     cps = detect_lockstep_colocated(series, factory)
     # cps is detect's own uncached result on this series, so the encode runs
     # the detector inline: one Python pass per series, no marker join
@@ -125,7 +124,7 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     n_convs = int(os.environ.get("SPARK_GRAFT_BENCH_CONVS", "1500"))
     avg_turns = int(os.environ.get("SPARK_GRAFT_BENCH_TURNS", "400"))
     sf = sf_dir.rstrip("/").split("sf")[-1]

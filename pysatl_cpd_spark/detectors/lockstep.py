@@ -167,25 +167,28 @@ class _Cohort:
         self.count = 0
         self.lane_of_row = np.full(n_rows, -1, dtype=np.int64)
         shape = (n_rows, cap)
-        # posterior ping-pong (zero-padded invariant) + scratch
+        # posterior ping-pong (zero-padded invariant) + scratch. Every buffer
+        # starts zeroed: the kernels compute on padded columns before
+        # copyto(invalid) masks them, so those hold zeros or finite values
+        # left by earlier lanes, never uninitialized memory
         self.rl_a = np.zeros(shape)
         self.rl_b = np.zeros(shape)
-        self.s1 = np.empty(shape)
-        self.s2 = np.empty(shape)
-        self.bmask = np.empty(shape, dtype=bool)
+        self.s1 = np.zeros(shape)
+        self.s2 = np.zeros(shape)
+        self.bmask = np.zeros(shape, dtype=bool)
         self.invalid = np.ones(shape, dtype=bool)  # True where col >= r
         self.r = np.zeros(n_rows, dtype=np.int64)
         if kind == "gauss":
-            self.mu_a = np.empty(shape)
-            self.mu_b = np.empty(shape)
-            self.beta_a = np.empty(shape)
-            self.beta_b = np.empty(shape)
-            self.mu0 = np.empty(n_rows)
-            self.beta0 = np.empty(n_rows)
+            self.mu_a = np.zeros(shape)
+            self.mu_b = np.zeros(shape)
+            self.beta_a = np.zeros(shape)
+            self.beta_b = np.zeros(shape)
+            self.mu0 = np.zeros(n_rows)
+            self.beta0 = np.zeros(n_rows)
         else:
-            self.scale_a = np.empty(shape)
-            self.scale_b = np.empty(shape)
-            self.scale0 = np.empty(n_rows)
+            self.scale_a = np.zeros(shape)
+            self.scale_b = np.zeros(shape)
+            self.scale0 = np.zeros(n_rows)
 
     _2D = (
         "rl_a", "rl_b", "s1", "s2", "bmask", "invalid",
@@ -200,12 +203,10 @@ class _Cohort:
             old = getattr(self, name, None)
             if old is None:
                 continue
-            if name in ("rl_a", "rl_b"):
-                new = np.zeros((self.n_rows, cap))
-            elif name == "invalid":
+            if name == "invalid":
                 new = np.ones((self.n_rows, cap), dtype=bool)
             else:
-                new = np.empty((self.n_rows, cap), dtype=old.dtype)
+                new = np.zeros((self.n_rows, cap), dtype=old.dtype)
             new[:, : self.cap] = old
             setattr(self, name, new)
         self.cap = cap

@@ -11,6 +11,8 @@ module is that path.
     so a split series cannot silently reach a kernel. An explicit
     repartition is also exempt from AQE's byte-based coalescing, which
     would otherwise merge a small-but-Python-heavy stage onto a few cores.
+    The series derivations (operators/series.py) call it under their
+    window, so the window and the runner share that one shuffle.
   - ``map_series`` is the runner: a JVM-side ``sortWithinPartitions`` (a
     local Tungsten sort, no exchange) feeds ``mapInArrow``, and
     ``iter_sorted_series`` walks the sorted batch stream one complete

@@ -3,38 +3,35 @@
 The engine's canonical detector input is a keyed, indexed, double-valued
 series (SURVEY.md §1.3). These helpers stay entirely in JVM-side column
 expressions (window functions), so Catalyst prunes/pushes everything; no UDFs.
+
+The window-derived series pass their keyed projection through
+``colocate()`` (operators/colocated.py) before the window. The window
+reuses that one shuffle, and the per-series runner downstream finds every
+series already co-located, so no caller places a repartition by hand.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, Window as W, functions as F
+
+from pysatl_cpd_spark.operators.colocated import colocate
 
 
-def events_series(
-    events: DataFrame, value_col: str = "value", colocate: int | None = None
-) -> DataFrame:
+def events_series(events: DataFrame, value_col: str = "value") -> DataFrame:
     """events(event_id, ts, user_id, ...) → (series_id, t, value) ordered per
     user; t is the per-user 0-based position by (ts, event_id).
 
     The row_number window partitions by the *cast* key, the key the
-    detectors group on.
-
-    ``colocate=n`` puts an EXPLICIT ``repartition(n, series_id)`` under the
-    window instead of the window's own ENSURE_REQUIREMENTS exchange: the
-    same single shuffle, but (a) user-specified, so AQE's byte-based
-    coalescing cannot merge the small-but-Python-heavy partitions down to a
-    handful, and (b) visible in the plan as hash partitioning on
-    series_id, so the co-located runner (operators/colocated.py) consumes
-    the result with no second shuffle. Without it the runner adds its own
-    repartition over the window. Values are identical either way."""
-    keyed = events.select(
-        F.col("user_id").cast("string").alias("series_id"),
-        "ts",
-        "event_id",
-        F.col(value_col).cast("double").alias("value"),
+    detectors group on."""
+    keyed = colocate(
+        events.select(
+            F.col("user_id").cast("string").alias("series_id"),
+            "ts",
+            "event_id",
+            F.col(value_col).cast("double").alias("value"),
+        ),
+        ["series_id"],
     )
-    if colocate is not None:
-        keyed = keyed.repartition(colocate, "series_id")
     w = W.partitionBy("series_id").orderBy("ts", "event_id")
     return keyed.select(
         "series_id",
@@ -54,10 +51,11 @@ def turn_rate_series(
     The derived `input_hint` series for transcripts: a change in inter-turn
     gap distribution shows up as a level shift in the rate.
     """
+    keyed = colocate(transcripts.select(key, order, ts), [key])
     w = W.partitionBy(key).orderBy(order)
     gap = F.col(ts).cast("timestamp").cast("double") - F.lag(F.col(ts).cast("timestamp").cast("double")).over(w)
     return (
-        transcripts.select(
+        keyed.select(
             F.col(key).alias("series_id"),
             F.col(order).alias("t"),
             gap.alias("gap_s"),
@@ -84,18 +82,4 @@ def tool_call_rate_series(
                 / F.count(F.lit(1))
             ).alias("value")
         )
-    )
-
-
-def inter_event_gap_series(events: DataFrame) -> DataFrame:
-    """Per-user inter-event gap (seconds) series from the events table."""
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap: Column = F.col("ts").cast("timestamp").cast("double") - F.lag(F.col("ts").cast("timestamp").cast("double")).over(w)
-    return (
-        events.select(
-            F.col("user_id").cast("string").alias("series_id"),
-            (F.row_number().over(w) - F.lit(1)).alias("t"),
-            gap.alias("value"),
-        )
-        .filter(F.col("value").isNotNull())
     )

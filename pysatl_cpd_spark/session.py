@@ -61,10 +61,11 @@ def get_spark(
     ``local-cluster[4,8,12288]`` for a process-isolated multi-executor
     stand-in (each executor its own JVM + memory arena; the closest a single
     box gets to a real N-node cluster for scaling measurements). ``cores``
-    must still state the TOTAL core count so shuffle sizing matches.
-    ``driver_memory`` defaults to :func:`default_driver_memory`."""
+    must still state the TOTAL core count so shuffle sizing matches. It
+    defaults to ``SPARK_GRAFT_CPUS``, else to the cores this process may run
+    on. ``driver_memory`` defaults to :func:`default_driver_memory`."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     # one BLAS/OMP thread per Python worker: N workers each spawning N BLAS

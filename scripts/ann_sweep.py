@@ -116,7 +116,7 @@ def synthetic_embeddings(spark, n: int, n_clusters: int = 200, seed: int = 42):
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 50
-    spark = get_spark(cores=8)
+    spark = get_spark()
     if sf_dir.startswith("synthetic:"):
         emb = synthetic_embeddings(spark, int(sf_dir.split(":")[1])).cache()
     else:

@@ -43,7 +43,7 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     only = set(sys.argv[1:])
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -40,7 +40,7 @@ from pysatl_cpd_spark.sources.transcripts import (  # noqa: E402
 
 
 def run(workdir: str) -> None:
-    spark = get_spark(cores=8, app_name="pysatl_cpd_pipeline")
+    spark = get_spark(app_name="pysatl_cpd_pipeline")
     job = CheckpointedJob(spark, workdir, {"seed": 42, "n_conv": 200, "turns": 300})
 
     def gen_stage(_):

@@ -145,11 +145,11 @@ def _kept(df, keys=("series_id",)):
 def test_colocate_keeps_hash_partitioned_inputs(spark):
     """Inputs whose plan already hash-partitions on exactly the key get no
     new exchange: the perfbench rollup shape (repartition on conv_id, rate
-    window, alias to series_id), the ``events_series(colocate=n)`` frame the
-    cpd_* queries read, and a cache under a broadcast left-semi join while
-    the cache is still unfilled (AQE reports UnknownPartitioning for it; the
-    check reads the plan that fills the cache and does not enter the
-    broadcast side)."""
+    window, alias to series_id), the ``events_series`` frame the cpd_*
+    queries read (it co-locates under its own window), and a cache under a
+    broadcast left-semi join while the cache is still unfilled (AQE reports
+    UnknownPartitioning for it; the check reads the plan that fills the
+    cache and does not enter the broadcast side)."""
     from pysatl_cpd_spark.operators.series import events_series, turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
@@ -159,7 +159,7 @@ def test_colocate_keeps_hash_partitioned_inputs(spark):
     assert _kept(
         turn_rate_series(tr.select("conv_id", "turn_idx", "ts").repartition(4, "conv_id"))
     )
-    assert _kept(events_series(_events(spark), colocate=4))
+    assert _kept(events_series(_events(spark)))
 
     cached = turn_rate_series(tr).repartition(4, "series_id").cache()
     try:
@@ -179,16 +179,23 @@ def test_colocate_repartitions_everything_else(spark):
     every series sits inside one partition. (Spark drops that repartition
     when it equals the exchange below it, as for the window here when
     shuffle partitions == default parallelism.)"""
+    from pyspark.sql import Window as W
+
     from pysatl_cpd_spark.operators.colocated import colocate
     from pysatl_cpd_spark.operators.series import events_series
 
     events = _events(spark)
-    colocated = events_series(events, colocate=4)
+    windowed = events.select(
+        F.col("user_id").cast("string").alias("series_id"), "ts"
+    ).select(
+        "series_id",
+        F.row_number().over(W.partitionBy("series_id").orderBy("ts")).alias("t"),
+    )
     cases = [
-        (events_series(events), ("series_id",)),
+        (windowed, ("series_id",)),
         (_series_df(spark).repartition(4), ("series_id",)),
         (spark.createDataFrame([("a", 0, 1.0)], "series_id string, t long, value double"), ("series_id",)),
-        (colocated.withColumn("chunk_id", F.col("t") % 3), ("series_id", "chunk_id")),
+        (events_series(events).withColumn("chunk_id", F.col("t") % 3), ("series_id", "chunk_id")),
     ]
     for df, keys in cases:
         assert not _kept(df, keys)

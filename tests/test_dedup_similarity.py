@@ -500,34 +500,38 @@ def test_multimodal_resize_and_frames(spark):
 
 def test_quantized_cosine_matches_float_cosine():
     """Property: the int64-quantized cosine (scale 1e7) used by the
-    oracle-portable paths differs from float cosine by < 1e-5 for unit-scale
-    vectors — quantization is a portability device, not an accuracy loss."""
-    from hypothesis import given, settings
+    oracle-portable paths stays within its quantization bound of the float
+    cosine. Rounding moves each component by at most 0.5/scale, so each
+    vector by at most 0.5/scale * sqrt(d), which turns it by an angle of
+    about that over its norm; the cosine moves by at most the sum of the
+    two angles."""
+    from hypothesis import example, given, settings
     from hypothesis import strategies as st
     import numpy as np
 
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(st.floats(min_value=-1.0, max_value=1.0, width=32), min_size=4, max_size=32),
-        st.data(),
+    scale = 1e7
+    unit = st.floats(min_value=-1.0, max_value=1.0, width=32)
+    pairs = st.integers(4, 32).flatmap(
+        lambda d: st.tuples(*[st.lists(unit, min_size=d, max_size=d)] * 2)
     )
-    def law(a, data):
-        b = data.draw(
-            st.lists(
-                st.floats(min_value=-1.0, max_value=1.0, width=32),
-                min_size=len(a), max_size=len(a),
-            )
-        )
-        av, bv = np.array(a, dtype=np.float64), np.array(b, dtype=np.float64)
+
+    @settings(max_examples=200, deadline=None)
+    @given(pairs)
+    @example(([0.001953125, 6.103515625e-05, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]))
+    def law(pair):
+        av, bv = (np.array(v, dtype=np.float64) for v in pair)
         na, nb = np.linalg.norm(av), np.linalg.norm(bv)
         if na < 1e-3 or nb < 1e-3:
             return  # degenerate norms amplify quantization arbitrarily
         exact = float(av @ bv / (na * nb))
-        qa = np.round(av * 1e7).astype(np.int64)
-        qb = np.round(bv * 1e7).astype(np.int64)
+        qa = np.round(av * scale).astype(np.int64)
+        qb = np.round(bv * scale).astype(np.int64)
         qn = float(np.sqrt(float(qa @ qa) * float(qb @ qb)))
         quant = float(qa @ qb) / qn
-        assert abs(quant - exact) < 1e-5, (exact, quant)
+        # each angle is arcsin(shift / norm), which under the norm guard
+        # exceeds the ratio by under 1e-7 of itself: the 1.001 covers it
+        bound = 0.5 / scale * np.sqrt(len(av)) * (1 / na + 1 / nb)
+        assert abs(quant - exact) <= 1.001 * bound, (exact, quant, bound)
 
     law()
 

@@ -3,6 +3,7 @@ deployments consume dist/pysatl_cpd_spark.zip — both must stay exactly in
 step with the working tree."""
 
 import os
+import re
 import zipfile
 
 import __spark_entry__ as entry_mod
@@ -138,6 +139,11 @@ def _streamed_side_lines(plan: str, op: str) -> "list[list[str]]":
     return subtrees
 
 
+# the one paid ingest shuffle: a repartition on the series key alone, under
+# its source name (conv_id for transcripts, series_id for events)
+_INGEST = re.compile(r"hashpartitioning\((conv_id|series_id)#\d+L?, \d+\), REPARTITION_BY_NUM")
+
+
 def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
     """The load-bearing zero-exchange properties (robust across Spark
     versions / AQE config, per round-7 advice — no exact exchange-count
@@ -146,21 +152,17 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
       - the colocated MapInArrow dispatches are used (no FlatMapGroupsIn*,
         i.e. no salted grouped-map path);
       - NO exchange anywhere partitions by the salt 'bucket' column;
-      - the caller's one paid ingest shuffle is present
-        (REPARTITION_BY_NUM on series_id);
-      - between each MapInArrow and the caller's series_id repartition
-        there is NO other shuffle of any kind on its streamed input — the
-        property that makes detect+encode zero-exchange."""
-    import re
-
+      - the one paid ingest shuffle is present (REPARTITION_BY_NUM on the
+        series key, which the series derivation places under its window);
+      - between each MapInArrow and that repartition there is NO other
+        shuffle of any kind on its streamed input — the property that
+        makes detect+encode zero-exchange."""
     assert "FlatMapGroupsIn" not in plan, "salted grouped-map dispatch leaked in"
     exchanges = {m.group(0) for m in re.finditer(r"Exchange \w+[^\n]*", plan)}
     assert not any(
         "bucket" in e for e in exchanges if "hashpartitioning" in e
     ), sorted(exchanges)
-    assert any(
-        "REPARTITION_BY_NUM" in e and "series_id" in e for e in exchanges
-    ), sorted(exchanges)
+    assert any(_INGEST.search(e) for e in exchanges), sorted(exchanges)
     streamed = _streamed_side_lines(plan, "MapInArrow")
     if n_map_in_arrow is not None:
         assert len(streamed) == n_map_in_arrow, plan[:800]
@@ -168,12 +170,10 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
     for sub in streamed:
         # BroadcastExchange roots were skipped above, so every remaining
         # Exchange/ReusedExchange is on the streamed input: the first must
-        # be the caller's one series_id repartition, and only the series'
+        # be the one series-key repartition, and only the series'
         # synthesis below it may shuffle
         exchanges = [t for t in sub if "Exchange" in t]
-        ingest = [
-            t for t in exchanges if "REPARTITION_BY_NUM" in t and "series_id" in t
-        ]
+        ingest = [t for t in exchanges if _INGEST.search(t)]
         assert len(ingest) == 1 and exchanges[0] == ingest[0], (
             f"exchange on a MapInArrow streamed side: {exchanges}"
         )
@@ -181,10 +181,11 @@ def _assert_colocated_detect_plan(plan: str, n_map_in_arrow: "int | None"):
 
 def test_flagship_zero_exchange_plan(spark):
     """The contract flagship (transcripts_cpd_rollup) runs the ZERO-EXCHANGE
-    fused detect+encode path: one explicit caller repartition on series_id
-    pays the only series-data shuffle, and the one MapInArrow (encode, with
-    the detector run inline) streams straight from that repartition through
-    a local sort, with no exchange and no broadcast."""
+    fused detect+encode path: the repartition on conv_id that the rate
+    series places under its window pays the only series-data shuffle, and
+    the one MapInArrow (encode, with the detector run inline) streams
+    straight from that repartition through a local sort, with no exchange
+    and no broadcast."""
     import __spark_entry__ as entry
 
     df = entry.queries()["transcripts_cpd_rollup"](spark, "/root/testdata/sf0.001")
@@ -200,12 +201,13 @@ ENTRY_ROWS_SHA256 = "d85e7336e1171d6bf7dd90254ef1b305d7c5cd7b195afcbd6525d1f6637
 
 def test_entry_fused_plan_and_rows(spark):
     """entry() detects and encodes in one fused pass: its plan has one
-    MapInArrow and no BroadcastExchange, and its sf0.001 rows are pinned."""
+    MapInArrow fed by the events series' one series_id repartition and no
+    BroadcastExchange, and its sf0.001 rows are pinned."""
     import hashlib
 
     df = entry_mod.entry(spark)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInArrow") == 1, plan[:800]
+    _assert_colocated_detect_plan(plan, n_map_in_arrow=1)
     assert "BroadcastExchange" not in plan, plan[:800]
     rows = sorted(repr(tuple(r)) for r in df.collect())
     assert len(rows) == 30

@@ -145,6 +145,30 @@ def test_lockstep_empty_and_single():
     assert _lockstep([s]) == [_sequential_cps(s)]
 
 
+@pytest.mark.parametrize("kind", ["gauss", "expo"])
+def test_cohort_buffers_hold_only_finite_values(kind):
+    """The kernels compute on a cohort's padded columns before masking
+    them, so a fresh cohort and a grown one must hold no uninitialized
+    memory. Freed inf-filled blocks of the same sizes sit on the heap first,
+    so a buffer that is not cleared picks their values up."""
+    from pysatl_cpd_spark.detectors.lockstep import _Cohort
+
+    def dirty_heap(shape):
+        junk = [np.full(shape, np.inf) for _ in range(32)]
+        del junk
+
+    dirty_heap((16, 64))
+    co = _Cohort(kind, 16, cap=64)
+    dirty_heap((16, 128))
+    grown = _Cohort(kind, 16, cap=64)
+    grown.ensure_width(100)
+    for cohort in (co, grown):
+        for name, arr in vars(cohort).items():
+            if isinstance(arr, np.ndarray):
+                assert np.isfinite(arr).all(), name
+    assert grown.cap == 128
+
+
 @pytest.mark.parametrize("seed", [7, 8, 9])
 def test_lockstep_fuzz(seed):
     rng = np.random.default_rng(seed)

@@ -6,8 +6,11 @@ dispatchers, with this suite's session (4 cores, 4 shuffle partitions),
 except the two transcript flagships, pinned at their counts after their
 CUSUM pre-filter gate was dropped (39 -> 6 and 80 -> 54), and the gap-fill
 flagship again after it dropped its series cache and began to detect once
-(54 -> 12). Cached subplans are printed inside their InMemoryRelation and
-count too."""
+(54 -> 12). The three transcript entries are pinned again after their
+series began to co-locate before the rate window, so that the window and
+the runner share one shuffle: the flagship 6 -> 4, the gap-fill 12 -> 9 and
+cpd_colocated_metrics 6 -> 4 (its pin was 12). Cached subplans are printed
+inside their InMemoryRelation and count too."""
 
 import re
 
@@ -30,10 +33,10 @@ SHUFFLES_BEFORE_RUNNER = {
     "cpd_kliep": 6,
     "cpd_rulsif": 6,
     "cpd_detect_counts": 4,
-    "transcripts_cpd_rollup": 6,
-    "transcripts_segment_gapfill": 12,
+    "transcripts_cpd_rollup": 4,
+    "transcripts_segment_gapfill": 9,
     "cpd_bocpd_offline_counts": 4,
-    "cpd_colocated_metrics": 12,
+    "cpd_colocated_metrics": 4,
 }
 
 
