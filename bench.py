@@ -1,5 +1,6 @@
 """Benchmark harness. Prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}
+{"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...},
+with per-query rep spreads and classes compiled per rep ("codegen_compiles").
 
 Headline set: the oracle-checked relational/rollup/gap-fill queries plus the
 CPD detectors and the flagship CPD-adaptive rollup pipeline over synthesized
@@ -24,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from pysatl_cpd_spark.session import get_spark  # noqa: E402
+from pysatl_cpd_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -46,8 +47,9 @@ HEADLINE = [
 ]
 
 
-def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, int]:
-    """CPD-adaptive rollup over synthesized transcripts; returns (sec, points)."""
+def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, int, int]:
+    """CPD-adaptive rollup over synthesized transcripts; returns (sec, points,
+    classes compiled)."""
     from pyspark.sql import functions as F
 
     from pysatl_cpd_spark.detectors.lockstep import LockstepLinearBOCPD
@@ -57,6 +59,7 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
     from pysatl_cpd_spark.operators.series import turn_rate_series
     from pysatl_cpd_spark.sources.transcripts import transcripts_table
 
+    c0 = codegen_compiles(spark)
     t0 = time.perf_counter()
     # manual column pruning before the cache: the detector/rollup path never
     # touches the fat `text` column, and a UDF source blocks Catalyst pruning.
@@ -119,7 +122,7 @@ def run_flagship(spark, n_conversations: int, avg_turns: int) -> tuple[float, in
         else:
             tier_df.count()
     tr.unpersist()
-    return time.perf_counter() - t0, n_points
+    return time.perf_counter() - t0, n_points, codegen_compiles(spark) - c0
 
 
 def main() -> None:
@@ -151,25 +154,40 @@ def main() -> None:
     # be classified as noise vs regression from the artifact alone — this
     # VM's ±40% noise phases make a bare min ambiguous across rounds
     raw: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for name in HEADLINE:
+    # classes whole-stage codegen compiled in each rep: a warm rep compiles
+    # 0 unless the generated-code cache thrashes, which wall-time noise hides
+    compiles: dict[str, list[int]] = {name: [] for name in HEADLINE}
+
+    def run_query(name: str) -> None:
+        c0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         qs[name](spark, sf_dir).count()
         raw[name].append(time.perf_counter() - t0)
+        compiles[name].append(codegen_compiles(spark) - c0)
+
+    for name in HEADLINE:
+        run_query(name)
     for _ in range(reps - 1):
         for name in HEADLINE:
             if time.perf_counter() - total0 > rerun_budget:
                 break
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).count()
-            raw[name].append(time.perf_counter() - t0)
+            run_query(name)
     for name in HEADLINE:
         timings[name] = round(min(raw[name]), 3)
 
     # warm the grouped-UDF path (python workers, Arrow codecs, JIT) so the
     # flagship number measures steady-state throughput, not process startup
     run_flagship(spark, max(n_convs // 20, 8), min(avg_turns, 200))
-    first_sec, points = run_flagship(spark, n_convs, avg_turns)
-    samples = [first_sec]
+    samples: list[float] = []
+    compiles["transcripts_cpd_rollup"] = []
+
+    def flagship_rep() -> int:
+        sec, n_points, n_compiled = run_flagship(spark, n_convs, avg_turns)
+        samples.append(sec)
+        compiles["transcripts_cpd_rollup"].append(n_compiled)
+        return n_points
+
+    points = flagship_rep()
     for _ in range(reps - 1):
         # the second sample is unconditional: a noise-phase single shot is
         # exactly the case min-of-N exists for, and the flagship drives the
@@ -178,7 +196,7 @@ def main() -> None:
             time.perf_counter() - total0 > rerun_budget + min(samples)
         ):
             break
-        samples.append(run_flagship(spark, n_convs, avg_turns)[0])
+        flagship_rep()
     flagship_sec = min(samples)
 
     # amortization point: the identical pipeline at 4x the input. The
@@ -201,8 +219,9 @@ def main() -> None:
             max(scale_samples) > 1.2 * min(scale_samples)
         ):
             break
-        sec, scale_points = run_flagship(spark, n_convs * 4, avg_turns)
+        sec, scale_points, n_compiled = run_flagship(spark, n_convs * 4, avg_turns)
         scale_samples.append(sec)
+        compiles.setdefault("flagship_at_scale", []).append(n_compiled)
     if scale_samples:
         extra = {
             "rollup_points_at_scale": scale_points,
@@ -221,7 +240,7 @@ def main() -> None:
         and max(samples) > 1.2 * min(samples)
         and time.perf_counter() - total0 < 2 * rerun_budget
     ):
-        samples.append(run_flagship(spark, n_convs, avg_turns)[0])
+        flagship_rep()
     flagship_sec = min(samples)
     timings["transcripts_cpd_rollup"] = round(flagship_sec, 3)
     raw["transcripts_cpd_rollup"] = samples
@@ -261,6 +280,8 @@ def main() -> None:
                 # per-query min/median/max over all reps this run — the
                 # noise-vs-regression classifier for round-over-round deltas
                 "query_spread": spread,
+                # per-query classes compiled in each rep, in rep order
+                "codegen_compiles": compiles,
                 "sf": sf,
                 # HEADLINE rollup metric: points/sec at the 4x amortization
                 # point (falls back to default scale if the scale run was

@@ -261,9 +261,9 @@ def chunk_series(
     Group key becomes (series_id, chunk_id) so a 10^6-turn conversation fans
     out over many tasks instead of pinning one.
 
-    WHEN TO CHUNK (measured crossover, BENCH.md round-9 table, local[32],
-    chunk_size=200k/overlap=2k, rare-alarm CUSUM; the sweep script that
-    measured it is in git history):
+    WHEN TO CHUNK (measured crossover, local[32], chunk_size=200k/overlap=2k,
+    rare-alarm CUSUM; the round-9 table of BENCH.md and the sweep script
+    that measured it are in git history, last present at commit ee347d4):
     the single colocated lane wins below ~250k points (0.36 s vs 0.48 s —
     the explode+shuffle overhead exceeds the fan-out gain), the arms cross
     between 250k and 500k (0.94 vs 0.78 at 500k), and past ~1M the chunked

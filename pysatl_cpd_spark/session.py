@@ -37,6 +37,10 @@ def _tune_allocator() -> None:
 
 _tune_allocator()
 
+# Entries in Spark's generated-code cache (its default is 100): above the
+# engine's working set, so a warm query compiles nothing (see get_spark).
+CODEGEN_CACHE_ENTRIES = 2048
+
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half of ``MemAvailable``, between 1g and 16g: in local mode the driver
@@ -63,7 +67,23 @@ def get_spark(
     box gets to a real N-node cluster for scaling measurements). ``cores``
     must still state the TOTAL core count so shuffle sizing matches. It
     defaults to ``SPARK_GRAFT_CPUS``, else to the cores this process may run
-    on. ``driver_memory`` defaults to :func:`default_driver_memory`."""
+    on. ``driver_memory`` defaults to :func:`default_driver_memory`.
+
+    Spark keeps the classes its code generator compiles in one static LRU
+    cache, :data:`CODEGEN_CACHE_ENTRIES` entries here and 100 by default. Its
+    working set, measured at sf0.01 on 4 cores: 635 distinct classes across
+    every ``queries()`` entry plus ``entry()``, 209 per ``query_mix`` pass
+    and 55 per rollup job (with stage ids in class names, see below: 857
+    across ``queries()``, 216-221 and 59). With 100 entries every warm mix
+    pass recompiled all of its classes, and the JVM loaded about 400 more
+    classes a pass until a full GC unloaded them: over 10 warm passes loaded
+    classes swung between 24,650 and 25,830 and metaspace grew from 159 to
+    172 MB. With 2048 a warm pass compiles 0, loaded classes stay within
+    24,680-24,880 and metaspace grows from 159 to 169 MB, so holding the
+    working set costs no more metaspace than recompiling it.
+    :func:`codegen_compiles` counts compiles. The size is a static conf,
+    fixed when the JVM first generates code: a JVM whose session was
+    created elsewhere keeps that session's size (100 unless it set one)."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
@@ -123,6 +143,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed on the generated source, and by default each
+        # class is named after its codegen stage id; adaptive re-planning
+        # numbers stages in the order they are created, which varies from
+        # run to run, so cpd_confusion, ann_recall and ngram_contamination
+        # recompiled 4-24 classes on every warm run. Without the id a stage
+        # compiles once, whatever its number.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # scan-split size, parameterised (guide: big sequential scans on a
@@ -155,3 +183,11 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far: the
+    count of its compile-time histogram. A warm query whose classes are
+    all in the generated-code cache adds 0."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -1,7 +1,8 @@
 """Process-isolated executor parity: the engine must produce IDENTICAL
 results when executors are separate JVMs (local-cluster) as when tasks run
 in the driver JVM (local[]) — this is the correctness side of the
-BENCH.md isolated scaling pair, and exercises the executor-side plumbing
+isolated scaling pair recorded in BENCH.md (in git history: it was last
+present at commit ee347d4), and exercises the executor-side plumbing
 (spark.executorEnv PYTHONPATH for cloudpickled detector classes, allocator
 env vars, ParallelGC executor option) that local[] never touches.
 
