@@ -1701,7 +1701,7 @@ JOIN sig sb ON sb.doc_id = p.doc_b
 
 def _simhash_pairs_sql(max_hamming: int = 6) -> str:
     # FULL 120-bit simhash (two md5-half 60-bit hashes), matching
-    # operators/dedup.py::simhash(bits=120): bits 0-59 from hex[1:15],
+    # operators/dedup.py::simhash: bits 0-59 from hex[1:15],
     # bits 60-119 from hex[16:30]; hamming = popcount(lo) + popcount(hi)
     bit_sums = ",\n    ".join(
         f"sum(CASE WHEN ({'h' if i < 60 else 'h2'} >> {i % 60}) & 1 = 1 "

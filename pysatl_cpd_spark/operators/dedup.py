@@ -4,6 +4,14 @@ Exact, MinHash-LSH, SimHash and n-gram-Jaccard near-dup detection over a
 documents table. Everything is built from relational primitives (explode →
 groupBy → join), so it scales shuffle-bound, not driver-bound; hashes are
 md5-derived so a SQL oracle can reproduce them bit-for-bit.
+
+The two near-dup operators with a broadcast kernel, ``shingle_jaccard_pairs``
+and ``simhash_near_dups``, have one rule and nothing to choose: each
+collects its build side with a bounded ``limit(MAX + 1)``, and that one
+collect decides. At most ``MAX`` rows (``BROADCAST_MAX_ROWS`` shingle
+incidences, ``BROADCAST_MAX_DOCS`` SimHash rows) become a broadcast numpy
+kernel; more go to the shuffle self-join, which never has to fit anywhere.
+Both sides give the same rows.
 """
 
 from __future__ import annotations
@@ -11,8 +19,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from pysatl_cpd_spark.functions.text import fingerprint, token_hash64
+from pysatl_cpd_spark.operators.colocated import colocate
 
 _MERSENNE = (1 << 31) - 1  # int64-safe: (h mod p) * a < 2^62
+
+# Broadcast build-side bounds, checked by one bounded collect per call:
+# 16M (doc, shingle-hash) rows are about 250 MB of CSR build arrays, 4M
+# SimHash rows 96 MB as collected (three longs each); the same order as a
+# large broadcast-join build side.
+BROADCAST_MAX_ROWS = 16_000_000
+BROADCAST_MAX_DOCS = 4_000_000
+# Largest plan-time size estimate of a per-doc set-size table that the
+# set-Jaccard self-join broadcasts (a quarter of Spark's default 1 GB
+# spark.driver.maxResultSize, which every broadcast build must pass).
+SIZES_BROADCAST_MAX_BYTES = 256 << 20
 
 
 def _fan_out(docs: DataFrame) -> DataFrame:
@@ -34,24 +54,15 @@ def _fan_out(docs: DataFrame) -> DataFrame:
     return docs.repartition(target)
 
 
-def _normalized_tokens(
-    docs: DataFrame, id_col: str, text_col: str, distinct: bool = True
-) -> DataFrame:
-    """(id, token) word tokens of the normalized text, distinct by default.
-
-    ``distinct=False`` skips the global dedup exchange for consumers that
-    dedupe themselves: the explode is doc-local (and ``_fan_out``'s
-    round-robin moves whole doc rows), so every duplicate of a (doc, token)
-    pair lives in the same partition and a downstream per-partition kernel
-    sees all copies together."""
+def _normalized_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, token) word tokens of the normalized text, one row per
+    occurrence, in ``docs``' partitioning (the explode is doc-local)."""
     squeezed = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    out = (
-        _fan_out(docs)
-        .select(F.col(id_col).alias("doc_id"), F.split(squeezed, " ").alias("toks"))
+    return (
+        docs.select(F.col(id_col).alias("doc_id"), F.split(squeezed, " ").alias("toks"))
         .select("doc_id", F.explode("toks").alias("token"))
         .filter(F.length("token") > 0)
     )
-    return out.distinct() if distinct else out
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -99,7 +110,7 @@ def token_jaccard_pairs(
     construction — so the prune is a broadcast anti-join with no extra
     shuffle on the corpus side.
     """
-    toks = _normalized_tokens(docs, id_col, text_col)
+    toks = _normalized_tokens(_fan_out(docs), id_col, text_col).distinct()
     if max_df is not None:
         heavy = (
             toks.groupBy("token")
@@ -108,23 +119,45 @@ def token_jaccard_pairs(
             .select("token")
         )
         toks = toks.join(F.broadcast(heavy), "token", "left_anti")
-    # same two tricks as shingle_jaccard_pairs: broadcast the per-doc set
-    # size onto the token rows so the self-join prunes size-incompatible
-    # pairs before the pair aggregate (jaccard <= min/max, so min <= t*max-1
-    # can never pass — exact), and carry n_a/n_b through the groupBy keys so
-    # the two post-aggregation size joins disappear
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_tok"))
-    enriched = toks.join(F.broadcast(sizes), "doc_id")
-    a = enriched.alias("a")
-    b = enriched.alias("b")
-    na, nb = F.col("a.n_tok"), F.col("b.n_tok")
+    return _set_jaccard_pairs(toks.select("doc_id", F.col("token").alias("key")), threshold)
+
+
+def _set_jaccard_pairs(members: DataFrame, threshold: float) -> DataFrame:
+    """Exact set Jaccard of every doc pair sharing >= 1 key, over a DISTINCT
+    (doc_id, key) table: (doc_a, doc_b, jaccard), doc_a < doc_b, jaccard >=
+    ``threshold``. A self-join on the key, then one groupBy on the pair.
+
+    Each doc's set size rides on its key rows so that
+    (1) the self-join prunes size-incompatible pairs BEFORE the pair
+        aggregate: jaccard <= min(|A|,|B|)/max(|A|,|B|), so any pair with
+        min <= t*max - 1 can never reach the threshold (integer counts make
+        the -1 slack absorb float rounding in t*max — prunes only provable
+        non-matches, output unchanged). At sf1.0 this cut the shingle join's
+        257M-row fan-out / 114M-group pair aggregate ~4x;
+    (2) n_a/n_b ride the groupBy keys (functionally dependent on the ids),
+        removing the two post-aggregation size joins and their exchanges.
+
+    The size table (one row per doc) is hinted as a broadcast while Spark's
+    plan-time size estimate of it (input file bytes scaled by row width; no
+    job runs) is at most ``SIZES_BROADCAST_MAX_BYTES`` (256 MB); above that,
+    and for inputs of unknown size such as in-memory RDDs, Spark picks the
+    join strategy itself. Without the hint, adaptive execution broadcasts
+    the key table instead at sf0.01, a different final plan.
+    """
+    sizes = members.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    estimate = sizes._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(estimate) <= SIZES_BROADCAST_MAX_BYTES:
+        sizes = F.broadcast(sizes)
+    enriched = members.join(sizes, "doc_id")
+    a, b = enriched.alias("a"), enriched.alias("b")
+    na, nb = F.col("a.n"), F.col("b.n")
     size_compat = F.least(na, nb).cast("double") > (
         F.lit(float(threshold)) * F.greatest(na, nb).cast("double") - F.lit(1.0)
     )
     inter = (
         a.join(
             b,
-            (F.col("a.token") == F.col("b.token"))
+            (F.col("a.key") == F.col("b.key"))
             & (F.col("a.doc_id") < F.col("b.doc_id"))
             & size_compat,
         )
@@ -153,36 +186,28 @@ def shingle_jaccard_pairs(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
-    broadcast_max_rows: int = 16_000_000,
 ) -> DataFrame:
     """Exact Jaccard over word n-gram shingles. Shingles are far more
     selective than single tokens (the 31-token synthetic corpus makes a
     token self-join O(sum df^2) ≈ 450M pairs at sf0.1; trigrams cut that to
-    ~3M), so this is the exact-similarity operator that survives scale; pair
-    generation stays a shuffle equi-join on the shingle.
+    ~3M), so this is the exact-similarity operator that survives scale.
 
-    ``strategy`` picks how pair intersections are counted — the same
-    decision shape as Spark's broadcast-vs-shuffle join, applied to the
-    whole shingle incidence table:
+    The size of the (doc, shingle-hash) incidence table decides how pair
+    intersections are counted, the same decision as Spark's
+    broadcast-vs-shuffle join: one job collects at most
+    ``BROADCAST_MAX_ROWS + 1`` rows, and that collect is both the gate and
+    the build side.
 
-    - ``"broadcast"``: the (doc, shingle-hash) incidence table is collected
-      and broadcast as CSR index arrays (exactly what a BroadcastHashJoin
-      does with its build side), and each task counts shared hashes for its
-      slice of docs with vectorized numpy gathers + bincount — no pair
-      shuffle, no 10^8-group aggregate. Identical output: same distinct
-      md5-hash sets, same integer counts, same double jaccard. Raises
-      ``ValueError`` when the table holds more than ``broadcast_max_rows``
-      rows.
-    - ``"join"``: the shuffle equi-join + pair aggregate — unbounded-scale
-      path (the incidence table never has to fit anywhere).
-    - ``"auto"`` (default): broadcast while the incidence table holds at
-      most ``broadcast_max_rows`` rows (16M rows ≈ 250 MB of build arrays —
-      same order as a large broadcast-join build side), else join.
+    - At most ``BROADCAST_MAX_ROWS`` rows: the table is broadcast as CSR
+      index arrays (exactly what a BroadcastHashJoin does with its build
+      side), and each task counts shared hashes for its slice of docs with
+      vectorized numpy gathers + bincount — no pair shuffle, no 10^8-group
+      aggregate (``_jaccard_pairs_broadcast``).
+    - More: the shuffle equi-join on the shingle hash + pair aggregate
+      (``_set_jaccard_pairs``), whose table never has to fit anywhere.
 
-    Both broadcast-capable strategies collect at most
-    ``broadcast_max_rows + 1`` rows in one job: that collect is the size
-    gate and, when it passes, the build side.
+    Identical output either way: same distinct md5-hash sets, same integer
+    counts, same double jaccard.
     """
     # join on the portable 60-bit md5 hash of the shingle, not the string:
     # an 8-byte shuffle key instead of a ~20-byte string. The SQL oracle
@@ -196,71 +221,22 @@ def shingle_jaccard_pairs(
     # packed pairs) doesn't already do. Only the join path, whose self-join
     # multiplies duplicates into wrong intersection counts, pays the
     # distinct. Gating on the RAW row count is the right bound anyway: the
-    # collect ships raw rows, so raw <= broadcast_max_rows is the faithful
+    # collect ships raw rows, so raw <= BROADCAST_MAX_ROWS is the faithful
     # build-side size gate (and raw >= distinct keeps it conservative).
     raw = shingles(docs, n, id_col, text_col, distinct=False).select(
-        "doc_id", token_hash64(F.col("shingle")).alias("sh")
+        "doc_id", token_hash64(F.col("shingle")).alias("key")
     )
-    if strategy not in ("auto", "broadcast", "join"):
-        raise ValueError(f"strategy must be auto|broadcast|join, got {strategy!r}")
-    if strategy != "join":
-        build = raw.limit(broadcast_max_rows + 1).toPandas()
-        if len(build) <= broadcast_max_rows:
-            return _jaccard_pairs_broadcast(raw.sparkSession, build, threshold)
-        if strategy == "broadcast":
-            raise ValueError(
-                f"shingle incidence table exceeds broadcast_max_rows="
-                f"{broadcast_max_rows}; use strategy='join' or 'auto'"
-            )
-    sh = raw.distinct()
-    # attach each doc's set size to its shingle rows (sizes is one row per
-    # doc — broadcast, no corpus-side shuffle) so that
-    # (1) the self-join can prune size-incompatible pairs BEFORE the pair
-    #     aggregate: jaccard <= min(|A|,|B|)/max(|A|,|B|), so any pair with
-    #     min <= t*max - 1 can never reach the threshold (integer counts make
-    #     the -1 slack absorb float rounding in t*max — prunes only provable
-    #     non-matches, output unchanged). At sf1.0 this cuts the 257M-row
-    #     join fan-out / 114M-group pair aggregate ~4x;
-    # (2) n_a/n_b ride the groupBy keys (functionally dependent on the ids),
-    #     removing the two post-aggregation size joins and their exchanges.
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    enriched = sh.join(F.broadcast(sizes), "doc_id")
-    a, b = enriched.alias("a"), enriched.alias("b")
-    na, nb = F.col("a.n_sh"), F.col("b.n_sh")
-    size_compat = F.least(na, nb).cast("double") > (
-        F.lit(float(threshold)) * F.greatest(na, nb).cast("double") - F.lit(1.0)
-    )
-    inter = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & size_compat,
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            na.alias("n_a"),
-            nb.alias("n_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        inter.withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    build = raw.limit(BROADCAST_MAX_ROWS + 1).toPandas()
+    if len(build) <= BROADCAST_MAX_ROWS:
+        return _jaccard_pairs_broadcast(raw.sparkSession, build, threshold)
+    return _set_jaccard_pairs(raw.distinct(), threshold)
 
 
 def _jaccard_pairs_broadcast(spark, pdf, threshold: float) -> DataFrame:
-    """Broadcast-incidence counting kernel behind ``shingle_jaccard_pairs``
-    (strategy="broadcast"): take the collected (doc_id, hash) incidence
-    table ``pdf`` — the build side, bounded by the caller's row gate exactly
-    like a broadcast-join build side — index it into forward/transpose CSR arrays,
+    """Broadcast-incidence counting kernel behind ``shingle_jaccard_pairs``:
+    take the collected (doc_id, key) incidence table ``pdf`` — the build
+    side, bounded by the caller's row gate exactly like a broadcast-join
+    build side — index it into forward/transpose CSR arrays,
     broadcast them, and let each task compute EXACT shared-hash counts for a
     slice of docs via numpy gathers + bincount. Replaces the O(sum df^2)
     join fan-out + pair-count shuffle aggregate (74.7M groups for 25 result
@@ -272,7 +248,7 @@ def _jaccard_pairs_broadcast(spark, pdf, threshold: float) -> DataFrame:
 
     sc = spark.sparkContext
     doc = pdf["doc_id"].to_numpy(np.int64)
-    hv = pdf["sh"].to_numpy(np.int64)
+    hv = pdf["key"].to_numpy(np.int64)
     out_schema = "doc_a long, doc_b long, jaccard double"
     if doc.shape[0] == 0:
         return spark.createDataFrame([], out_schema)
@@ -389,7 +365,11 @@ def ngram_contamination(
     the corpus, so it BROADCASTS into the equi-join on the portable 60-bit
     md5 hash — the 100-TB corpus is scanned once with no corpus-side shuffle
     before the (contaminated-only) per-doc aggregate. Output:
-    (doc_id, n_matched_grams, n_probes_hit)."""
+    (doc_id, n_matched_grams, n_probes_hit).
+
+    Both distinct counts are set sizes in one per-doc aggregate: two
+    ``countDistinct``s in one aggregate make Spark plan an Expand that emits
+    every matched row twice (once per distinct column)."""
     doc_g = shingles(docs, n, id_col, text_col).select(
         "doc_id", token_hash64(F.col("shingle")).alias("g")
     )
@@ -403,8 +383,8 @@ def ngram_contamination(
         .filter(F.col("doc_id") != F.col("probe_id"))
         .groupBy("doc_id")
         .agg(
-            F.countDistinct("g").alias("n_matched_grams"),
-            F.countDistinct("probe_id").alias("n_probes_hit"),
+            F.size(F.collect_set("g")).cast("long").alias("n_matched_grams"),
+            F.size(F.collect_set("probe_id")).cast("long").alias("n_probes_hit"),
         )
     )
 
@@ -555,43 +535,34 @@ def winnow_fingerprints(
 SIMHASH_BITS = 120  # two 60-bit md5 halves (lo = hex[1:15], hi = hex[16:30])
 
 
+def _token_hash_halves(toks: DataFrame) -> DataFrame:
+    """(doc_id, h, h2): the two md5-derived 60-bit hashes of each token,
+    bits 0-59 from md5 hex[1:15] and bits 60-119 from hex[16:30]."""
+    return toks.select(
+        "doc_id",
+        token_hash64(F.col("token")).alias("h"),
+        F.conv(F.substring(F.md5(F.col("token")), 16, 15), 16, 10)
+        .cast("long")
+        .alias("h2"),
+    )
+
+
 def simhash(
     docs: DataFrame,
-    bits: int = SIMHASH_BITS,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """SimHash per document: sign-sum of token-hash bits. Relational form:
-    explode tokens → per-bit ±1 contributions → groupBy doc → sign. The
-    per-bit loop builds ``bits`` aggregate columns (JVM-side).
+    """120-bit SimHash per document as a Spark expression: (doc_id,
+    simhash = bits 0-59, simhash_hi = bits 60-119). Relational form:
+    distinct tokens → per-bit set counts → groupBy doc → majority bit.
 
-    OUTPUT SCHEMA depends on the width (pick ``bits`` deliberately):
-    ``bits <= 60`` → one ``simhash`` column (low bits of md5 hex[1:15]).
-    ``bits > 60`` (cap 120) → ``simhash`` (bits 0-59, md5 hex[1:15]) plus
-    ``simhash_hi`` (bits 60.., md5 hex[16:30]) — the wide form the blocked
-    near-dup join needs for >=16-bit chunk keys at corpus scale. The default
-    is the full 120-bit two-column form (what ``simhash_near_dups`` uses);
-    pass ``bits=60`` for the legacy single-column shape.
-
-    CHANGED (round 5): the default widened 64 -> 120 (``SIMHASH_BITS``).
-    Callers that relied on the old default get a different schema
-    (``simhash_hi`` appears) and different hamming distances; pass ``bits``
-    explicitly — every in-repo caller and test does."""
-    toks = _normalized_tokens(docs, id_col, text_col)
-    nbits = min(bits, SIMHASH_BITS)
-    hashed = toks.select(
-        "doc_id",
-        token_hash64(F.col("token")).alias("h"),
-        *(
-            [
-                F.conv(F.substring(F.md5(F.col("token")), 16, 15), 16, 10)
-                .cast("long")
-                .alias("h2")
-            ]
-            if nbits > 60
-            else []
-        ),
-    )
+    This is the parity reference for ``simhash_kernel``, which near-dup
+    detection runs; the DuckDB oracle mirrors this form. Its 120 aggregate
+    columns generate one whole-stage-codegen function whose compile
+    dominates a cold run (measured ~6 s compile vs 0.6 s execution at
+    sf1.0)."""
+    toks = _normalized_tokens(_fan_out(docs), id_col, text_col).distinct()
+    hashed = _token_hash_halves(toks)
     # set-bit COUNTS instead of ±1 sign-sums: sum(±1) > 0 <=> 2*count > n
     # exactly (integer identity), and the per-row aggregate update loses the
     # conditional branch — half the expression work per (row, bit)
@@ -601,70 +572,58 @@ def simhash(
                 F.lit(1)
             )
         ).alias(f"b{i}")
-        for i in range(nbits)
+        for i in range(SIMHASH_BITS)
     ]
     agg = hashed.groupBy("doc_id").agg(
         *bit_sums, F.count(F.lit(1)).alias("n_tok")
     )
     n2 = F.col("n_tok")
-    sim: F.Column = F.lit(0).cast("long")
-    for i in range(min(nbits, 60)):
-        sim = sim + F.when(
-            F.col(f"b{i}") * 2 > n2, F.lit(1 << i).cast("long")
-        ).otherwise(F.lit(0))
-    cols = ["doc_id", sim.alias("simhash")]
-    if nbits > 60:
-        sim_hi: F.Column = F.lit(0).cast("long")
-        for i in range(60, nbits):
-            sim_hi = sim_hi + F.when(
-                F.col(f"b{i}") * 2 > n2, F.lit(1 << (i - 60)).cast("long")
+
+    def packed(lo_bit: int) -> F.Column:
+        out: F.Column = F.lit(0).cast("long")
+        for i in range(lo_bit, lo_bit + 60):
+            out = out + F.when(
+                F.col(f"b{i}") * 2 > n2, F.lit(1 << (i - lo_bit)).cast("long")
             ).otherwise(F.lit(0))
-        cols.append(sim_hi.alias("simhash_hi"))
-    return agg.select(*cols)
+        return out
+
+    return agg.select("doc_id", packed(0).alias("simhash"), packed(60).alias("simhash_hi"))
 
 
 def simhash_kernel(
     docs: DataFrame,
-    bits: int = SIMHASH_BITS,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Numpy twin of ``simhash``: same distinct-token table, same md5-derived
-    per-token hashes (computed JVM-side, so the oracle-portable hash law is
-    untouched), but the per-(doc, bit) counting + sign-packing runs
-    vectorized in one mapInArrow pass. Exact same integers out
-    (parity-pinned in tests). Exists because the expression form generates
-    a 120-aggregate whole-stage-codegen function whose JANINO COMPILE
-    dominates a cold run (measured ~6 s compile vs 0.6 s execution at
-    sf1.0) — the kernel's plan is tiny and compiles in milliseconds.
+    """120-bit SimHash per document, (doc_id, simhash, simhash_hi), with the
+    per-(doc, bit) counting + sign-packing vectorized in one mapInArrow
+    pass: the same integers as ``simhash`` (parity-pinned in tests), from
+    the same md5-derived per-token hashes computed JVM-side, so the
+    oracle-portable hash law is untouched. Its plan is tiny and compiles in
+    milliseconds, where the expression form's 120-aggregate function takes
+    seconds.
 
-    ZERO-EXCHANGE (round 9): the token explode is doc-local, so the
-    per-doc token dedup and bit counting run per partition with no
-    ``distinct`` exchange and no repartition — the kernel dedupes
-    (doc, h, h2) itself. Deduping on the 120-bit hash pair instead of the
-    token string diverges only if two DISTINCT tokens of one doc collide
-    in BOTH md5-derived 60-bit halves at once (~2^-120 per pair — far
-    below the 60-bit shingle-hash-join collision bound the engine already
-    accepts as oracle-identical). Parallelism comes from the doc fan-out."""
+    ONE ROW PER DOC: the input is co-located by doc_id (``colocate``), so
+    every input row of a doc — there may be several — lands in one
+    partition, and the doc's token set is the union over its rows, as in
+    ``simhash``. The token explode is doc-local, so the per-doc token dedup
+    and bit counting run per partition with no ``distinct`` exchange — the
+    kernel dedupes (doc, h, h2) itself. Deduping on the 120-bit hash pair
+    instead of the token string diverges only if two DISTINCT tokens of one
+    doc collide in BOTH md5-derived 60-bit halves at once (~2^-120 per pair
+    — far below the 60-bit shingle-hash-join collision bound the engine
+    already accepts as oracle-identical)."""
     import numpy as np
     import pyarrow as pa
 
-    if bits <= 60 or bits > SIMHASH_BITS:
-        raise ValueError("simhash_kernel supports 60 < bits <= 120")
-    nbits = bits
-    toks = _normalized_tokens(docs, id_col, text_col, distinct=False)
-    hashed = toks.select(
-        "doc_id",
-        token_hash64(F.col("token")).alias("h"),
-        F.conv(F.substring(F.md5(F.col("token")), 16, 15), 16, 10)
-        .cast("long")
-        .alias("h2"),
+    rows = colocate(
+        docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+        ["doc_id"],
     )
+    hashed = _token_hash_halves(_normalized_tokens(rows, "doc_id", "text"))
 
-    lo_shifts = np.arange(60, dtype=np.int64)
-    hi_shifts = np.arange(nbits - 60, dtype=np.int64)
-    lo_pows = (np.int64(1) << lo_shifts).astype(np.int64)
-    hi_pows = (np.int64(1) << hi_shifts).astype(np.int64)
+    shifts = np.arange(60, dtype=np.int64)
+    pows = (np.int64(1) << shifts).astype(np.int64)
 
     def run(batches):
         batch_list = list(batches)
@@ -680,7 +639,7 @@ def simhash_kernel(
         doc, h, h2 = doc[order], h[order], h2[order]
         # per-doc token dedup on the 120-bit pair (sorted, so duplicates
         # are adjacent) — the distinct the expression form pays a shuffle
-        # for, done in-partition (input is doc-local)
+        # for, done in-partition (input is co-located by doc)
         keep = np.empty(doc.shape[0], dtype=bool)
         keep[0] = True
         keep[1:] = (
@@ -689,18 +648,17 @@ def simhash_kernel(
         doc, h, h2 = doc[keep], h[keep], h2[keep]
         docs_u, counts = np.unique(doc, return_counts=True)
         starts = np.concatenate(([0], np.cumsum(counts)))[:-1]
-        bits_lo = (h[:, None] >> lo_shifts) & 1
-        bits_hi = (h2[:, None] >> hi_shifts) & 1
-        cnt_lo = np.add.reduceat(bits_lo, starts, axis=0)
-        cnt_hi = np.add.reduceat(bits_hi, starts, axis=0)
         n_tok = counts[:, None]
-        sim_lo = ((cnt_lo * 2 > n_tok) * lo_pows).sum(axis=1)
-        sim_hi = ((cnt_hi * 2 > n_tok) * hi_pows).sum(axis=1)
+
+        def packed(half: np.ndarray) -> np.ndarray:
+            cnt = np.add.reduceat((half[:, None] >> shifts) & 1, starts, axis=0)
+            return ((cnt * 2 > n_tok) * pows).sum(axis=1).astype(np.int64)
+
         yield pa.record_batch(
             [
                 pa.array(docs_u, pa.int64()),
-                pa.array(sim_lo.astype(np.int64), pa.int64()),
-                pa.array(sim_hi.astype(np.int64), pa.int64()),
+                pa.array(packed(h), pa.int64()),
+                pa.array(packed(h2), pa.int64()),
             ],
             names=["doc_id", "simhash", "simhash_hi"],
         )
@@ -747,11 +705,11 @@ def _chunk_key(lo: F.Column, hi: F.Column, start: int, size: int) -> F.Column:
 
 
 def _simhash_pairs_broadcast(
-    sh: DataFrame, max_hamming: int, layout: list[tuple[int, int]]
+    spark, pdf, max_hamming: int, layout: list[tuple[int, int]]
 ) -> DataFrame:
     """Broadcast-kernel twin of the blocked simhash self-join (same shape as
-    ``_jaccard_pairs_broadcast``): the per-doc simhash table — ONE small row
-    per document — is collected and broadcast with a transpose index
+    ``_jaccard_pairs_broadcast``): the collected per-doc simhash table
+    ``pdf`` — ONE small row per document — is broadcast with a transpose index
     (chunk-key -> sorted doc ids), and each task generates the pigeonhole
     candidates for its slice of docs with numpy gathers, dedupes them in-row
     (np.unique — replaces the lowest-matching-chunk trick), and applies the
@@ -764,9 +722,7 @@ def _simhash_pairs_broadcast(
     import numpy as np
     import pyarrow as pa
 
-    spark = sh.sparkSession
     sc = spark.sparkContext
-    pdf = sh.toPandas()
     out_schema = "doc_a long, doc_b long, hamming long"
     if len(pdf) == 0:
         return spark.createDataFrame([], out_schema)
@@ -866,34 +822,27 @@ def simhash_near_dups(
     max_hamming: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "auto",
-    broadcast_max_docs: int = 4_000_000,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance over the FULL 120-bit
     simhash, blocked on ``max(max_hamming + 1, 2)`` disjoint bit chunks
     (pigeonhole: distance <= max_hamming over > max_hamming disjoint chunks
-    ⇒ at least one chunk identical), so the blocked equi-join is *exact* —
-    identical output to the brute-force all-pairs hamming filter, at
-    bucket-join cost. See ``simhash_chunk_layout`` for the per-chunk key
-    cardinality / within-bucket cost model at corpus scale.
+    ⇒ at least one chunk identical), so the blocking is *exact* — identical
+    output to the brute-force all-pairs hamming filter, at bucket-join cost.
+    See ``simhash_chunk_layout`` for the per-chunk key cardinality /
+    within-bucket cost model at corpus scale.
 
-    The two self-join sides are one subplan, so Spark runs the
-    120-aggregate-column sign-sum once and the second side reads the first
-    side's shuffle (``ReusedExchange``); nothing is persisted."""
+    The per-doc simhash table (``simhash_kernel``, one row per doc) is the
+    build side, and its size alone picks the pair search: one job collects
+    at most ``BROADCAST_MAX_DOCS + 1`` rows. At most ``BROADCAST_MAX_DOCS``
+    become the broadcast candidate kernel (``_simhash_pairs_broadcast``);
+    more go to the blocked shuffle self-join, whose two sides are one
+    subplan, so Spark runs the kernel once and the second side reads the
+    first side's shuffle (``ReusedExchange``). Same rows either way."""
     layout = simhash_chunk_layout(max_hamming)
-    if strategy == "auto":
-        # parquet-metadata count: the gate is doc cardinality (the broadcast
-        # is one small row per doc), the same decision a broadcast join makes
-        strategy = "broadcast" if docs.count() <= broadcast_max_docs else "join"
-    if strategy == "broadcast":
-        return _simhash_pairs_broadcast(
-            simhash_kernel(docs, SIMHASH_BITS, id_col, text_col),
-            max_hamming,
-            layout,
-        )
-    if strategy != "join":
-        raise ValueError(f"strategy must be auto|broadcast|join, got {strategy!r}")
-    sh = simhash(docs, SIMHASH_BITS, id_col, text_col)
+    sh = simhash_kernel(docs, id_col, text_col)
+    build = sh.limit(BROADCAST_MAX_DOCS + 1).toPandas()
+    if len(build) <= BROADCAST_MAX_DOCS:
+        return _simhash_pairs_broadcast(sh.sparkSession, build, max_hamming, layout)
     chunks = sh.select(
         "doc_id",
         "simhash",
@@ -990,9 +939,7 @@ def dedup_connected_components(
     runs; if the labels have not converged the loop AUTO-ESCALATES with
     per-round convergence checks up to ``max_rounds`` (diameter ~2^16)
     before raising, so pathological deep components cost extra counts
-    rather than a hard failure. For graphs beyond that, use
-    ``dedup_components_star`` (alternating small-star/large-star, Kiveris
-    et al., SoCC 2014). Returns (doc_id, cluster_id = min id of the
+    rather than a hard failure. Returns (doc_id, cluster_id = min id of the
     component)."""
     fwd = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
     edges = (
@@ -1041,91 +988,7 @@ def dedup_connected_components(
             raise RuntimeError(
                 f"connected components not converged after {done} "
                 f"propagate+shortcut rounds (component diameter ~> 2^{done}); "
-                "raise `max_rounds` or use dedup_components_star"
+                "raise `max_rounds`: each round doubles the diameter covered"
             )
     edges.unpersist()
     return labels.select(F.col("a").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
-def dedup_components_star(
-    pairs: DataFrame,
-    id_a: str = "doc_a",
-    id_b: str = "doc_b",
-    max_rounds: int = 40,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — the structurally-convergent alternative to min-label
-    propagation for graphs whose diameter defeats a fixed pointer-jumping
-    budget. Each operation is one groupBy + one equi-join (per-node
-    neighbourhood min), edge count never grows beyond the input, and the
-    edge set provably converges to a star forest (every node pointing at
-    its component minimum) in O(log^2 n) alternations; no all-pairs work,
-    no driver materialization. Convergence is detected by set equality of
-    consecutive canonical edge sets (count + one-sided anti-join — both
-    sides are distinct). Same contract as ``dedup_connected_components``:
-    returns (doc_id, cluster_id = min id of the component).
-
-    large-star(u): connect every neighbour v > u to min(N(u) + {u})
-    small-star(u): over edges directed high->low, connect every smaller
-                   neighbour (and u itself) to min(N(u) + {u})
-    """
-    fwd = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    sym = fwd.unionByName(
-        fwd.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).filter(F.col("a") != F.col("b"))
-    nodes = sym.select("a").distinct()
-
-    def large_star(sym_edges: DataFrame) -> DataFrame:
-        """Input symmetric edges; output directed (v -> m) edges, v > m."""
-        mins = sym_edges.groupBy("a").agg(F.min("b").alias("minb"))
-        m = F.least(F.col("a"), F.col("minb"))
-        return (
-            sym_edges.join(mins, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), m.alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def small_star(directed: DataFrame) -> DataFrame:
-        """Input directed edges (a > b); output directed edges (a > b)."""
-        mins = directed.groupBy("a").agg(F.min("b").alias("minb"))
-        to_min = directed.join(mins, "a").select(
-            F.col("b").alias("a"), F.col("minb").alias("b")
-        )
-        self_edge = mins.select("a", F.col("minb").alias("b"))
-        return (
-            to_min.unionByName(self_edge)
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    # seed: one large-star pass canonicalizes the symmetric set to directed
-    cur = _lineage_checkpoint(small_star(large_star(sym)))
-    for _ in range(max_rounds):
-        nxt = _lineage_checkpoint(small_star(large_star(_symmetrize(cur))))
-        # set equality: both distinct, so equal counts + empty one-sided
-        # anti-join <=> identical sets
-        if nxt.count() == cur.count() and nxt.join(
-            cur, ["a", "b"], "left_anti"
-        ).isEmpty():
-            cur = nxt
-            break
-        cur = nxt
-    else:
-        raise RuntimeError(
-            f"small-star/large-star did not converge in {max_rounds} rounds"
-        )
-    # at the fixpoint `cur` is a star forest: (node -> component min).
-    # Roots appear only on the right; map them to themselves.
-    return nodes.join(cur, "a", "left").select(
-        F.col("a").alias("doc_id"),
-        F.coalesce("b", "a").alias("cluster_id"),
-    )
-
-
-def _symmetrize(directed: DataFrame) -> DataFrame:
-    return directed.unionByName(
-        directed.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )

@@ -48,9 +48,6 @@ RUN_VARIANT = {
     "cpd_confusion": "broadcast or sort-merge join of a window-bounds join",
     "dedup_clusters": "broadcast or sort-merge join in a label-propagation round",
     "theta_user_overlap": "build side of the click/view sketch join",
-    # Spark's distinct-aggregate rewrite orders the two countDistinct columns
-    # by a hash of expression ids, which are new on every build
-    "ngram_contamination": "order of the two distinct aggregates in its Expand",
 }
 
 

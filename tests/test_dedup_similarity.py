@@ -193,68 +193,171 @@ def wide_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_shingle_jaccard_strategies_identical(wide_docs):
+def test_shingle_jaccard_strategies_identical(monkeypatch, wide_docs):
     """The broadcast incidence kernel must emit EXACTLY the join path's
-    rows — same pairs, bit-identical jaccard doubles. Over the row gate,
-    ``"auto"`` falls back to the join and ``"broadcast"`` raises."""
-    from pysatl_cpd_spark.operators.dedup import shingle_jaccard_pairs
+    rows — same pairs, bit-identical jaccard doubles. The size of the
+    incidence table alone picks the side: over the row bound the same call
+    takes the join."""
+    from pysatl_cpd_spark.operators import dedup
 
-    join_rows = sorted(
-        map(tuple, shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="join"
-        ).collect())
-    )
-    bc_rows = sorted(
-        map(tuple, shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="broadcast"
-        ).collect())
-    )
+    def run():
+        df = dedup.shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "MapInArrow" in plan, sorted(map(tuple, df.collect()))
+
+    bc_kernel, bc_rows = run()
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_ROWS", 10)
+    join_kernel, join_rows = run()
+    assert (bc_kernel, join_kernel) == (True, False)
     assert join_rows == bc_rows and len(join_rows) > 10
-    fallback = shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5, broadcast_max_rows=10)
-    assert "MapInArrow" not in fallback._jdf.queryExecution().executedPlan().toString()
-    assert sorted(map(tuple, fallback.collect())) == join_rows
-    with pytest.raises(ValueError, match="broadcast_max_rows"):
-        shingle_jaccard_pairs(
-            wide_docs, n=3, threshold=0.5, strategy="broadcast", broadcast_max_rows=10
-        )
 
 
-def test_shingle_jaccard_explicit_broadcast_persists_nothing(spark, wide_docs):
-    """No strategy leaves a cached plan in the session: the broadcast-capable
-    ones read the incidence table once, in their bounded collect."""
-    from pysatl_cpd_spark.operators.dedup import shingle_jaccard_pairs
+def test_shingle_jaccard_persists_nothing(monkeypatch, spark, wide_docs):
+    """Neither side leaves a cached plan in the session: the broadcast side
+    reads the incidence table once, in its bounded collect."""
+    from pysatl_cpd_spark.operators import dedup
 
     spark.catalog.clearCache()
-    for strategy in ("broadcast", "auto", "join"):
-        shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5, strategy=strategy).collect()
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), strategy
+    for bound in (dedup.BROADCAST_MAX_ROWS, 10):
+        monkeypatch.setattr(dedup, "BROADCAST_MAX_ROWS", bound)
+        dedup.shingle_jaccard_pairs(wide_docs, n=3, threshold=0.5).collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), bound
 
 
-def test_simhash_strategies_identical(wide_docs):
+def test_set_jaccard_size_hint_is_bounded(monkeypatch, spark, documents_dir):
+    """The per-doc size table is hinted as a broadcast only while Spark's
+    size estimate of it is within SIZES_BROADCAST_MAX_BYTES; over the bound
+    the hint goes and the rows stay the same."""
+    from pysatl_cpd_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{documents_dir}/documents.parquet")
+
+    def run():
+        df = dedup.token_jaccard_pairs(docs, threshold=0.5)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "strategy=broadcast" in plan, sorted(map(tuple, df.collect()))
+
+    hinted, rows = run()
+    monkeypatch.setattr(dedup, "SIZES_BROADCAST_MAX_BYTES", 0)
+    unhinted, unbounded_rows = run()
+    assert (hinted, unhinted) == (True, False)
+    assert unbounded_rows == rows and rows
+
+
+def test_simhash_strategies_identical(monkeypatch, wide_docs):
     """Broadcast candidate kernel == blocked self-join: same pair set, same
-    hamming values (including the numpy SWAR popcount and the numpy
-    bit-count aggregation twin of the 120-column expression aggregate)."""
-    join_rows = sorted(
-        map(tuple, simhash_near_dups(
-            wide_docs, max_hamming=6, strategy="join"
-        ).collect())
-    )
-    bc_rows = sorted(
-        map(tuple, simhash_near_dups(
-            wide_docs, max_hamming=6, strategy="broadcast"
-        ).collect())
-    )
+    hamming values (including the numpy SWAR popcount). The simhash table's
+    size alone picks the side."""
+    from pysatl_cpd_spark.operators import dedup
+
+    def run():
+        df = simhash_near_dups(wide_docs, max_hamming=6)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return "Join" in plan, sorted(map(tuple, df.collect()))
+
+    bc_join, bc_rows = run()
+    monkeypatch.setattr(dedup, "BROADCAST_MAX_DOCS", 10)
+    join_join, join_rows = run()
+    assert (bc_join, join_join) == (False, True)
     assert join_rows == bc_rows and len(join_rows) > 10
 
 
 def test_simhash_kernel_matches_expression_aggregate(wide_docs):
     """simhash_kernel (numpy bit counting) is bit-identical to the
     120-aggregate expression form across the whole fixture corpus."""
-    from pysatl_cpd_spark.operators.dedup import SIMHASH_BITS, simhash, simhash_kernel
+    from pysatl_cpd_spark.operators.dedup import simhash, simhash_kernel
 
-    expr = sorted(map(tuple, simhash(wide_docs, SIMHASH_BITS).collect()))
-    kern = sorted(map(tuple, simhash_kernel(wide_docs, SIMHASH_BITS).collect()))
+    expr = sorted(map(tuple, simhash(wide_docs).collect()))
+    kern = sorted(map(tuple, simhash_kernel(wide_docs).collect()))
     assert expr == kern
+
+
+def _brute_force_hamming(sh, max_h):
+    """All doc pairs of the (doc_id, simhash, simhash_hi) rows ``sh`` within
+    120-bit hamming distance ``max_h``: {(doc_a, doc_b, hamming)}."""
+    pairs = set()
+    for i in range(len(sh)):
+        for j in range(i + 1, len(sh)):
+            a, b = sorted([sh[i], sh[j]], key=lambda r: r.doc_id)
+            h = bin(a.simhash ^ b.simhash).count("1") + bin(
+                a.simhash_hi ^ b.simhash_hi
+            ).count("1")
+            if h <= max_h:
+                pairs.add((a.doc_id, b.doc_id, h))
+    return pairs
+
+
+def test_simhash_duplicate_doc_rows_match_expression(spark):
+    """A doc_id on two input rows in two partitions is ONE document whose
+    tokens are the union of its rows, as in the expression ``simhash``: doc 1
+    is split over two rows that together hold doc 2's text, so the only pair
+    is (1, 2) at distance 0."""
+    from pysatl_cpd_spark.operators.dedup import simhash
+
+    rows = [
+        (1, "alpha bravo charlie delta echo foxtrot"),
+        (2, "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima"),
+        (1, "golf hotel india juliett kilo lima"),
+        (3, "mike november oscar papa quebec romeo sierra tango"),
+    ]
+    docs = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4), "doc_id long, text string"
+    )
+    assert docs.rdd.glom().map(len).collect() == [1, 1, 1, 1]
+    got = {tuple(r) for r in simhash_near_dups(docs, max_hamming=60).collect()}
+    want = _brute_force_hamming(simhash(docs).collect(), 60)
+    assert got == want
+    assert (1, 2, 0) in got
+
+
+def test_simhash_build_runs_two_jobs(spark):
+    """Building simhash_near_dups runs exactly the jobs of its one bounded
+    collect, which is both the size gate and the broadcast build side; a
+    separate document count before it made four."""
+    sc = spark.sparkContext
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    sc.setJobGroup("simhash_build", "simhash_build")
+    try:
+        pairs = simhash_near_dups(docs, max_hamming=6)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup("simhash_build")) == 2
+    assert pairs.count() == 1259
+
+
+def test_ngram_contamination_plan_has_no_expand(spark):
+    """Both per-doc distinct counts come from one aggregate with no Expand
+    (two countDistinct would emit every matched row twice), and the 85
+    sf0.01 rows equal the countDistinct form's."""
+    import __spark_entry__ as entry
+    from pysatl_cpd_spark.operators.dedup import shingles
+    from pysatl_cpd_spark.functions.text import token_hash64
+
+    sf = "/root/testdata/sf0.01"
+    df = entry.ngram_contamination_q(spark, sf)
+    got = sorted(map(tuple, df.collect()))
+    assert "Expand" not in df._jdf.queryExecution().executedPlan().toString()
+
+    docs = spark.read.parquet(f"{sf}/documents.parquet")
+    probes = docs.filter(F.col("doc_id") % 10 == 0)
+
+    def grams(d, name):
+        return shingles(d, 4).select(
+            F.col("doc_id").alias(name), token_hash64(F.col("shingle")).alias("g")
+        )
+    want = sorted(
+        map(
+            tuple,
+            grams(docs, "doc_id")
+            .join(grams(probes, "probe_id").distinct(), "g")
+            .filter(F.col("doc_id") != F.col("probe_id"))
+            .groupBy("doc_id")
+            .agg(F.countDistinct("g"), F.countDistinct("probe_id"))
+            .collect(),
+        )
+    )
+    assert got == want and len(got) == 85
 
 
 @pytest.fixture()
@@ -337,7 +440,7 @@ def test_simhash_blocking_covers_hamming_4_to_6(spark):
     docs2 = spark.createDataFrame([(1, base), (2, variant)], "doc_id long, text string")
     hs = {
         r["doc_id"]: (r["simhash"], r["simhash_hi"])
-        for r in simhash(docs2, bits=120).collect()
+        for r in simhash(docs2).collect()
     }
     ham = bin(hs[1][0] ^ hs[2][0]).count("1") + bin(hs[1][1] ^ hs[2][1]).count("1")
     assert 4 <= ham <= 12  # planted pair sits above the old-guarantee band
@@ -358,17 +461,7 @@ def test_simhash_blocking_equals_brute_force(spark):
             (r.doc_a, r.doc_b, r.hamming)
             for r in simhash_near_dups(docs2, max_hamming=max_h).collect()
         }
-        sh = simhash(docs2, bits=120).collect()
-        brute = set()
-        for i in range(len(sh)):
-            for j in range(i + 1, len(sh)):
-                a, b = sorted([sh[i], sh[j]], key=lambda r: r.doc_id)
-                h = bin(a.simhash ^ b.simhash).count("1") + bin(
-                    a.simhash_hi ^ b.simhash_hi
-                ).count("1")
-                if h <= max_h:
-                    brute.add((a.doc_id, b.doc_id, h))
-        assert blocked == brute
+        assert blocked == _brute_force_hamming(simhash(docs2).collect(), max_h)
 
 
 def test_simhash_chunk_key_cardinality():
@@ -562,6 +655,13 @@ def test_dedup_connected_components(spark):
     }
     assert set(got.values()) == {100} and len(got) == 31
 
+    # string doc ids (the real dedup key type)
+    named = spark.createDataFrame(
+        [("d2", "d1"), ("d2", "d3"), ("d9", "d8")], "doc_a string, doc_b string"
+    )
+    got = {r.doc_id: r.cluster_id for r in dedup_connected_components(named).collect()}
+    assert got == {"d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8"}
+
 
 def test_components_auto_escalation(spark):
     """A chain deeper than the blind-round diameter budget converges via the
@@ -618,57 +718,6 @@ def test_components_reliable_checkpoint(spark, tmp_path):
         for f in files
     ]
     assert found, "reliable checkpoint wrote no files"
-
-
-def test_components_star_matches_propagation(spark):
-    """Property: small-star/large-star produces the SAME clusters as
-    min-label propagation on random graphs, and converges on a deep path
-    whose diameter would exhaust propagation's pointer-jump budget."""
-    import random
-
-    from pysatl_cpd_spark.operators.dedup import (
-        dedup_components_star,
-        dedup_connected_components,
-    )
-
-    rng = random.Random(7)
-    for trial in range(3):
-        n = 60
-        edges = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(70)
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-        prop = {
-            r.doc_id: r.cluster_id
-            for r in dedup_connected_components(pairs).collect()
-        }
-        star = {
-            r.doc_id: r.cluster_id
-            for r in dedup_components_star(pairs).collect()
-        }
-        assert star == prop, f"trial {trial}: star != propagation"
-
-    # deep path: diameter 600 > 2^8; propagation at default blind budget
-    # would need escalation, star converges structurally in O(log n) rounds
-    chain = spark.createDataFrame(
-        [(1000 + i, 1000 + i + 1) for i in range(600)], "doc_a long, doc_b long"
-    )
-    got = {
-        r.doc_id: r.cluster_id for r in dedup_components_star(chain).collect()
-    }
-    assert set(got.values()) == {1000} and len(got) == 601
-
-
-def test_components_star_string_ids(spark):
-    """Star variant on string doc ids (the real dedup key type)."""
-    from pysatl_cpd_spark.operators.dedup import dedup_components_star
-
-    pairs = spark.createDataFrame(
-        [("d2", "d1"), ("d2", "d3"), ("d9", "d8")], "doc_a string, doc_b string"
-    )
-    got = {r.doc_id: r.cluster_id for r in dedup_components_star(pairs).collect()}
-    assert got == {"d1": "d1", "d2": "d1", "d3": "d1", "d8": "d8", "d9": "d8"}
 
 
 def test_png_codec_roundtrip():
