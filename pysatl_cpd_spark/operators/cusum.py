@@ -23,44 +23,41 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 def cusum_scores(
     series_df: DataFrame,
     k: float,
-    mu0: float | None = None,
+    mu0: float,
     two_sided: bool = True,
 ) -> DataFrame:
-    """Append reset-free CUSUM statistics to a (series_id, t, value) frame.
-
-    mu0=None estimates the in-control mean per series (global mean — a single
-    extra aggregation, still JVM-side). Output adds ``cusum_pos`` and (if
-    two_sided) ``cusum_neg``.
+    """Append reset-free CUSUM statistics to a (series_id, t, value) frame,
+    for in-control mean ``mu0`` and allowance ``k``. Output adds
+    ``cusum_pos`` and (if two_sided) ``cusum_neg``.
     """
-    df = series_df
-    if mu0 is None:
-        mu = W.partitionBy("series_id")
-        df = df.withColumn("_mu0", F.avg("value").over(mu))
-    else:
-        df = df.withColumn("_mu0", F.lit(float(mu0)))
+    cols = series_df.columns
+    mu = F.lit(float(mu0))
+    devs = {"cusum_pos": F.col("value") - mu - F.lit(k)}
+    if two_sided:
+        devs["cusum_neg"] = mu - F.col("value") - F.lit(k)
 
     run = W.partitionBy("series_id").orderBy("t").rowsBetween(W.unboundedPreceding, 0)
-
-    c_pos = F.sum(F.col("value") - F.col("_mu0") - F.lit(k)).over(run)
-    df = df.withColumn("_c_pos", c_pos).withColumn(
-        "cusum_pos", F.col("_c_pos") - F.least(F.min("_c_pos").over(run), F.lit(0.0))
+    # C_t and its running minimum are nested windows: two projections
+    sums = series_df.select(*cols, *[F.sum(d).over(run).alias(f"_c_{n}") for n, d in devs.items()])
+    return sums.select(
+        *cols,
+        *[
+            (F.col(f"_c_{n}") - F.least(F.min(f"_c_{n}").over(run), F.lit(0.0))).alias(n)
+            for n in devs
+        ],
     )
-    if two_sided:
-        c_neg = F.sum(F.col("_mu0") - F.col("value") - F.lit(k)).over(run)
-        df = df.withColumn("_c_neg", c_neg).withColumn(
-            "cusum_neg",
-            F.col("_c_neg") - F.least(F.min("_c_neg").over(run), F.lit(0.0)),
-        )
-    return df.drop("_mu0", "_c_pos", "_c_neg")
 
 
 def cusum_alarms(
     series_df: DataFrame,
     k: float,
     h: float,
-    mu0: float | None = None,
+    mu0: float,
 ) -> DataFrame:
-    """First alarm per series per direction: (series_id, direction, t, stat)."""
+    """First alarm per series per direction: (series_id, direction, t), the
+    first ``t`` whose two-sided statistic exceeds ``h`` ("up" on
+    ``cusum_pos``, "down" on ``cusum_neg``); a series that never alarms in a
+    direction has no row for it."""
     scored = cusum_scores(series_df, k=k, mu0=mu0, two_sided=True)
     alarms = []
     for direction, col in (("up", "cusum_pos"), ("down", "cusum_neg")):

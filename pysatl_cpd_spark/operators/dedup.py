@@ -35,23 +35,34 @@ BROADCAST_MAX_DOCS = 4_000_000
 SIZES_BROADCAST_MAX_BYTES = 256 << 20
 
 
-def _fan_out(docs: DataFrame) -> DataFrame:
-    """Round-robin repartition a narrow documents scan up to the session's
-    parallelism before per-row-heavy generation (explode + md5 hashing): a
-    single-file table with one parquet row group scans as ONE task, which
-    serializes the whole Generate/hash stage onto one core (measured 5.75 s
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin repartition a narrow scan up to the session's parallelism
+    before per-row-heavy work (explode + md5 hashing, pairwise dot
+    products): a single-file table with one parquet row group scans as ONE
+    task, which serializes the whole stage onto one core (measured 5.75 s
     for 2.6M shingles at sf1.0 that take ~0.4 s spread over 32). The
-    repartition moves only the tiny raw doc rows once, and is skipped when
+    repartition moves only the narrow input rows once, and is skipped when
     the input is already at least that parallel (a real multi-file corpus
-    scan at cluster scale)."""
-    target = docs.sparkSession.sparkContext.defaultParallelism
+    scan at cluster scale).
+
+    The partition count comes from the plan, so deciding runs no job. A
+    plan with a shuffle is adaptive and states the count of its initial
+    physical plan (asking its RDD would run the shuffle's stages during the
+    build); one without takes its RDD's file splits, which needs no job; a
+    plan that states no count is fanned out."""
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
-        current = docs.rdd.getNumPartitions()
+        qe = df._jdf.queryExecution()
+        plan = qe.executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            current = plan.executedPlan().outputPartitioning().numPartitions()
+        else:
+            current = qe.toRdd().getNumPartitions()
     except Exception:  # noqa: BLE001 - conservatively skip on exotic plans
-        return docs
+        return df
     if current >= target:
-        return docs
-    return docs.repartition(target)
+        return df
+    return df.repartition(target)
 
 
 def _normalized_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -110,7 +121,7 @@ def token_jaccard_pairs(
     construction — so the prune is a broadcast anti-join with no extra
     shuffle on the corpus side.
     """
-    toks = _normalized_tokens(_fan_out(docs), id_col, text_col).distinct()
+    toks = _normalized_tokens(fan_out(docs), id_col, text_col).distinct()
     if max_df is not None:
         heavy = (
             toks.groupBy("token")
@@ -335,7 +346,7 @@ def shingles(
     index (no common-subexpression elimination through generator lambdas) —
     measured 10x slower (4.7 s vs 0.45 s for 260k shingles at sf0.1)."""
     squeezed = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    tokd = _fan_out(docs).select(
+    tokd = fan_out(docs).select(
         F.col(id_col).alias("doc_id"), F.split(squeezed, " ").alias("toks")
     )
     # guard: a doc shorter than n words has NO shingles (sequence(0, -1)
@@ -561,7 +572,7 @@ def simhash(
     columns generate one whole-stage-codegen function whose compile
     dominates a cold run (measured ~6 s compile vs 0.6 s execution at
     sf1.0)."""
-    toks = _normalized_tokens(_fan_out(docs), id_col, text_col).distinct()
+    toks = _normalized_tokens(fan_out(docs), id_col, text_col).distinct()
     hashed = _token_hash_halves(toks)
     # set-bit COUNTS instead of ±1 sign-sums: sum(±1) > 0 <=> 2*count > n
     # exactly (integer identity), and the per-row aggregate update loses the

@@ -4,10 +4,11 @@ analysis/results_analyzer.py:14-87 and icpd_solver.py:41-50).
 Confusion counts over an index window [lo, hi) need no per-index scan: with
 P = predicted set ∩ window, A = actual set ∩ window,
   TP = |P ∩ A|, FP = |P \\ A|, FN = |A \\ P|, TN = (hi - lo) - TP - FN —
-pure set arithmetic from two small aggregations + one join. Note the TN
-formula mirrors a reference quirk (results_analyzer.py:33-41): its ``tn += 1``
-falls through after ``fp += 1`` (no else), so false positives also count as
-true negatives; goldens in tests/test_solver.py:49 encode that behavior.
+pure set arithmetic over one tagged union of the two sets and two
+aggregations, with no join. Note the TN formula mirrors a reference quirk
+(results_analyzer.py:33-41): its ``tn += 1`` falls through after ``fp += 1``
+(no else), so false positives also count as true negatives; goldens in
+tests/test_solver.py:49 encode that behavior.
 """
 
 from __future__ import annotations
@@ -25,49 +26,43 @@ def confusion_matrix(
     predicted/actual: (series_id, change_point). window=None uses the
     reference default: [min, max] over the union, per series.
     Returns (series_id, tp, tn, fp, fn, accuracy, precision, recall).
+
+    One row per distinct (series_id, change_point) of the union carries
+    ``in_p`` / ``in_a`` membership flags; a per-series aggregate counts them
+    inside the window. No join, so no plan depends on which input adaptive
+    execution sees finish first.
     """
-    p = predicted.select("series_id", "change_point").distinct()
-    a = actual.select("series_id", "change_point").distinct()
-
-    if window is None:
-        union = p.unionByName(a)
-        bounds = union.groupBy("series_id").agg(
-            F.min("change_point").alias("lo"), F.max("change_point").alias("hi")
-        )
-    else:
-        lo, hi = window
-        bounds = (
-            p.select("series_id")
-            .union(a.select("series_id"))
-            .distinct()
-            .select("series_id", F.lit(lo).alias("lo"), F.lit(hi).alias("hi"))
-        )
-
-    def _in_window(df: DataFrame) -> DataFrame:
-        return df.join(bounds, "series_id").filter(
-            (F.col("change_point") >= F.col("lo")) & (F.col("change_point") < F.col("hi"))
-        ).select("series_id", "change_point")
-
-    pw, aw = _in_window(p), _in_window(a)
-    tp = (
-        pw.join(aw, ["series_id", "change_point"])
-        .groupBy("series_id")
-        .agg(F.count(F.lit(1)).alias("tp"))
+    cp = "change_point"
+    points = (
+        predicted.select("series_id", cp, F.lit(1).alias("in_p"), F.lit(0).alias("in_a"))
+        .unionByName(actual.select("series_id", cp, F.lit(0).alias("in_p"), F.lit(1).alias("in_a")))
+        .groupBy("series_id", cp)
+        .agg(F.max("in_p").alias("in_p"), F.max("in_a").alias("in_a"))
     )
-    np_ = pw.groupBy("series_id").agg(F.count(F.lit(1)).alias("n_pred"))
-    na = aw.groupBy("series_id").agg(F.count(F.lit(1)).alias("n_act"))
+    if window is None:
+        lo, hi = F.min(cp), F.max(cp)
 
-    out = (
-        bounds.join(np_, "series_id", "left")
-        .join(na, "series_id", "left")
-        .join(tp, "series_id", "left")
-        .fillna(0, subset=["n_pred", "n_act", "tp"])
-        .withColumn("fp", F.col("n_pred") - F.col("tp"))
-        .withColumn("fn", F.col("n_act") - F.col("tp"))
-        .withColumn(
-            "tn",
-            (F.col("hi") - F.col("lo")) - F.col("n_act"),
-        )
+        def in_window(flag):  # [min, max): every point but the last
+            return F.sum(flag) - F.max_by(flag, cp)
+    else:
+        lo, hi = F.lit(window[0]), F.lit(window[1])
+        inside = (F.col(cp) >= window[0]) & (F.col(cp) < window[1])
+
+        def in_window(flag):
+            return F.sum(F.when(inside, flag).otherwise(0))
+
+    counts = points.groupBy("series_id").agg(
+        (hi - lo).alias("width"),
+        in_window(F.col("in_p")).alias("n_pred"),
+        in_window(F.col("in_a")).alias("n_act"),
+        in_window(F.col("in_p") * F.col("in_a")).alias("tp"),
+    )
+    out = counts.select(
+        "series_id",
+        "tp",
+        (F.col("width") - F.col("n_act")).alias("tn"),
+        (F.col("n_pred") - F.col("tp")).alias("fp"),
+        (F.col("n_act") - F.col("tp")).alias("fn"),
     )
     total = F.col("tp") + F.col("tn") + F.col("fp") + F.col("fn")
     return out.select(

@@ -41,14 +41,57 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
-def main() -> int:
-    only = set(sys.argv[1:])
-    spark = get_spark()
+def connect() -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per parquet table of ``SF_DIR``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
+    return con
+
+
+def compare(spark_raw: pd.DataFrame, duck_raw: pd.DataFrame) -> list[str]:
+    """What differs between a Spark result and its DuckDB oracle's, as
+    printable lines; empty when they agree."""
+    problems = []
+    # strictness guard: the normalizer below coerces ints to int64 and
+    # masks int-vs-float dtype drift that an exact value hash does NOT
+    # forgive (a DuckDB HUGEINT sum arrives as float)
+    for c in set(spark_raw.columns) & set(duck_raw.columns):
+        ks, kd = spark_raw[c].dtype.kind, duck_raw[c].dtype.kind
+        if {ks, kd} == {"i", "f"} or {ks, kd} == {"u", "f"}:
+            problems.append(f"DTYPE DRIFT col {c}: spark {spark_raw[c].dtype} vs duck {duck_raw[c].dtype}")
+    spark_df = normalize(spark_raw)
+    duck_df = normalize(duck_raw)
+    if list(spark_df.columns) != list(duck_df.columns):
+        problems.append(f"COLUMN MISMATCH {list(spark_df.columns)} vs {list(duck_df.columns)}")
+    elif len(spark_df) != len(duck_df):
+        problems.append(f"ROWCOUNT {len(spark_df)} vs {len(duck_df)}")
+    elif not spark_df.equals(duck_df):
+        neq = (spark_df != duck_df) & ~(spark_df.isna() & duck_df.isna())
+        bad = neq.any(axis=1)
+        # allow tiny float wiggle
+        really_bad = []
+        for idx in spark_df.index[bad][:50]:
+            for c in spark_df.columns:
+                a, d = spark_df.at[idx, c], duck_df.at[idx, c]
+                if a != d and not (
+                    isinstance(a, float)
+                    and isinstance(d, float)
+                    and (math.isnan(a) and math.isnan(d) or abs(a - d) < 1e-9)
+                ):
+                    really_bad.append(f"    row {idx} col {c}: spark={a!r} duck={d!r}")
+        if really_bad:
+            problems += really_bad[:3]
+            problems.append(f"VALUE MISMATCH in {int(bad.sum())} rows")
+    return problems
+
+
+def main() -> int:
+    only = set(sys.argv[1:])
+    spark = get_spark()
+    con = connect()
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
@@ -71,48 +114,13 @@ def main() -> int:
             print(f"[oracle] {name}: EXEC FAILED {type(e).__name__}: {str(e)[:300]}")
             failures.append(name)
             continue
-        ok = True
-        # driver-strictness guard: the normalizer below coerces ints to int64
-        # and masks int-vs-float dtype drift that the driver's value hash does
-        # NOT forgive (round-1 q1/sessionize trap: DuckDB HUGEINT → float)
-        for c in set(spark_raw.columns) & set(duck_raw.columns):
-            ks, kd = spark_raw[c].dtype.kind, duck_raw[c].dtype.kind
-            if {ks, kd} == {"i", "f"} or {ks, kd} == {"u", "f"}:
-                print(f"[oracle] {name}: DTYPE DRIFT col {c}: spark {spark_raw[c].dtype} vs duck {duck_raw[c].dtype}")
-                ok = False
-        spark_df = normalize(spark_raw)
-        duck_df = normalize(duck_raw)
-        if list(spark_df.columns) != list(duck_df.columns):
-            print(f"[oracle] {name}: COLUMN MISMATCH {list(spark_df.columns)} vs {list(duck_df.columns)}")
-            ok = False
-        elif len(spark_df) != len(duck_df):
-            print(f"[oracle] {name}: ROWCOUNT {len(spark_df)} vs {len(duck_df)}")
-            ok = False
-        else:
-            if not spark_df.equals(duck_df):
-                neq = (spark_df != duck_df) & ~(spark_df.isna() & duck_df.isna())
-                bad = neq.any(axis=1)
-                nbad = int(bad.sum())
-                # allow tiny float wiggle
-                really_bad = 0
-                for idx in spark_df.index[bad][:50]:
-                    for c in spark_df.columns:
-                        a, d = spark_df.at[idx, c], duck_df.at[idx, c]
-                        if a != d and not (
-                            isinstance(a, float)
-                            and isinstance(d, float)
-                            and (math.isnan(a) and math.isnan(d) or abs(a - d) < 1e-9)
-                        ):
-                            really_bad += 1
-                            if really_bad <= 3:
-                                print(f"    row {idx} col {c}: spark={a!r} duck={d!r}")
-                if really_bad:
-                    print(f"[oracle] {name}: VALUE MISMATCH in {nbad} rows")
-                    ok = False
-        if ok:
-            print(f"[oracle] {name}: OK ({len(spark_df)} rows)")
-        else:
+        problems = compare(spark_raw, duck_raw)
+        for line in problems:
+            print(line if line.startswith(" ") else f"[oracle] {name}: {line}")
+        if problems:
             failures.append(name)
+        else:
+            print(f"[oracle] {name}: OK ({len(spark_raw)} rows)")
     print("\nFAILURES:", failures if failures else "none")
     return 1 if failures else 0
 

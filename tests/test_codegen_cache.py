@@ -45,7 +45,6 @@ def test_warm_query_mix_compiles_nothing(second_pass_compiles):
 RUN_VARIANT = {
     # adaptive execution picks a join's strategy or build side when the first
     # of its inputs finishes, and which input that is varies from run to run
-    "cpd_confusion": "broadcast or sort-merge join of a window-bounds join",
     "dedup_clusters": "broadcast or sort-merge join in a label-propagation round",
     "theta_user_overlap": "build side of the click/view sketch join",
 }

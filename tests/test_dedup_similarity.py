@@ -1,5 +1,7 @@
 """Dedup + similarity-search operators on small synthetic corpora."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -324,6 +326,41 @@ def test_simhash_build_runs_two_jobs(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     assert len(sc.statusTracker().getJobIdsForGroup("simhash_build")) == 2
     assert pairs.count() == 1259
+
+
+def test_fan_out_decides_from_the_plan(spark, tmp_path):
+    """fan_out reads the input's partition count from its plan, so building
+    shingles runs no job, also when the input holds a shuffle (asking that
+    input's RDD for its partitions ran the shuffle as a job). A one-file
+    scan is still fanned out to the session's parallelism, a 2-way shuffle
+    too, and an 8-way one is left alone."""
+    sc = spark.sparkContext
+    target = sc.defaultParallelism
+    path = str(tmp_path / "docs")
+    rows = [(i, f"doc {i} reads alpha bravo charlie delta") for i in range(40)]
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+
+    def build(group, source):
+        sc.setJobGroup(group, group)
+        try:
+            df = shingles(source)
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def plan(df):
+        # expression ids and lambda variable names differ between builds
+        return re.sub(r"#\d+L?|_\d+\b", "", df._jdf.queryExecution().optimizedPlan().toString())
+
+    scan, scan_jobs = build("fan_out_scan", docs)
+    shuffled, shuffled_jobs = build("fan_out_shuffled", docs.repartition(2, "doc_id"))
+    wide, _ = build("fan_out_wide", docs.repartition(8, "doc_id"))
+    assert (scan_jobs, shuffled_jobs) == (0, 0)
+    assert plan(scan) == plan(shingles(docs.repartition(target)))
+    assert plan(shuffled) == plan(shingles(docs.repartition(2, "doc_id").repartition(target)))
+    assert plan(wide).count("Repartition") == 1
 
 
 def test_ngram_contamination_plan_has_no_expand(spark):
